@@ -11,17 +11,29 @@ Scale design (100 TB documents, KB-size dictionary):
   never mutated → the per-row span-sequence invariant is preserved by
   construction (mentions are a *separate* table keyed by doc_id).
 - Candidate generation is pure JVM and lambda-free (posexplode →
-  explode(sequence) → top-level slice/array_join, one whole-stage
-  codegen span) — no Python and no interpreted higher-order
-  functions in the hot path (the HOF form anti-scales; see
-  candidate_ngrams docstring).
-- The dictionary join is an explicit `F.broadcast` hash join: zero
-  shuffle on the document side regardless of input size. Probing on
-  xxhash64 over the window columns instead of the concat'd n-gram
-  string (alias side pre-hashed, exact string verify post-join) was
-  measured and REJECTED (tools/diag_match_hash.py, 4M docs: CPU within
-  noise at both local[8] and local[32]) — candidate construction, not
-  the probe key, is where the stage's cycles go.
+  explode(sequence) → top-level concat_ws, one whole-stage codegen
+  span) — no Python and no interpreted higher-order functions in the
+  hot path (the HOF form anti-scales; see detect_mentions).
+- The dictionary join is an explicit `F.broadcast` hash join on the
+  concat'd n-gram string: zero shuffle on the document side regardless
+  of input size.
+- Probing on xxhash64 over the window columns instead (alias side
+  pre-hashed, token-wise verify on hash hits) was measured and
+  removed. Measured on a 4-core / 15 GB box, detect_mentions
+  (distinct=False) into a noop sink, 12 interleaved rounds per variant
+  after warm-up, identical outputs (median s, IQR in parentheses):
+
+    input                           hash probe        string probe
+    fixture dict (132 aliases),     0.607             0.519
+      8k docs                       (0.562-0.706)     (0.468-0.612)
+    fixture dict, 100k docs         1.797             1.852
+                                    (1.688-1.899)     (1.672-1.970)
+    CL-scale OBO (13,839 aliases),  2.100             0.832
+      20k docs, 10% mentioned       (2.060-2.416)     (0.778-0.988)
+
+  The string probe is at parity or faster everywhere and 2.5x faster
+  on the low-hit-rate CL dictionary: the extra xxhash64 arms and the
+  token-wise verify cost more than the strings they save.
 - The only shuffle in this stage is the optional per-term aggregate,
   which uses two-level salting because hub terms (the root 'cell'
   alias) receive a large share of all mentions (SURVEY §2.3 skew note).
@@ -57,73 +69,11 @@ def text_spans(documents: DataFrame) -> DataFrame:
     )
 
 
-def candidate_ngrams(spans: DataFrame, max_n: int = MAX_ALIAS_TOKENS) -> DataFrame:
-    """All 1..max_n token n-grams of each text span, normalized with
-    the mention tokenizer (punctuation folded). Output
-    (doc_id, span_idx, offset, ngram).
-
-    Shape note (measured, tools/diag_ngram_variants.py): nested
-    higher-order functions evaluate INTERPRETED per element and
-    anti-scale on a shared heap, and retaining the whole `tokens`
-    array through an explode makes Tungsten Generate copy O(span_len)
-    bytes into EVERY output row — quadratic in span length. This uses
-    the same O(max_n)-carry shape as detect_mentions: posexplode over
-    arrays_zip of shifted slices ships each position's next max_n-1
-    tokens alongside it, and the n-gram is a top-level concat_ws —
-    one WholeStageCodegen span, no lambda, no quadratic copy."""
-    toks = spans.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        _mention_tokens("text").alias("tokens"),
-    )
-    zip_expr = "arrays_zip(tokens" + "".join(
-        f", slice(tokens, {k + 1}, size(tokens))" for k in range(1, max_n)
-    ) + ")"
-    window_cols = [f"t{k}" for k in range(max_n)]
-    tokpos = toks.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        F.size("tokens").alias("n_toks"),
-        F.posexplode(F.expr(zip_expr)).alias("pos", "w"),
-    ).select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        "n_toks",
-        "pos",
-        F.col("w")["tokens"].alias("t0"),
-        *[F.col("w")[str(k)].alias(f"t{k}") for k in range(1, max_n)],
-    )
-    ngram_case = "CASE n " + " ".join(
-        f"WHEN {k} THEN "
-        + ("t0" if k == 1 else f"concat_ws(' ', {', '.join(window_cols[:k])})")
-        for k in range(1, max_n + 1)
-    ) + " END"
-    return tokpos.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        *window_cols,
-        F.explode(
-            F.expr(f"sequence(1, least({max_n}, n_toks - pos))")
-        ).alias("n"),
-    ).select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        F.expr(ngram_case).alias("ngram"),
-    )
-
-
 def detect_mentions(
     documents: DataFrame,
     alias_dict: DataFrame,  # (alias_norm, term_id) — small, broadcast
     max_n: int | None = None,
     distinct: bool = True,
-    gate: str = "auto",  # "auto" | "case" | "join"
-    probe: str = "hash",  # "hash" | "string"
     dict_collect_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Dictionary mention detection. Returns
@@ -137,44 +87,35 @@ def detect_mentions(
          an alias build n-grams — this prunes the candidate space by
          the fraction of corpus tokens that can start an alias (the
          dominant cost at scale is candidate construction, so the
-         gate is worth ~an order of magnitude on real text). Two
-         equivalent implementations, chosen by `gate`:
-           "case" — a driver-built CASE/IN literal over the distinct
-             first tokens (Catalyst compiles IN lists to hash-set
-             InSet probes; zero extra operators). Best for ontology
-             dictionaries (10³-10⁴ first tokens).
-           "join" — posexplode tokens, broadcast-join a (first_token,
+         gate is worth ~an order of magnitude on real text). The
+         dictionary picks one of two equivalent implementations:
+           CASE/IN — a driver-built literal over the distinct first
+             tokens (Catalyst compiles IN lists to hash-set InSet
+             probes; zero extra operators), up to
+             MAX_CASE_GATE_TOKENS first tokens. Best for ontology
+             dictionaries (10³-10⁴ first tokens); the join gate
+             measured 18-38% slower on the fixture dictionary.
+           join — posexplode tokens, broadcast-join a (first_token,
              lengths) table. No driver-side literal, so it scales to
              arbitrarily large dictionaries (10⁵+ aliases, e.g.
              EFO+DOID+CL+UBERON merged); costs one explode.
-           "auto" — "case" below MAX_CASE_GATE_TOKENS, else "join".
       2. candidates at surviving positions, built only for the EXACT
          lengths of aliases starting with that token (not 1..max),
-         probed against the alias dictionary. `probe` picks the key:
-           "hash" (default) — xxhash64 directly over the window's
-             token columns (one CASE arm per candidate length), joined
-             against the identically-hashed alias side, with an exact
-             string verify ONLY on hash hits. Gated-but-non-matching
-             positions (the majority on real text) never allocate an
-             n-gram string at all — this cuts the stage's dominant
-             allocator (candidate UTF8String construction, measured
-             via the (8,32) scaling probes) without changing results:
-             the post-join verify makes hash collisions harmless.
-           "string" — concat_ws the n-gram per candidate and join on
-             it (the reference formulation; kept for A/B measurement
-             and as the oracle-shaped plan).
+         concat_ws'd into the n-gram and joined on it against the
+         alias dictionary (see the module docstring for why the
+         n-gram string, not a hash of the window, is the probe key).
 
     For dictionaries larger than `dict_collect_threshold` rows, no
     COLLECT touches the driver: max_n and the first-token gate table
-    are computed with small Spark aggregations (gate is forced to
-    "join"; "case" would need driver-side literals), and the
-    dictionary-side joins drop the broadcast hint — a broadcast would
-    itself collect the dictionary to the driver and ship it to every
-    executor (driver memory + the 8 GB broadcast limit), so past the
-    threshold the probe joins are left to AQE, which broadcasts iff
-    the built side is actually small and otherwise runs a shuffled
-    hash join. Below the threshold the dictionary is collected once —
-    dict-sized data, and the CASE/IN gate needs the literals anyway.
+    are computed with small Spark aggregations (always the join gate;
+    CASE/IN would need driver-side literals), and the dictionary-side
+    joins drop the broadcast hint — a broadcast would itself collect
+    the dictionary to the driver and ship it to every executor (driver
+    memory + the 8 GB broadcast limit), so past the threshold the
+    probe joins are left to AQE, which broadcasts iff the built side
+    is actually small and otherwise runs a shuffled hash join. Below
+    the threshold the dictionary is collected once — dict-sized data,
+    and the CASE/IN gate needs the literals anyway.
     """
     spark = documents.sparkSession
     # empty-dictionary returns must carry the SAME schema the populated
@@ -186,21 +127,21 @@ def detect_mentions(
         "span_idx int, offset int, alias_norm string, "
         f"term_id {alias_dict.schema['term_id'].dataType.simpleString()}"
     )
-    if probe not in ("hash", "string"):
-        raise ValueError(f"unknown probe {probe!r}")
     n_aliases = alias_dict.count()
     if n_aliases == 0:
         return spark.createDataFrame([], empty_schema)
+    # dictionary-side join strategy: explicit broadcast only while the
+    # dictionary is known driver/executor-memory safe; past the
+    # threshold AQE picks (shuffled hash join unless it measures the
+    # built side small)
+    collect = n_aliases <= dict_collect_threshold
+
+    def _dict_side(d):
+        return F.broadcast(d) if collect else d
+
     ft_lengths: dict[str, set[int]] = {}
-    gate_df = None
-    if n_aliases > dict_collect_threshold:
-        if gate == "case":
-            raise ValueError(
-                f"gate='case' needs driver-side literals; dictionary has "
-                f"{n_aliases} rows (> {dict_collect_threshold}) — use "
-                "gate='join' or 'auto'"
-            )
-        gate = "join"
+    gate_df = None  # None → CASE/IN gate over ft_lengths
+    if not collect:
         parts = alias_dict.select(F.split("alias_norm", " ").alias("p"))
         if max_n is None:
             max_n = parts.agg(F.max(F.size("p"))).first()[0]
@@ -229,19 +170,11 @@ def detect_mentions(
                 ft_lengths.setdefault(parts_[0], set()).add(len(parts_))
         if not ft_lengths:
             return spark.createDataFrame([], empty_schema)
-        if gate == "auto":
-            gate = "case" if len(ft_lengths) <= MAX_CASE_GATE_TOKENS else "join"
-
-    # dictionary-side join strategy: explicit broadcast only while the
-    # dictionary is known driver/executor-memory safe; past the
-    # threshold AQE picks (shuffled hash join unless it measures the
-    # built side small)
-    if n_aliases > dict_collect_threshold:
-        def _dict_side(d):
-            return d
-    else:
-        def _dict_side(d):
-            return F.broadcast(d)
+        if len(ft_lengths) > MAX_CASE_GATE_TOKENS:
+            gate_df = spark.createDataFrame(
+                sorted((t, sorted(ls)) for t, ls in ft_lengths.items()),
+                "tok string, ns array<int>",
+            )
 
     toks = text_spans(documents).select(
         "doc_id",
@@ -293,7 +226,7 @@ def detect_mentions(
         + ("tok" if k == 1 else f"concat_ws(' ', {', '.join(window_cols[:k])})")
         for k in range(1, max_n + 1)
     ) + " END"
-    if gate == "case":
+    if gate_df is None:
         # group first tokens by identical length set: a handful of
         # distinct sets (e.g. {1}, {2,3}, {3,4}) → a short CASE whose
         # IN lists Catalyst compiles to hash-set InSet probes
@@ -313,18 +246,9 @@ def detect_mentions(
         gated = tokpos.withColumn("ns", F.expr(n_cand)).where(
             F.col("ns").isNotNull()
         )
-    elif gate == "join":
-        if gate_df is None:
-            gate_df = spark.createDataFrame(
-                sorted(
-                    (t, sorted(ls)) for t, ls in ft_lengths.items()
-                ),
-                "tok string, ns array<int>",
-            )
+    else:
         # inner broadcast join IS the gate: non-starting positions drop
         gated = tokpos.join(_dict_side(gate_df), "tok")
-    else:
-        raise ValueError(f"unknown gate {gate!r}")
     # explode the small exact-length array, then a TOP-LEVEL bound
     # check — no higher-order function, stays in whole-stage codegen.
     # The bound check also guarantees every token the selected CASE
@@ -338,68 +262,16 @@ def detect_mentions(
         *window_cols,
         F.explode("ns").alias("n"),
     ).where(F.expr("n <= n_toks - pos"))
-    if probe == "hash":
-        # hash the window columns directly — per-arity CASE arms keep
-        # the call codegen'd; no candidate string is ever allocated
-        # for positions that miss the dictionary
-        hash_case = "CASE n " + " ".join(
-            f"WHEN {k} THEN xxhash64({', '.join(window_cols[:k])})"
-            for k in range(1, max_n + 1)
-        ) + " END"
-        alias_h = (
-            alias_dict.select(
-                "alias_norm", "term_id", F.split("alias_norm", " ").alias("p")
-            )
-            .withColumn("al", F.size("p"))
-            .filter(F.col("al") <= max_n)
-            .withColumn(
-                "hh",
-                F.expr(
-                    "CASE al " + " ".join(
-                        f"WHEN {k} THEN xxhash64("
-                        + ", ".join(f"p[{i}]" for i in range(k))
-                        + ")"
-                        for k in range(1, max_n + 1)
-                    ) + " END"
-                ),
-            )
-            .select(
-                "hh",
-                "alias_norm",
-                "term_id",
-                "al",
-                # pre-split alias tokens as top-level columns: the
-                # post-join verify compares window tokens against them
-                # directly (UTF8String byte equality) — no n-gram
-                # string is built even for HITS, so the candidate path
-                # allocates nothing per row
-                # F.get (not the [] subscript): null-safe past the
-                # alias's length under ANSI mode
-                *[F.get("p", k).alias(f"a{k}") for k in range(max_n)],
-            )
-        )
-        verify = "n = al AND tok = a0 AND " + " AND ".join(
-            f"(n <= {k} OR t{k} = a{k})" for k in range(1, max_n)
-        ) if max_n > 1 else "n = al AND tok = a0"
-        out = (
-            cands.withColumn("hh", F.expr(hash_case))
-            .join(_dict_side(alias_h), "hh")
-            # exact token-wise verify on hash hits only — collisions
-            # are harmless, and no concat is ever materialized
-            .where(F.expr(verify))
-            .select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
-        )
-    else:
-        strung = cands.select(
-            "doc_id",
-            "span_idx",
-            "offset",
-            F.expr(ngram_case).alias("ngram"),
-        )
-        out = strung.join(
-            _dict_side(alias_dict),
-            strung.ngram == alias_dict.alias_norm,
-        ).select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
+    strung = cands.select(
+        "doc_id",
+        "span_idx",
+        "offset",
+        F.expr(ngram_case).alias("ngram"),
+    )
+    out = strung.join(
+        _dict_side(alias_dict),
+        strung.ngram == alias_dict.alias_norm,
+    ).select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
     if not distinct:
         # streaming callers and the KG pipeline skip the dedup — a
         # stateful dropDuplicates on an unbounded stream needs a

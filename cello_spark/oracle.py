@@ -29,24 +29,17 @@ def descendants(edges: list[tuple[str, str]], node: str) -> set[str]:
     """BFS over parent->child direction. Reference: graph.py:85-92
     (`descendent_nodes` walks source_to_targets where source=parent).
     `edges` here are (child, parent) pairs; we invert."""
-    children: dict[str, set[str]] = {}
-    for c, p in edges:
-        children.setdefault(p, set()).add(c)
-    out: set[str] = set()
-    frontier = set(children.get(node, ()))
-    while frontier:
-        out |= frontier
-        frontier = {
-            g for f in frontier for g in children.get(f, ())
-        } - out
-    return out
+    return _bfs(_parent_map([(p, c) for c, p in edges]), node)
 
 
-def ancestors(edges: list[tuple[str, str]], node: str) -> set[str]:
-    """BFS over child->parent. Reference: graph.py:95-102."""
+def _parent_map(edges: list[tuple[str, str]]) -> dict[str, set[str]]:
     parents: dict[str, set[str]] = {}
     for c, p in edges:
         parents.setdefault(c, set()).add(p)
+    return parents
+
+
+def _bfs(parents: dict[str, set[str]], node: str) -> set[str]:
     out: set[str] = set()
     frontier = set(parents.get(node, ()))
     while frontier:
@@ -55,10 +48,18 @@ def ancestors(edges: list[tuple[str, str]], node: str) -> set[str]:
     return out
 
 
+def ancestors(edges: list[tuple[str, str]], node: str) -> set[str]:
+    """BFS over child->parent. Reference: graph.py:95-102."""
+    return _bfs(_parent_map(edges), node)
+
+
 def closure_pairs(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
-    """All (descendant, ancestor) pairs, no self-pairs."""
+    """All (descendant, ancestor) pairs, no self-pairs. The
+    child->parent map is built once, not once per node as a loop over
+    `ancestors` would."""
+    parents = _parent_map(edges)
     nodes = {n for e in edges for n in e}
-    return {(n, a) for n in nodes for a in ancestors(edges, n)}
+    return {(n, a) for n in nodes for a in _bfs(parents, n)}
 
 
 def most_specific_nodes(edges: list[tuple[str, str]], nodes: set[str]) -> set[str]:

@@ -50,11 +50,7 @@ TERM_PREFIX = "CS:"
 # instead of pre-gating the wide features through a shuffle — see
 # stage_linked. Measured breakeven is high: the exchange the dense
 # plan saves is cheap relative to the extra scoring below ~0.9.
-# CELLO_GATE_SELECTIVITY overrides (2.0 forces the sparse plan, 0.0
-# forces dense) — a prod knob and the A/B lever for plan benchmarks.
-import os as _os
-
-GATE_SELECTIVITY = float(_os.environ.get("CELLO_GATE_SELECTIVITY", "0.9"))
+GATE_SELECTIVITY = 0.9
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +309,7 @@ def build_kg_pipeline(
     #
     # The density probe samples a few thousand documents at build time
     # (same stats role as a CBO's ANALYZE sample; limit() keeps it one
-    # sub-second job). A forced threshold (<=0 dense, >1 sparse — the
-    # CELLO_GATE_SELECTIVITY env contract) skips the probe entirely.
+    # sub-second job).
     #
     # No dropDuplicates on the mention side in either plan — the
     # left_semi hash build dedups natively, and the explicit dedup
@@ -328,17 +323,12 @@ def build_kg_pipeline(
     # (32.6 vs 15.6 at local[8]) despite lower aggregate JVM CPU.
     # Broadcast gates only pay when the mentioned set is dict-sized
     # (the streaming micro-batch path, where it IS used).
-    if GATE_SELECTIVITY <= 0.0:
-        dense = True
-    elif GATE_SELECTIVITY > 1.0:
-        dense = False
-    else:
-        dense = (
-            estimate_mention_density(
-                documents, spark.createDataFrame(prep["alias_dict"])
-            )
-            >= GATE_SELECTIVITY
+    dense = (
+        estimate_mention_density(
+            documents, spark.createDataFrame(prep["alias_dict"])
         )
+        >= GATE_SELECTIVITY
+    )
 
     def stage_linked(ctx: dict) -> DataFrame:
         # triple emission consumes only the selected labels; the
@@ -408,9 +398,6 @@ def build_kg_pipeline(
             raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
         )
 
-    # CELLO_STAGE_OVERLAP=0 forces sequential stage execution (deps =
-    # all earlier stages) with identical stage bodies — the A/B lever
-    # for the overlap-vs-contention tradeoff on a shared-memory box
     def stage_media_triples(ctx: dict) -> DataFrame:
         from cello_spark.operators.multimodal import media_triples as _mt
 
@@ -420,36 +407,23 @@ def build_kg_pipeline(
             raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
         )
 
-    overlap = _os.environ.get("CELLO_STAGE_OVERLAP", "1") != "0"
-    if overlap:
-        triples_deps = ["onto_triples", "linked", "canonical_map"] + (
-            ["mentions"] if dense else []
-        )
-        deps = {
-            "ontology": [],
-            "closure": [],
-            "onto_triples": [],
-            "mentions": [],
-            "linked": [] if dense else ["mentions"],
-            "canonical_map": [],
-            "triples": triples_deps,
-            "media_triples": ["canonical_map"],
-        }
-    else:
-        deps = {}
+    # stages declare their inputs and run concurrently once those
+    # commit (DAG overlap: in the dense plan mentions and linked share
+    # no input, so each backfills the other's ramp/tail idle)
+    triples_deps = ["onto_triples", "linked", "canonical_map"] + (
+        ["mentions"] if dense else []
+    )
     (
-        pipe.add_stage("ontology", stage_ontology, tiny=True, deps=deps.get("ontology"))
-        .add_stage("closure", stage_closure, tiny=True, deps=deps.get("closure"))
-        .add_stage("onto_triples", stage_onto_triples, tiny=True, deps=deps.get("onto_triples"))
-        .add_stage("mentions", stage_mentions, deps=deps.get("mentions"))
-        .add_stage("linked", stage_linked, deps=deps.get("linked"))
-        .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=deps.get("canonical_map"))
-        .add_stage("triples", stage_triples, deps=deps.get("triples"))
+        pipe.add_stage("ontology", stage_ontology, tiny=True, deps=[])
+        .add_stage("closure", stage_closure, tiny=True, deps=[])
+        .add_stage("onto_triples", stage_onto_triples, tiny=True, deps=[])
+        .add_stage("mentions", stage_mentions, deps=[])
+        .add_stage("linked", stage_linked, deps=[] if dense else ["mentions"])
+        .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=[])
+        .add_stage("triples", stage_triples, deps=triples_deps)
     )
     if include_media_triples:
-        pipe.add_stage(
-            "media_triples", stage_media_triples, deps=deps.get("media_triples")
-        )
+        pipe.add_stage("media_triples", stage_media_triples, deps=["canonical_map"])
     return pipe
 
 
@@ -461,8 +435,7 @@ def estimate_mention_density(
     (a CBO would read the same number from ANALYZE statistics).
     limit() is the cheapest sample (first partitions only); its bias is
     acceptable for a one-bit plan decision with a conservative 0.9
-    threshold, and corpora skewed enough to defeat it can force a plan
-    via CELLO_GATE_SELECTIVITY."""
+    threshold."""
     sample = documents.select("doc_id", "spans").limit(sample_docs)
     n = sample.count()
     if n == 0:

@@ -49,6 +49,27 @@ _BLAS_ENV = {
 }
 
 
+def _mem_total_kb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1])
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def default_driver_mem(mem_total_kb: int | None = None) -> str:
+    """Default driver heap: half of physical memory (MemTotal) in whole
+    GiB, at least 1g and at most 24g. The heap is committed and
+    pre-touched at JVM start (-Xms=-Xmx + AlwaysPreTouch, see
+    get_spark), so it must fit beside the Python workers and the page
+    cache; 24g covers every workload in this repo (broadcast dims are
+    dict-sized; stage data streams through executors) and keeps the
+    pre-touch startup tax bounded on large boxes."""
+    if mem_total_kb is None:
+        mem_total_kb = _mem_total_kb()
+    return f"{min(24, max(1, mem_total_kb // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "cello_spark",
     cores: int | None = None,
@@ -57,7 +78,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores, the
+    driver heap to $SPARK_DRIVER_MEM or `default_driver_mem()`. On a
     real cluster the master/executor settings come from spark-submit
     and the ``local[...]`` master here is simply not used.
     """
@@ -73,10 +95,7 @@ def get_spark(
     for k, v in _BLAS_ENV.items():
         os.environ.setdefault(k, v)
 
-    # 24g covers every workload in this repo (broadcast dims are
-    # dict-sized; stage data streams through executors); a smaller
-    # fixed heap keeps the AlwaysPreTouch startup tax low.
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -24,6 +24,8 @@ are never mutated — mentions are an additive side table keyed by
 
 from __future__ import annotations
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -47,27 +49,36 @@ def _dir_has_data_files(spark: SparkSession, path: str) -> bool:
     schema-less too, and counting them would turn the graceful
     DOCUMENT_SCHEMA bootstrap into a setup crash. Hadoop FileSystem
     API, so the same check works on local/HDFS/object-store paths;
-    bounded by returning at the FIRST qualifying file."""
+    bounded by returning at the FIRST qualifying file. A missing dir
+    (or one removed while it is listed) has no data: no exists()
+    pre-check, which would race with that removal."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    root = fs.getFileStatus(jpath).getPath().toString().rstrip("/")
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        f = it.next()
-        if f.getLen() == 0:
-            continue
-        rel = f.getPath().toString()[len(root) :].lstrip("/")
-        segs = rel.split("/")
-        name_ok = not segs[-1].startswith(("_", "."))
-        dirs_ok = all(
-            "=" in seg and not seg.startswith(("_", "."))
-            for seg in segs[:-1]
-        )
-        if name_ok and dirs_ok:
-            return True
+    try:
+        root = fs.getFileStatus(jpath).getPath().toString().rstrip("/")
+        it = fs.listFiles(jpath, True)
+        while it.hasNext():
+            f = it.next()
+            if f.getLen() == 0:
+                continue
+            rel = f.getPath().toString()[len(root) :].lstrip("/")
+            segs = rel.split("/")
+            name_ok = not segs[-1].startswith(("_", "."))
+            dirs_ok = all(
+                "=" in seg and not seg.startswith(("_", "."))
+                for seg in segs[:-1]
+            )
+            if name_ok and dirs_ok:
+                return True
+    except Py4JJavaError as e:
+        if is_instance_of(
+            spark.sparkContext._gateway,
+            e.java_exception,
+            "java.io.FileNotFoundException",
+        ):
+            return False
+        raise
     return False
 
 

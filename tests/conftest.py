@@ -10,7 +10,11 @@ from cello_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="cello_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(
+        app_name="cello_spark_tests",
+        cores=min(8, os.cpu_count() or 1),
+        shuffle_partitions=8,
+    )
     yield s
 
 

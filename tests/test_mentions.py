@@ -2,8 +2,8 @@
 
 from pyspark.sql import functions as F
 
+from cello_spark.operators import mentions
 from cello_spark.operators.mentions import (
-    candidate_ngrams,
     detect_mentions,
     doc_mention_features,
     mention_counts_salted,
@@ -45,16 +45,6 @@ def test_text_spans_keeps_only_text(spark):
     assert {(r.doc_id, r.span_idx) for r in ts} == {("d1", 0), ("d1", 2), ("d2", 1)}
 
 
-def test_ngrams_jvm_side(spark):
-    docs = _mini_docs(spark)
-    grams = candidate_ngrams(text_spans(docs), max_n=3)
-    got = {r.ngram for r in grams.filter(F.col("doc_id") == "d1").collect()}
-    assert "t cell" in got and "b cell" in got and "monocyte" in got
-    # plan stays in whole-stage codegen (no Python UDF in candidate gen)
-    plan = grams._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_detect_mentions(spark, onto):
     docs = _mini_docs(spark)
     terms = spark.createDataFrame(onto.terms)
@@ -90,14 +80,16 @@ def test_detect_mentions_punctuated_text(spark, onto):
     assert (1, "CS:0000030") in got  # "T cell!" → t cell
 
 
-def test_gate_join_equals_gate_case(spark, onto, small_world):
+def test_gate_join_equals_gate_case(spark, onto, small_world, monkeypatch):
     """The explode+broadcast-join first-token gate (large-dictionary
     fallback) must produce exactly the CASE/IN gate's mentions."""
     docs = spark.createDataFrame(small_world["documents"])
     terms = spark.createDataFrame(onto.terms)
     adict = alias_dictionary(terms)
-    a = detect_mentions(docs, adict, gate="case")
-    b = detect_mentions(docs, adict, gate="join")
+    a = detect_mentions(docs, adict)
+    # no first-token count fits the CASE/IN gate → join gate
+    monkeypatch.setattr(mentions, "MAX_CASE_GATE_TOKENS", 0)
+    b = detect_mentions(docs, adict)
     ka = {tuple(r) for r in a.collect()}
     kb = {tuple(r) for r in b.collect()}
     assert ka == kb and len(ka) > 0
@@ -221,49 +213,20 @@ def test_punctuated_alias_matches_via_prepare_ontology(spark, onto):
     assert ("dx", tid, "t-cell alpha") in got
 
 
-def test_probe_hash_equals_probe_string(spark, onto, small_world):
-    """The hash-probe plan (xxhash64 over window columns + exact
-    verify on hits) must produce exactly the string-join mentions, for
-    both gates."""
-    docs = spark.createDataFrame(small_world["documents"])
-    terms = spark.createDataFrame(onto.terms)
-    adict = alias_dictionary(terms)
-    want = {
-        tuple(r)
-        for r in detect_mentions(docs, adict, probe="string").collect()
-    }
-    assert want
-    for g in ("case", "join"):
-        got = {
-            tuple(r)
-            for r in detect_mentions(
-                docs, adict, gate=g, probe="hash"
-            ).collect()
-        }
-        assert got == want, g
-
-
 def test_large_dict_no_driver_collect_parity(spark, onto, small_world):
     """Forcing the over-threshold path (dict_collect_threshold=0) must
     yield mentions identical to the collect path on the same
-    dictionary, for both probes."""
+    dictionary."""
     docs = spark.createDataFrame(small_world["documents"])
     terms = spark.createDataFrame(onto.terms)
     adict = alias_dictionary(terms)
     want = {tuple(r) for r in detect_mentions(docs, adict).collect()}
     assert want
-    for p in ("hash", "string"):
-        got = {
-            tuple(r)
-            for r in detect_mentions(
-                docs, adict, probe=p, dict_collect_threshold=0
-            ).collect()
-        }
-        assert got == want, p
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="driver-side literals"):
-        detect_mentions(docs, adict, gate="case", dict_collect_threshold=0)
+    got = {
+        tuple(r)
+        for r in detect_mentions(docs, adict, dict_collect_threshold=0).collect()
+    }
+    assert got == want
 
 
 def test_million_alias_dictionary_smoke(spark):

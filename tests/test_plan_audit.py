@@ -148,10 +148,10 @@ def test_python_eval_detection_covers_apply_in_pandas(spark):
     assert plan_stats(df)["has_python_eval"]
 
 
-def test_mention_hash_probe_stays_jvm_side(spark, onto):
-    """The hash-probe mention plan must stay entirely JVM-side (no
-    Python eval nodes) with the dictionary broadcast — the document
-    side's whole-stage-codegen claim."""
+def test_mention_plan_stays_jvm_side(spark, onto):
+    """The mention plan must stay entirely JVM-side (no Python eval
+    nodes) with the dictionary broadcast — the document side's
+    whole-stage-codegen claim."""
     from cello_spark.operators.mentions import detect_mentions
     from cello_spark.plans.kg import prepare_ontology
     from cello_spark.sources.fixtures import make_documents
@@ -159,9 +159,7 @@ def test_mention_hash_probe_stays_jvm_side(spark, onto):
     prep = prepare_ontology(onto)
     alias_df = spark.createDataFrame(prep["alias_dict"])
     docs_pdf, _, _ = make_documents(onto, n_docs=50)
-    m = detect_mentions(
-        spark.createDataFrame(docs_pdf), alias_df, probe="hash"
-    )
+    m = detect_mentions(spark.createDataFrame(docs_pdf), alias_df)
     stats = plan_stats(m)
     assert not stats["has_python_eval"]
     assert stats["broadcast_hash_joins"] >= 1
