@@ -1462,7 +1462,8 @@ def q_kg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("alias:"), F.col("alias_norm")).alias("b"),
         )
     )
-    cmap = canonical_mapping(connected_components(pairs))
+    # the term ids here are part keys (digit strings)
+    cmap = canonical_mapping(connected_components(pairs), tuple("0123456789"))
     subj_map = F.broadcast(
         cmap.select(F.col("node").alias("subj"), F.col("canonical").alias("subj_c"))
     )

@@ -159,7 +159,8 @@ def main() -> None:
 
     spark = get_spark(app_name="cello_spark_bench", cores=cores)
     qs = E.queries()
-    # steady-state warmup (same rationale as tools/bench_scaling.py):
+    # steady-state warmup (same rationale as the KG pipeline warmup in
+    # tools/bench_local_cluster.py):
     # touch every input table once so the first timed query measures
     # the query, not JVM tiering + parquet footer reads + page-cache
     # population — one-time session costs a long-lived cluster

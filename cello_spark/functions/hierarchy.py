@@ -38,7 +38,8 @@ DYKSTRA_ITERS = 200
 #   from the SHARED cache/DRAM and 32 concurrent workers collapse to
 #   0.39 8→32 efficiency; at 256 the same pinned-process probe
 #   measures +41% single-stream, +77% aggregate at 32 workers, 0.53
-#   efficiency (best-of-3, tools/bench_cpu_envelope.py methodology).
+#   efficiency (best-of-3 taskset-pinned processes, the CPU-envelope
+#   probe of BENCH/BASELINE.md).
 #   Columns are independent QP instances, so chunking is bit-neutral.
 # - numpy fallback: 2048 — the fallback pays ~10 interpreter
 #   round-trips per color group per sweep PER CHUNK, so narrow chunks

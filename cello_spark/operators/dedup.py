@@ -37,7 +37,7 @@ _log = logging.getLogger(__name__)
 DEFAULT_MAX_SHINGLE_DF = 5000
 
 
-def _pin(df: DataFrame, enabled: bool = True) -> DataFrame:
+def _pin(df: DataFrame) -> DataFrame:
     """Materialize a multiply-consumed intermediate with an eager
     localCheckpoint. The capped shingle table (and the signature table
     in the minhash family) feeds the pair join (twice, l/r), the
@@ -46,10 +46,8 @@ def _pin(df: DataFrame, enabled: bool = True) -> DataFrame:
     Measured at sf0.1: minhash_lsh_pairs warm 7.3s -> 4.9s, cold
     18.2s -> 6.9s. At cluster scale this stores ONE copy of data the
     plan otherwise recomputes 3-4x — the standard persist-the-index
-    trade; pass materialize=False on the operators to restore
-    pure-lineage plans (e.g. when executor storage is the scarcer
-    resource)."""
-    return df.localCheckpoint(eager=True) if enabled else df
+    trade."""
+    return df.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +60,6 @@ def exact_duplicates(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_ids: int = 100,
-    materialize: bool = True,
     hub_rows: int = 262_144,
 ) -> DataFrame:
     """Groups of byte-identical (normalized) docs: returns
@@ -90,8 +87,7 @@ def exact_duplicates(
         df.select(
             F.col(id_col).alias("doc_id"),
             fingerprint_md5(text_col).alias("fingerprint"),
-        ),
-        materialize,
+        )
     )
     groups = (
         fp.groupBy("fingerprint")
@@ -291,7 +287,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    materialize: bool = True,
 ) -> DataFrame:
     """All doc pairs (a < b) with shingle-set Jaccard ≥ threshold.
     Plan: inverted index self-join on shingle → common counts →
@@ -305,8 +300,7 @@ def ngram_jaccard_pairs(
         _cap_common_shingles(
             shingles(df, id_col, text_col, n), max_shingle_df,
             op="ngram_jaccard_pairs",
-        ),
-        materialize,
+        )
     )
     # probe side spread across task slots: pair enumeration explodes
     # |bucket|² rows, which must not run in one coalesced partition
@@ -462,7 +456,6 @@ def minhash_lsh_pairs(
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
     seed: int = 42,
     hash_strategy: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH. Candidate pairs = docs
     sharing any band hash; with verify=True candidates are checked with
@@ -474,18 +467,16 @@ def minhash_lsh_pairs(
     hashes, immune to content skew."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    sh = _pin(
-        _cap_common_shingles(
-            shingles(df, id_col, text_col, n), max_shingle_df,
-            op="minhash_lsh_pairs",
-        ),
-        materialize and verify,  # single consumer when not verifying
+    sh = _cap_common_shingles(
+        shingles(df, id_col, text_col, n), max_shingle_df,
+        op="minhash_lsh_pairs",
     )
+    if verify:  # a single consumer (the signatures) when not verifying
+        sh = _pin(sh)
     sig = _pin(
         minhash_signatures(
             sh, num_hashes=num_hashes, seed=seed, hash_strategy=hash_strategy
-        ),
-        materialize,
+        )
     )
     banded = _banded_signatures(sig, bands, rows_per_band, hash_strategy)
     cands = (
@@ -544,7 +535,6 @@ def simhash_pairs(
     text_col: str = "text",
     n_bands: int = 4,
     hash_strategy: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairs with hamming(simhash) ≤ max_hamming. Pigeonhole banding:
     split 64 bits into n_bands chunks; any pair within distance
@@ -556,8 +546,7 @@ def simhash_pairs(
     per side (sf0.1: 4.1s -> 2.9s warm, 12.5s -> 4.0s cold)."""
     assert max_hamming < n_bands, "pigeonhole needs n_bands > max_hamming"
     sh = _pin(
-        simhash(df, id_col, text_col, hash_strategy=hash_strategy),
-        materialize,
+        simhash(df, id_col, text_col, hash_strategy=hash_strategy)
     )
     width = 64 // n_bands
     banded = sh.select(
@@ -602,7 +591,6 @@ def _cross_capped_shingles(
     text_col: str,
     max_shingle_df: int | None,
     op: str,
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shingle both corpora and apply ONE document-frequency cap over
     their union, so a boilerplate shingle common to both sides is
@@ -616,8 +604,7 @@ def _cross_capped_shingles(
     # downstream consumers read the same stored blocks instead of each
     # re-running both corpora's shingling + the union df-cap
     both = _pin(
-        _cap_common_shingles(shl.unionByName(shr), max_shingle_df, op=op),
-        materialize,
+        _cap_common_shingles(shl.unionByName(shr), max_shingle_df, op=op)
     )
     return (
         both.filter(F.col("side") == "l").drop("side"),
@@ -633,7 +620,6 @@ def jaccard_pairs_cross(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact cross-corpus near-dup pairs: every (a ∈ left, b ∈ right)
     with shingle-set Jaccard ≥ threshold — the canonical "dedupe the
@@ -649,7 +635,7 @@ def jaccard_pairs_cross(
     across crawl increments."""
     shl, shr = _cross_capped_shingles(
         left, right, n, id_col, text_col, max_shingle_df,
-        "jaccard_pairs_cross", materialize=materialize,
+        "jaccard_pairs_cross",
     )
     pairs = (
         ensure_min_partitions(shl).alias("l")
@@ -673,7 +659,6 @@ def minhash_lsh_pairs_cross(
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
     seed: int = 42,
     hash_strategy: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Cross-corpus MinHash-LSH: banded signatures for both corpora
     (same coefficients/seed, so signatures are comparable), candidates
@@ -690,19 +675,17 @@ def minhash_lsh_pairs_cross(
     rows_per_band = num_hashes // bands
     shl, shr = _cross_capped_shingles(
         left, right, n, id_col, text_col, max_shingle_df,
-        "minhash_lsh_pairs_cross", materialize=materialize,
+        "minhash_lsh_pairs_cross",
     )
     sig_l = _pin(
         minhash_signatures(
             shl, num_hashes=num_hashes, seed=seed, hash_strategy=hash_strategy
-        ),
-        materialize,
+        )
     )
     sig_r = _pin(
         minhash_signatures(
             shr, num_hashes=num_hashes, seed=seed, hash_strategy=hash_strategy
-        ),
-        materialize,
+        )
     )
     cands = (
         ensure_min_partitions(

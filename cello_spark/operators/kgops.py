@@ -115,7 +115,6 @@ def kg_negative_samples(
     seed: int = 42,
     corrupt: str = "obj",
     hub_rows: int = 262_144,
-    materialize: bool = True,
 ) -> DataFrame:
     """Type-consistent negative sampling for KG-embedding training
     (TransE / DistMult style): for every positive (s, p, o) emit up to
@@ -154,11 +153,11 @@ def kg_negative_samples(
     # false-negative anti-join — materialize it ONCE (same trade as
     # kg_random_walks / the dedup `_pin`s) so those consumers probe
     # stored blocks instead of re-running the dedup shuffle.
-    # materialize=False keeps the lazy lineage (executor-loss recovery
-    # via recompute) at the cost of repeating that shuffle per consumer.
-    t = triples.select("subj", "pred", "obj").dropDuplicates()
-    if materialize:
-        t = t.localCheckpoint(eager=True)
+    t = (
+        triples.select("subj", "pred", "obj")
+        .dropDuplicates()
+        .localCheckpoint(eager=True)
+    )
     ent_col = corrupt
     ents = t.select("pred", F.col(ent_col).alias("ent")).dropDuplicates()
     # domain sizes are needed for the mod-draw anyway — reuse them as
@@ -235,7 +234,6 @@ def kg_random_walks(
     walks_per_node: int = 1,
     seed: int = 42,
     hub_rows: int = 262_144,
-    materialize: bool = True,
 ) -> DataFrame:
     """Deterministic uniform random walks over the directed triple
     graph — the corpus generator for node-embedding training
@@ -274,14 +272,12 @@ def kg_random_walks(
     # probe stored blocks instead of re-running the dedup shuffle
     # (A/B at the sf0.1 bench: 8.0s -> 4.0s warm). At cluster scale
     # this stores one copy of the distinct edge list, the same data
-    # every step join would otherwise reshuffle. materialize=False
-    # opts out (lazy lineage, executor-loss recovery by recompute).
+    # every step join would otherwise reshuffle.
     e = (
         triples.select(F.col("subj").alias("cur"), F.col("obj").alias("nxt"))
         .dropDuplicates()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        e = e.localCheckpoint(eager=True)
     # out-degrees are needed for the mod-draw anyway — reuse them as
     # the skew probe (one count-aggregate job serves both). When a
     # hub node exists the index routes through the de-hubbed rank.

@@ -42,7 +42,6 @@ def per_group_sorted_index(
     order_cols: list[str],
     idx_col: str = "idx",
     num_partitions: int | None = None,
-    materialize: bool = True,
     probe_skew: bool = True,
     hub_rows: int = 262_144,
 ) -> DataFrame:
@@ -82,7 +81,7 @@ def per_group_sorted_index(
     physical partitioning — relying on Catalyst exchange reuse for
     that is a silent-wrong-answer hazard (reuse can be disabled via
     spark.sql.exchange.reuse, or the subtrees can stop canonicalizing
-    identically). `materialize=True` (default) pins it with an eager
+    identically). It is therefore pinned with an eager
     localCheckpoint: __rpid is then a property of stored blocks, not
     of a re-runnable sample. The checkpoint also computes the ranged
     data ONCE for consumers that probe the result repeatedly
@@ -121,11 +120,11 @@ def per_group_sorted_index(
             return df.withColumn(
                 idx_col, (F.row_number().over(w) - 1).cast("int")
             )
-    part = df.repartitionByRange(n, *cols).withColumn(
-        "__rpid", F.spark_partition_id()
+    part = (
+        df.repartitionByRange(n, *cols)
+        .withColumn("__rpid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        part = part.localCheckpoint(eager=True)
     w_local = Window.partitionBy("__rpid", *group_cols).orderBy(*order_cols)
     local = part.withColumn("__lrn", F.row_number().over(w_local))
     counts = part.groupBy("__rpid", *group_cols).agg(

@@ -27,6 +27,9 @@ via the *_auto variants when a graph exceeds the driver cutover.
 Inputs arrive via the ctx dict (documents/features as DataFrames,
 ontology bundle driver-side) so the same wiring runs on fixtures in
 tests, on the bench generator, and on real tables in production.
+Stages 5 and 7 call the per-document body (gate_mentioned,
+link_mentioned, document_triples) that streaming/ingest.py's
+run_incremental_kg runs on every micro-batch.
 """
 
 from __future__ import annotations
@@ -43,6 +46,9 @@ from cello_spark.plans.pipeline import Pipeline
 from cello_spark.sources.fixtures import Ontology, term_id, QUALIFIER_SUFFIXES
 from cello_spark.sources.ontology import INVERTIBLE_RELS
 
+# the fixture ontology's id space (sources/fixtures.term_id). Pipelines
+# derive their id spaces from the ontology they load (prepare_ontology);
+# this constant only names the fixture's for callers that pin it.
 TERM_PREFIX = "CS:"
 
 # mentioned-doc fraction above which the linked stage scores ALL
@@ -51,6 +57,19 @@ TERM_PREFIX = "CS:"
 # stage_linked. Measured breakeven is high: the exchange the dense
 # plan saves is cheap relative to the extra scoring below ~0.9.
 GATE_SELECTIVITY = 0.9
+
+# documents the density probe samples (estimate_mention_density)
+DENSITY_SAMPLE_DOCS = 4096
+
+# largest non-identity canonical slice the rewrite compiles to a literal
+# map; above it the rewrite broadcast-joins (canonical_rewrite_triples)
+MAX_LITERAL_MAP = 128
+
+# join hints of the mention gate (gate_mentioned): a corpus-sized
+# mentioned set builds a shuffled hash relation, a micro-batch's
+# dict-sized set is broadcast
+CORPUS_GATE = "SHUFFLE_HASH"
+MICRO_BATCH_GATE = "broadcast"
 
 
 # ---------------------------------------------------------------------------
@@ -81,6 +100,8 @@ def _prefix_tuple(term_prefix) -> tuple[str, ...]:
 def _starts_with_any(col: str, prefixes: tuple[str, ...]):
     """Spark predicate: column starts with any of the prefixes
     (Column.startswith only accepts one string)."""
+    if not prefixes:
+        return F.lit(False)
     e = F.col(col).startswith(prefixes[0])
     for p in prefixes[1:]:
         e = e | F.col(col).startswith(p)
@@ -88,13 +109,31 @@ def _starts_with_any(col: str, prefixes: tuple[str, ...]):
 
 
 def prepare_ontology(
-    onto: Ontology, term_prefix: str | tuple[str, ...] = TERM_PREFIX
-) -> dict[str, pd.DataFrame]:
+    onto: Ontology, term_prefix: str | tuple[str, ...] | None = None
+) -> dict:
     """Pandas equivalents of the ontology ingest transforms (obsolete
     filter, patch union, inverse-edge synthesis — reference
     the_ontology.py:106-148, ontology_graph.py:344-387/585-593), the
     is_a closure, the alias dictionary, and the canonicalization
-    components. All O(|ontology|)."""
+    components. All O(|ontology|).
+
+    The canonical id of a synonym/xref component is its minimum
+    ontology TERM, so the rule needs to know which ids are terms: the
+    id spaces come from the ontology itself, one per prefix of its term
+    ids ('CL:', 'UO:', ... — the part before ':', the rule
+    sources/ontology.ontology_from_obos(id_spaces=...) filters by).
+    `term_prefix` ('CL:' or a tuple) only overrides that derivation.
+    The result carries the id spaces under "term_prefix" and the
+    merge-affected terms under "merged_terms", the two inputs every
+    canonical rewrite of this ontology takes — batch
+    (build_kg_pipeline), CLI and streaming (run_incremental_kg) read
+    both from here."""
+    if term_prefix is None:
+        prefixes = tuple(
+            sorted({t.split(":")[0] + ":" for t in onto.terms.term_id})
+        )
+    else:
+        prefixes = _prefix_tuple(term_prefix)
     live = onto.terms[~onto.terms.is_obsolete]
     live_ids = set(live.term_id)
     edges = onto.edges[
@@ -137,7 +176,6 @@ def prepare_ontology(
     # canonical = min member with an ontology prefix, else min member
     # (multi-prefix: a cross-space xref component canonicalizes to its
     # lexicographically-first term id across the merged id spaces)
-    prefixes = _prefix_tuple(term_prefix)
     pairs = [(r.term_id, r.alias_norm) for r in alias_dict.itertuples(index=False)]
     for t in live.itertuples(index=False):
         for x in t.xrefs:
@@ -160,6 +198,8 @@ def prepare_ontology(
         "onto_triples": onto_triples,
         "alias_dict": alias_dict,
         "canonical_map": canonical_map,
+        "term_prefix": prefixes,
+        "merged_terms": merged_term_set(canonical_map, prefixes),
     }
 
 
@@ -199,7 +239,7 @@ def make_linking_model(
 
 def merged_term_set(
     canonical_map: pd.DataFrame,
-    term_prefix: str | tuple[str, ...] = TERM_PREFIX,
+    term_prefix: str | tuple[str, ...],
 ) -> list[str]:
     """Terms whose canonicalization MERGES identities (map to a
     different term, or are such a merge's target): only triples
@@ -220,9 +260,8 @@ def build_kg_pipeline(
     onto: Ontology,
     weights_pdf: pd.DataFrame,
     thresholds_pdf: pd.DataFrame,
-    n_buckets: int = 32,
     include_media_triples: bool = False,
-    term_prefix: str | tuple[str, ...] = TERM_PREFIX,
+    term_prefix: str | tuple[str, ...] | None = None,
 ) -> Pipeline:
     """Staged KG-construction pipeline (see module docstring).
 
@@ -234,10 +273,15 @@ def build_kg_pipeline(
     the headline triples artifact (and every bench baseline) is
     byte-identical with or without the feature.
 
-    term_prefix names the ontology id space(s): pass a tuple (e.g.
-    ('CL:', 'UO:', 'ZZ:')) for config-17-style multi-project merges so
-    cross-space xref components canonicalize (and rewrite) across all
-    of them."""
+    The id spaces of the canonical rule are derived from `onto` by
+    prepare_ontology (a multi-project merge gets all of its spaces, so
+    cross-space xref components canonicalize and rewrite across them);
+    `term_prefix` (e.g. ('CL:', 'UO:', 'ZZ:')) only overrides that.
+
+    The document side is the per-document KG body shared with
+    streaming.run_incremental_kg — link_mentioned, then
+    document_triples, with the mention gate (gate_mentioned) in one of
+    the two — split over the `linked` and `triples` stages."""
     raw_features = features  # pre-repartition plan: cheap count source
     documents = _ensure_parallelism(documents, spark)
     features = _ensure_parallelism(features, spark)
@@ -291,11 +335,7 @@ def build_kg_pipeline(
     #   sparse (mentioned fraction < GATE_SELECTIVITY): the linked
     #     stage semi-joins the WIDE features against mentioned doc_ids
     #     BEFORE scoring — the exchange of the surviving features is
-    #     paid to skip scoring the unmentioned majority. SHUFFLE_HASH
-    #     on the mention side (sort-merge would sort the wide features
-    #     side for a join that only needs a doc_id hash set — measured
-    #     2x the join cost at both levels); the hash side spills if
-    #     oversized, so this stays safe at 10^12 docs. linked depends
+    #     paid to skip scoring the unmentioned majority. linked depends
     #     on mentions and the stages serialize.
     #
     #   dense (most docs mentioned — this bench, and any corpus
@@ -307,22 +347,10 @@ def build_kg_pipeline(
     #     the triples stage, on the NARROW linked rows (doc_id +
     #     labels, ~5x smaller than the feature vectors).
     #
-    # The density probe samples a few thousand documents at build time
-    # (same stats role as a CBO's ANALYZE sample; limit() keeps it one
-    # sub-second job).
-    #
-    # No dropDuplicates on the mention side in either plan — the
-    # left_semi hash build dedups natively, and the explicit dedup
-    # costs a full extra aggregate exchange (measured 15s vs 2s on
-    # 8.5M mentions at local[32]).
-    #
-    # Broadcasting the mention side instead (zero exchange on both
-    # sides) was measured and REJECTED at corpus scale: collecting
-    # and hash-building 4.5M doc_ids on the driver is ~15-20s of
-    # serial time — the full stage ran 25.6s vs 10.5s at local[32]
-    # (32.6 vs 15.6 at local[8]) despite lower aggregate JVM CPU.
-    # Broadcast gates only pay when the mentioned set is dict-sized
-    # (the streaming micro-batch path, where it IS used).
+    # Both gates are gate_mentioned with the corpus (SHUFFLE_HASH)
+    # hint. The density probe samples a few thousand documents at
+    # build time (same stats role as a CBO's ANALYZE sample; limit()
+    # keeps it one sub-second job).
     dense = (
         estimate_mention_density(
             documents, spark.createDataFrame(prep["alias_dict"])
@@ -331,10 +359,6 @@ def build_kg_pipeline(
     )
 
     def stage_linked(ctx: dict) -> DataFrame:
-        # triple emission consumes only the selected labels; the
-        # probs/bins arrays are ~20x the bytes and re-derivable —
-        # emit_scores=False skips their Arrow transfer and parquet
-        # write entirely
         if dense:
             # right-size the UDF input: each mapInPandas task costs
             # ~150ms of fixed Python overhead (task setup, broadcast
@@ -362,49 +386,29 @@ def build_kg_pipeline(
             feats_in = features
             if features.rdd.getNumPartitions() > target:
                 feats_in = features.coalesce(target)
-            return link_documents(feats_in, model, emit_scores=False)
-        # distinct BEFORE the semi join: the occurrence table carries
-        # many rows per doc (one per mention), and SHUFFLE_HASH would
-        # otherwise exchange + hash-build every occurrence row. The
-        # partial aggregate collapses them map-side, so only unique
-        # doc_ids cross the wire and the hash relation holds one entry
-        # per doc (measured at 4M docs: gate 42.9→21.9 core-sec @8,
-        # 65.5→29.5 @32 — tools/diag_triples.py)
-        mentioned = (
-            ctx["mentions"].select("doc_id").distinct().hint("SHUFFLE_HASH")
-        )
-        gated = features.join(mentioned, "doc_id", "left_semi")
-        return link_documents(gated, model, emit_scores=False)
-
-    merged_terms = merged_term_set(prep["canonical_map"], term_prefix=term_prefix)
+            return link_mentioned(feats_in, model)
+        return link_mentioned(features, model, ctx["mentions"])
 
     def stage_triples(ctx: dict) -> DataFrame:
-        linked = ctx["linked"]
-        if dense:
-            # the mention gate, applied to the NARROW linked rows (the
-            # dense linked stage scored every doc so it could run
-            # concurrently with mention detection)
-            # distinct-first for the same reason as the sparse gate in
-            # stage_linked: exchange unique doc_ids, not occurrences
-            mentioned = (
-                ctx["mentions"]
-                .select("doc_id")
-                .distinct()
-                .hint("SHUFFLE_HASH")
-            )
-            linked = linked.join(mentioned, "doc_id", "left_semi")
-        raw = ctx["onto_triples"].unionByName(typing_triples(linked))
-        return canonical_rewrite_triples(
-            raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
+        # the dense linked stage scored every doc so it could run
+        # concurrently with mention detection: gate its narrow rows here
+        return document_triples(
+            ctx["linked"],
+            ctx["canonical_map"],
+            prep,
+            mentions=ctx["mentions"] if dense else None,
+            onto_triples=ctx["onto_triples"],
         )
 
     def stage_media_triples(ctx: dict) -> DataFrame:
         from cello_spark.operators.multimodal import media_triples as _mt
 
         alias_df = spark.createDataFrame(prep["alias_dict"])
-        raw = _mt(documents, alias_df)
         return canonical_rewrite_triples(
-            raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
+            _mt(documents, alias_df),
+            ctx["canonical_map"],
+            prep["merged_terms"],
+            prep["term_prefix"],
         )
 
     # stages declare their inputs and run concurrently once those
@@ -427,16 +431,86 @@ def build_kg_pipeline(
     return pipe
 
 
-def estimate_mention_density(
-    documents: DataFrame, alias_df: DataFrame, sample_docs: int = 4096
-) -> float:
+# ---------------------------------------------------------------------------
+# per-document KG body: mention gate → link → typing → canonical rewrite.
+# The batch stages and the streaming micro-batch both call these, so a
+# plan change here lands in both.
+# ---------------------------------------------------------------------------
+
+
+def gate_mentioned(df: DataFrame, mentions: DataFrame, hint: str) -> DataFrame:
+    """Rows of `df` (features or linked rows, keyed by doc_id) whose
+    document has at least one mention: a left-semi join against the
+    DISTINCT mentioned doc_ids, built with join hint `hint`.
+
+    Distinct BEFORE the semi join: the occurrence table carries many
+    rows per doc (one per mention), and the hash build would otherwise
+    exchange + hash every occurrence row. The partial aggregate
+    collapses them map-side, so only unique doc_ids cross the wire and
+    the hash relation holds one entry per doc (measured at 4M docs:
+    gate 42.9→21.9 core-sec @8, 65.5→29.5 @32 — BENCH/BASELINE.md,
+    "Distinct-before-semi-join mention gate").
+
+    CORPUS_GATE (SHUFFLE_HASH) for a corpus-sized mentioned set:
+    sort-merge would sort the wide side for a join that only needs a
+    doc_id hash set (measured 2x the join cost), and the hash side
+    spills if oversized, so this stays safe at 10^12 docs. Broadcasting
+    it was measured and REJECTED at corpus scale: collecting and
+    hash-building 4.5M doc_ids on the driver is ~15-20s of serial time
+    (stage 25.6s vs 10.5s at local[32]). MICRO_BATCH_GATE (broadcast)
+    pays only when the mentioned set is dict-sized — a streaming
+    micro-batch, bounded by max_files_per_trigger — where the wide side
+    is then neither shuffled nor sorted."""
+    mentioned = mentions.select("doc_id").distinct().hint(hint)
+    return df.join(mentioned, "doc_id", "left_semi")
+
+
+def link_mentioned(
+    features: DataFrame,
+    model: LinkingModel,
+    mentions: DataFrame | None = None,
+    hint: str = CORPUS_GATE,
+) -> DataFrame:
+    """Linked labels of the documents in `features`, gated to mentioned
+    docs first when `mentions` is given (mentions=None scores every doc:
+    the dense batch plan, which gates in document_triples instead).
+    emit_scores=False: triple emission consumes only the selected
+    labels; the probs/bins arrays are ~20x the bytes and re-derivable,
+    so their Arrow transfer and parquet write are skipped entirely."""
+    if mentions is not None:
+        features = gate_mentioned(features, mentions, hint)
+    return link_documents(features, model, emit_scores=False)
+
+
+def document_triples(
+    linked: DataFrame,
+    canonical_map: DataFrame,
+    prep: dict,
+    mentions: DataFrame | None = None,
+    onto_triples: DataFrame | None = None,
+) -> DataFrame:
+    """Canonical typing triples of `linked` (gated to mentioned docs
+    first when `mentions` is given), after the schema-layer
+    `onto_triples` when given — the batch `triples` stage emits both
+    layers, a streaming micro-batch only its typing triples."""
+    if mentions is not None:
+        linked = gate_mentioned(linked, mentions, CORPUS_GATE)
+    raw = typing_triples(linked)
+    if onto_triples is not None:
+        raw = onto_triples.unionByName(raw)
+    return canonical_rewrite_triples(
+        raw, canonical_map, prep["merged_terms"], prep["term_prefix"]
+    )
+
+
+def estimate_mention_density(documents: DataFrame, alias_df: DataFrame) -> float:
     """Fraction of documents with ≥1 dictionary mention, estimated on a
     limit() sample — the table-stats probe behind the gate-plan choice
     (a CBO would read the same number from ANALYZE statistics).
     limit() is the cheapest sample (first partitions only); its bias is
     acceptable for a one-bit plan decision with a conservative 0.9
     threshold."""
-    sample = documents.select("doc_id", "spans").limit(sample_docs)
+    sample = documents.select("doc_id", "spans").limit(DENSITY_SAMPLE_DOCS)
     n = sample.count()
     if n == 0:
         return 0.0
@@ -453,8 +527,7 @@ def canonical_rewrite_triples(
     raw: DataFrame,  # (subj, pred, obj) — DISTINCT by construction
     canonical_map: DataFrame,  # (node, canonical) — dict-sized
     merged_terms: list[str],  # terms that merge under canonicalization
-    max_literal_map: int = 128,
-    term_prefix: str | tuple[str, ...] = TERM_PREFIX,
+    term_prefix: str | tuple[str, ...],  # the ontology's id spaces
 ) -> DataFrame:
     """Rewrite subj/obj to canonical ids and dedup ONLY where the
     rewrite can create duplicates.
@@ -479,7 +552,7 @@ def canonical_rewrite_triples(
     (node != canonical, node startswith term_prefix — i.e. the merge
     sources; alias-string and xref keys can never hit a triple) is what
     the rewrite actually applies. Ontology merge sets are tens of
-    entries, so when that slice fits `max_literal_map` the rewrite
+    entries, so when that slice fits MAX_LITERAL_MAP the rewrite
     compiles to a constant-folded literal-map lookup (whole-stage
     codegen, zero per-row allocation, no join) instead of two broadcast
     hash joins over every triple — and when the slice is EMPTY (no
@@ -492,12 +565,12 @@ def canonical_rewrite_triples(
         (F.col("node") != F.col("canonical"))
         & _starts_with_any("node", _prefix_tuple(term_prefix))
     )
-    head = nonid.limit(max_literal_map + 1).collect()
+    head = nonid.limit(MAX_LITERAL_MAP + 1).collect()
     if not head:
         return raw  # identity map: nothing rewrites, nothing merges
 
     def _rewrite(df: DataFrame) -> DataFrame:
-        if len(head) <= max_literal_map:
+        if len(head) <= MAX_LITERAL_MAP:
             lit = F.create_map(
                 *[F.lit(x) for r in head for x in (r.node, r.canonical)]
             )
@@ -551,7 +624,7 @@ def canonical_rewrite_triples(
 
 def canonical_mapping(
     components: DataFrame,
-    term_prefix: str | tuple[str, ...] = TERM_PREFIX,
+    term_prefix: str | tuple[str, ...],
 ) -> DataFrame:
     """Distributed variant of the canonical-id rule (used when the
     alias graph exceeds driver scale): per component, canonical = min

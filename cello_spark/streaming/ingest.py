@@ -239,9 +239,16 @@ def run_incremental_kg(
     time (Trigger.AvailableNow; re-invoke after new files land and only
     they are processed).
 
-    Equivalence to the batch pipeline (plans/kg.py) is exact, not
-    approximate, because every per-document stage is doc-local and the
-    corpus-global pieces factor cleanly:
+    Each micro-batch runs the batch pipeline's per-document body
+    (plans/kg.py link_mentioned → document_triples), with the same id
+    spaces and merged terms prepare_ontology derives from `onto`. Only
+    the mention gate's join hint differs: a micro-batch's mentioned set
+    is dict-sized, so it is broadcast (kg.MICRO_BATCH_GATE) where the
+    batch pipeline shuffle-hashes its corpus-sized one.
+
+    Equivalence to the batch pipeline is exact, not approximate,
+    because every per-document stage is doc-local and the corpus-global
+    pieces factor cleanly:
 
     - mentions / linking / typing triples are per-doc operators, and
       the file source never splits a file across batches, so the union
@@ -271,26 +278,18 @@ def run_incremental_kg(
     """
     import os
 
-    from cello_spark.operators.linking import link_documents, typing_triples
-    from cello_spark.plans.kg import (
-        canonical_rewrite_triples,
-        make_linking_model,
-        merged_term_set,
-        prepare_ontology,
-    )
+    from cello_spark.plans import kg
 
-    prep = prepare_ontology(onto)
-    model = make_linking_model(onto, weights_pdf, thresholds_pdf)
-    merged_terms = merged_term_set(prep["canonical_map"])
-    alias_pdf = prep["alias_dict"]
-    cm_pdf = prep["canonical_map"]
+    prep = kg.prepare_ontology(onto)
+    model = kg.make_linking_model(onto, weights_pdf, thresholds_pdf)
 
     # ontology-layer triples: corpus-independent, written once per
     # invocation (idempotent overwrite), already canonically rewritten
-    onto_tr = canonical_rewrite_triples(
+    onto_tr = kg.canonical_rewrite_triples(
         spark.createDataFrame(prep["onto_triples"]),
-        spark.createDataFrame(cm_pdf),
-        merged_terms,
+        spark.createDataFrame(prep["canonical_map"]),
+        prep["merged_terms"],
+        prep["term_prefix"],
     )
     onto_tr.write.mode("overwrite").parquet(os.path.join(workdir, "onto_triples"))
 
@@ -301,28 +300,15 @@ def run_incremental_kg(
         # clone: build the dict-sized inputs and read the feature table
         # through THAT session so no plan mixes sessions
         sess = batch_docs.sparkSession
-        alias_df = sess.createDataFrame(alias_pdf)
-        cm_df = sess.createDataFrame(cm_pdf)
+        alias_df = sess.createDataFrame(prep["alias_dict"])
         mentions = detect_mentions(batch_docs, alias_df, distinct=False)
         # micro-batches are small relative to the corpus → always the
-        # sparse gate: semi-join the wide features down to this batch's
-        # mentioned docs before scoring (see plans/kg.py stage_linked).
-        # BROADCAST, not SHUFFLE_HASH: a micro-batch's mentioned set is
-        # bounded by max_files_per_trigger (dict-sized), so the
-        # broadcast build is cheap and the wide feature table is
-        # neither shuffled nor sorted (the batch pipeline's gate keeps
-        # SHUFFLE_HASH because its mentioned set is corpus-sized —
-        # see the measured rejection in plans/kg.py stage_linked)
-        # distinct shrinks the broadcast build to one entry per doc
-        # (the occurrence table has one row per mention)
-        mentioned = F.broadcast(mentions.select("doc_id").distinct())
-        gated = (
-            sess.read.parquet(features_path)
-            .join(mentioned, "doc_id", "left_semi")
+        # sparse plan: gate the wide features before scoring
+        linked = kg.link_mentioned(
+            sess.read.parquet(features_path), model, mentions, kg.MICRO_BATCH_GATE
         )
-        linked = link_documents(gated, model, emit_scores=False)
-        triples = canonical_rewrite_triples(
-            typing_triples(linked), cm_df, merged_terms
+        triples = kg.document_triples(
+            linked, sess.createDataFrame(prep["canonical_map"]), prep
         )
         triples.write.mode("overwrite").parquet(
             os.path.join(typing_root, f"batch-{batch_id:09d}")

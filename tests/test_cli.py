@@ -236,36 +236,37 @@ def test_ontology_from_obo_empty_and_typedef_only():
     assert typedef_only.labels == [] and len(typedef_only.edges) == 0
 
 
-REAL_OBO = "/root/reference/cello/onto_lib_py3/obo/CL.18-11-13.obo"
-
-
-@pytest.mark.skipif(
-    not os.path.exists(REAL_OBO), reason="reference OBO not present"
-)
-def test_cli_subprocess_kg_resume_predict_real_obo(spark, tmp_path, onto):
+def test_cli_subprocess_kg_resume_predict_cl_obo(spark, tmp_path):
     """Drive the CLI end-to-end AS A USER WOULD — three
     `python -m cello_spark` SUBPROCESSES (not in-process main(argv)):
-    `kg` on a fresh workdir with the real Cell Ontology release the
-    reference bundles, a second `kg` that must resume (every stage
+    `kg` on a fresh workdir with a CL-space OBO whose shared xrefs
+    merge CL terms, a second `kg` that must resume (every stage
     skipped, triple count unchanged), then `predict` from the same
-    written model bundle. Asserts the triple table, the manifest, and
-    the resume behave from the command line."""
+    written model bundle. Asserts the triple table, the canonical
+    rewrite (no merged source id survives), the manifest, and the
+    resume behave from the command line."""
     import subprocess
     import sys
 
+    from cello_spark.plans.kg import prepare_ontology
     from cello_spark.sources.fixtures import (
         make_documents,
         make_model_weights,
         make_thresholds,
+        synthetic_obo_text,
     )
     from cello_spark.sources.ontology import ontology_from_obo
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # each CLI process starts its own driver JVM beside this session's:
+    # a small pre-touched heap keeps the two inside the box's memory
+    env = {**os.environ, "SPARK_DRIVER_MEM": "2g"}
 
     def run_cli(argv):
         proc = subprocess.run(
             [sys.executable, "-m", "cello_spark", *argv],
             cwd=repo,
+            env=env,
             capture_output=True,
             text=True,
             timeout=600,
@@ -273,35 +274,49 @@ def test_cli_subprocess_kg_resume_predict_real_obo(spark, tmp_path, onto):
         assert proc.returncode == 0, proc.stderr[-4000:]
         return json.loads(proc.stdout.strip().splitlines()[-1])
 
-    with open(REAL_OBO) as f:
-        text = f.read()
+    # consecutive live terms share an xref (BTO:0, BTO:0, BTO:1, ...),
+    # so their synonym/xref components merge CL ids
+    text = synthetic_obo_text(
+        id_space="CL",
+        n_terms=120,
+        xref_targets=[f"BTO:{i // 2:07d}" for i in range(16)],
+    )
+    obo_path = str(tmp_path / "cl.obo")
+    with open(obo_path, "w") as f:
+        f.write(text)
     labels = sorted(ontology_from_obo(text).labels)[:100]
-    real_onto = ontology_from_obo(text, labels=labels)
-    docs_pdf, feats_pdf, _ = make_documents(real_onto, n_docs=1000)
+    cl_onto = ontology_from_obo(text, labels=labels)
+    cmap = prepare_ontology(cl_onto)["canonical_map"]
+    merged_sources = {
+        n for n, c in zip(cmap.node, cmap.canonical)
+        if n.startswith("CL:") and n != c
+    }
+    assert merged_sources, "fixture OBO produced no canonical merges"
+    docs_pdf, feats_pdf, _ = make_documents(cl_onto, n_docs=300)
     docs_path = str(tmp_path / "docs")
     feats_path = str(tmp_path / "feats")
     spark.createDataFrame(docs_pdf).write.parquet(docs_path)
     spark.createDataFrame(feats_pdf).write.parquet(feats_path)
 
-    weights = make_model_weights(real_onto)
-    thresholds = make_thresholds(real_onto)
+    weights = make_model_weights(cl_onto)
+    thresholds = make_thresholds(cl_onto)
     label_set = set(weights.label)
     edges = [
         (c, p)
-        for c, p, r in real_onto.edges[["src", "dst", "rel"]].itertuples(
+        for c, p, r in cl_onto.edges[["src", "dst", "rel"]].itertuples(
             index=False
         )
         if r == "is_a" and c in label_set and p in label_set
     ]
-    bundle = str(tmp_path / "real_model")
+    bundle = str(tmp_path / "cl_model")
     save_model_bundle(bundle, weights, thresholds, GENES, edges)
 
-    work = str(tmp_path / "kgwork_real")
+    work = str(tmp_path / "kgwork_cl")
     kg_args = [
         "kg",
         "--documents", docs_path,
         "--features", feats_path,
-        "--obo", REAL_OBO,
+        "--obo", obo_path,
         "--model", bundle,
         "--workdir", work,
         "--cores", "8",
@@ -314,6 +329,11 @@ def test_cli_subprocess_kg_resume_predict_real_obo(spark, tmp_path, onto):
     assert triples.count() == report["triples"]
     preds = {r.pred for r in triples.select("pred").distinct().collect()}
     assert "rdf:type" in preds and "is_a" in preds
+    ids = {
+        r[0]
+        for r in triples.selectExpr("explode(array(subj, obj))").distinct().collect()
+    }
+    assert not (merged_sources & ids), sorted(merged_sources & ids)
     with open(os.path.join(work, "manifest.json")) as f:
         manifest = json.load(f)
     assert all(
@@ -326,7 +346,7 @@ def test_cli_subprocess_kg_resume_predict_real_obo(spark, tmp_path, onto):
     assert report2["triples"] == report["triples"]
 
     # predict from the same bundle the kg run used
-    csv_path = str(tmp_path / "expr_real.csv")
+    csv_path = str(tmp_path / "expr_cl.csv")
     with open(csv_path, "w") as f:
         f.write("sample," + ",".join(GENES) + "\n")
         for r in feats_pdf.head(50).itertuples(index=False):
@@ -334,7 +354,7 @@ def test_cli_subprocess_kg_resume_predict_real_obo(spark, tmp_path, onto):
                 str(r.doc_id) + ","
                 + ",".join(repr(v) for v in r.features) + "\n"
             )
-    out_dir = str(tmp_path / "predict_real")
+    out_dir = str(tmp_path / "predict_cl")
     report3 = run_cli(
         [
             "predict",

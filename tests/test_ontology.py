@@ -358,7 +358,7 @@ def test_three_way_merge_precedence_and_cross_space_xrefs():
     assert "ZZ:0000005" in by_id
     # cross-space xref: the ZZ term carrying xref AA:0000002 lands in
     # the same canonicalization component as the AA term
-    prep = prepare_ontology(onto, term_prefix="AA:")
+    prep = prepare_ontology(onto)
     m = dict(zip(prep["canonical_map"].node, prep["canonical_map"].canonical))
     zz_with_xref = [
         t.term_id

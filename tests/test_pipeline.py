@@ -272,7 +272,7 @@ def test_canonical_rewrite_dedups_only_where_merges_collide(spark):
     )
     merged = ["CS:A", "CS:B"]
 
-    got = canonical_rewrite_triples(raw, cmap, merged)
+    got = canonical_rewrite_triples(raw, cmap, merged, ("CS:",))
     want = (
         raw.join(
             F.broadcast(cmap.selectExpr("node as subj", "canonical as subj_c")),
@@ -302,7 +302,7 @@ def test_canonical_rewrite_dedups_only_where_merges_collide(spark):
     # no merges -> pure pass-through: multiplicity preserved (the
     # distinct-input precondition makes that equal to full dedup), and
     # the optimized plan carries no aggregate/exchange for dedup
-    got_nomerge = canonical_rewrite_triples(raw, cmap, [])
+    got_nomerge = canonical_rewrite_triples(raw, cmap, [], ("CS:",))
     assert got_nomerge.count() == raw.count()
     plan_str = got_nomerge._jdf.queryExecution().optimizedPlan().toString()
     assert "Deduplicate" not in plan_str
@@ -410,7 +410,8 @@ def test_media_triples_stage_opt_in(spark, tmp_path, onto, small_world, pipe):
         for r in canonical_rewrite_triples(
             raw,
             spark.createDataFrame(prep["canonical_map"]),
-            merged_term_set(prep["canonical_map"]),
+            merged_term_set(prep["canonical_map"], ("CS:",)),
+            ("CS:",),
         ).collect()
     }
     assert got_media == want_media
@@ -566,9 +567,9 @@ def test_compact_table_recovers_from_crash_debris(spark, tmp_path):
 def test_pipeline_multi_prefix_cross_space_canonicalization(
     spark, tmp_path
 ):
-    """End-to-end multi-project pipeline path (term_prefix as a
-    TUPLE): two synthetic id spaces where file 2 carries cross-space
-    xrefs into file 1. The canonical rewrite must fire across spaces
+    """End-to-end multi-project pipeline path: two synthetic id spaces
+    where file 2 carries cross-space xrefs into file 1, with the id
+    spaces derived from the merged ontology (no term_prefix passed). The canonical rewrite must fire across spaces
     — every YY term whose xref lands it in an XX component is
     rewritten to the XX id in the triple table — and triples must
     exactly equal the oracle's golden triples after the same rewrite
@@ -604,14 +605,15 @@ def test_pipeline_multi_prefix_cross_space_canonicalization(
         onto,
         weights,
         thresholds,
-        term_prefix=prefixes,
     )
     pipe.run()
     got = pipe.output("triples").toPandas()
 
     # the canonical map must contain cross-space merges, and no merged
     # YY source may survive in the triple table
-    cmap = prepare_ontology(onto, term_prefix=prefixes)["canonical_map"]
+    prep = prepare_ontology(onto)
+    assert prep["term_prefix"] == prefixes
+    cmap = prep["canonical_map"]
     merges = {
         r.node: r.canonical
         for r in cmap.itertuples(index=False)

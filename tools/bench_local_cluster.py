@@ -6,7 +6,8 @@ separate GC, executor-shipped closures, cross-JVM shuffle fetch, and
 `--py-files`-style package shipping via ship_package).
 
 Runs the full KG pipeline at W=1 vs W=4 workers (8 cores each) on the
-same cached input, interleaved best-of-R, and writes
+same cached input (generated on first use by `ensure_input`, which the
+profile/diag scripts share), interleaved best-of-R, and writes
 BENCH/local_cluster.json.
 
 Usage: python tools/bench_local_cluster.py [n_docs] [repeats]
@@ -71,7 +72,7 @@ documents = spark.read.parquet(cache + "/documents")
 features = spark.read.parquet(cache + "/features")
 # warmup includes real multi-task parquet writes: the first full-scale
 # write in a fresh executor JVM pays a large one-time cost at high
-# concurrency (see tools/bench_scaling.py / BENCH/BASELINE.md)
+# concurrency (see BENCH/BASELINE.md)
 warm_docs = min(400_000, max(20_000, n_docs // 10))
 warm_dir = tempfile.mkdtemp(prefix=f"kg_lcw_{{workers}}_", dir=shm)
 try:
@@ -100,6 +101,41 @@ spark.stop()
 """
 
 
+def ensure_input(n_docs: int) -> None:
+    """Generate the cached `.cache/bench/kg_docs_<n_docs>` input once.
+    Deterministic chunked generation (seed varies per chunk, doc ids
+    offset) so multi-million-doc inputs build in bounded memory; features
+    are array<float>. A _COMPLETE marker distinguishes finished inputs
+    from the debris of a killed generation run."""
+    cache = os.path.join(REPO, ".cache", "bench", f"kg_docs_{n_docs}")
+    if os.path.exists(cache + "/_COMPLETE"):
+        return
+    import shutil
+
+    shutil.rmtree(cache, ignore_errors=True)
+    code = f"""
+import sys; sys.path.insert(0, {REPO!r})
+from cello_spark.session import get_spark
+from cello_spark.sources.fixtures import make_ontology, make_documents
+spark = get_spark(cores=8)
+onto = make_ontology()
+CHUNK = 100_000
+n = {n_docs}
+for ci, start in enumerate(range(0, n, CHUNK)):
+    sz = min(CHUNK, n - start)
+    docs, feats, _ = make_documents(onto, n_docs=sz, seed=42 + ci, id_offset=start)
+    mode = 'overwrite' if ci == 0 else 'append'
+    spark.createDataFrame(docs).repartition(8).write.mode(mode).parquet({cache + '/documents'!r})
+    spark.createDataFrame(
+        feats, schema="doc_id string, features array<float>"
+    ).repartition(8).write.mode(mode).parquet({cache + '/features'!r})
+    print('chunk', ci, 'done', flush=True)
+"""
+    subprocess.run([sys.executable, "-c", code], check=True, cwd="/tmp")
+    with open(cache + "/_COMPLETE", "w") as f:
+        f.write("ok\n")
+
+
 def run_level(workers: int, n_docs: int) -> dict:
     total = workers * CORES_PER_WORKER
     cmd = [
@@ -121,6 +157,7 @@ def run_level(workers: int, n_docs: int) -> dict:
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+    ensure_input(n_docs)
     results: dict[int, list[dict]] = {1: [], 4: []}
     for rep in range(repeats):
         for w in (1, 4):

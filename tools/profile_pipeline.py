@@ -1,10 +1,10 @@
 """Per-stage wall-time profile of the KG pipeline at one parallelism
-level — the diagnostic companion to tools/bench_scaling.py. Prints one
+level — the diagnostic companion to tools/bench_local_cluster.py. Prints one
 line per stage plus the end-of-run triple count, so two runs (N and 4N
 cores) reveal where the non-scaling (serial) seconds live.
 
 Usage: python tools/profile_pipeline.py <cores> [n_docs]
-(reads the cached input tools/bench_scaling.py generates)
+(reads the cached input tools/bench_local_cluster.py:ensure_input generates)
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Per-stage scaling profile of the KG pipeline.
 
 Runs the end-to-end pipeline at two parallelism levels (pinned via
-taskset, fresh subprocess each — same protocol as bench_scaling.py)
+taskset, fresh subprocess each — same protocol as bench_local_cluster.py)
 and prints each stage's wall at both levels plus its individual 8→32
 efficiency. This localizes WHERE the scaling loss lives (mention scan?
 linking mapInPandas? triple dedup shuffle? fixed driver cost?) instead
@@ -78,7 +78,7 @@ def main() -> None:
     lo = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     hi = int(sys.argv[3]) if len(sys.argv) > 3 else 32
     sys.path.insert(0, REPO)
-    from tools.bench_scaling import ensure_input
+    from tools.bench_local_cluster import ensure_input
 
     ensure_input(n_docs)
     res = {c: run_level(c, n_docs) for c in (lo, hi)}
