@@ -1028,7 +1028,9 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_points = feats.count()
     n_assigned = kmeans_assign(feats, C).count()
-    decreased = inertia(C) <= inertia(C0) + 1e-9
+    # relative tolerance: inertia is a sum over every point, so its
+    # float error grows with the data, not with an absolute epsilon
+    decreased = inertia(C) <= inertia(C0) * (1 + 1e-9) + 1e-9
     return spark.createDataFrame(
         [
             (
@@ -2226,7 +2228,9 @@ def _duck_h64(col_sql: str) -> str:
 
 # Shared shingle CTE prefix (3-gram shingles over the regex-free
 # tokenizer, shingle-DF cap) — mirrors operators/dedup.shingles +
-# _cap_common_shingles; same fragment as the q_ngram_jaccard oracle.
+# _capped_shingles (the anti-join against the _over_cap set; a count
+# window here gives the same capped rows); same fragment as the
+# q_ngram_jaccard oracle.
 def _duck_shingles(max_df: int) -> str:
     return f"""
             WITH toks AS (

@@ -13,6 +13,20 @@ boilerplate, and map-side-combinable aggregations throughout.
                                    verified with exact Jaccard
 - simhash_pairs                  : 64-bit SimHash + hamming-band join
 
+The shingle-based operators tokenize and shingle each input row
+exactly once: `shingles` emits explode(array_distinct(n-grams)),
+`_capped_shingles` pins that table and drops over-cap shingles with a
+left-anti join against the small over-cap set, and the MinHash
+operators pin one per-doc (doc_id, shingles, sig) table that feeds
+both the band join and the array_intersect verify. On the
+`corpus_dedup` benchmark (600 docs, 4-core / 15 GB box) this took the
+Spark jobs per call from 16 / 11 / 15 to 10 / 8 / 10
+(minhash_lsh_pairs / ngram_jaccard_pairs / jaccard_pairs_cross) and
+the median latency of one pass of all three from 4.21 s to 2.38 s
+over ten seeds; the plan it replaced re-shingled the input for the
+cap's semi-join probe and verified candidates by exploding them
+against both shingle tables.
+
 Embedding near-dup lives in operators/similarity.py (cosine top-k).
 """
 
@@ -39,14 +53,17 @@ DEFAULT_MAX_SHINGLE_DF = 5000
 
 def _pin(df: DataFrame) -> DataFrame:
     """Materialize a multiply-consumed intermediate with an eager
-    localCheckpoint. The capped shingle table (and the signature table
-    in the minhash family) feeds the pair join (twice, l/r), the
-    set-size aggregates, and the verify join — without pinning, each
-    consumer re-runs tokenize -> explode -> dedup -> df-cap join.
-    Measured at sf0.1: minhash_lsh_pairs warm 7.3s -> 4.9s, cold
-    18.2s -> 6.9s. At cluster scale this stores ONE copy of data the
-    plan otherwise recomputes 3-4x — the standard persist-the-index
-    trade."""
+    localCheckpoint. The uncapped shingle table feeds the df-cap count
+    and its anti-join, then the pair join (twice, l/r) and the set-size
+    aggregates; the MinHash per-doc table feeds the band join and both
+    sides of the verify — without pinning, each consumer re-runs
+    tokenize -> explode on the input. Pinning the shingle table BEFORE
+    the cap is what makes each call read its input once: on the
+    600-doc `corpus_dedup` workload (4 cores) the input is evaluated
+    once per row instead of twice, and one minhash_lsh_pairs call runs
+    10 Spark jobs instead of 16. At cluster scale this stores ONE copy
+    of data the plan otherwise recomputes — the standard
+    persist-the-index trade (10x scale probe: BENCH/dedup_scale.json)."""
     return df.localCheckpoint(eager=True)
 
 
@@ -160,37 +177,53 @@ def shingles(
 ) -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, shingle).
     JVM-side n-gram generation (same codegen pattern as mention
-    candidate generation)."""
+    candidate generation); `array_distinct` dedups within the doc's
+    row, so no dropDuplicates shuffle. Precondition: id_col is unique
+    per row (two rows with one id keep both rows' shingles)."""
     toks = ensure_min_partitions(df).select(
         F.col(id_col).alias("doc_id"),
         text_tokens(text_col).alias("tokens"),
     )
-    return (
-        toks.withColumn(
-            "shingle",
-            F.explode(
-                F.expr(
-                    f"""
-                    if(size(tokens) >= {n},
-                       transform(sequence(1, size(tokens) - {n} + 1),
-                                 i -> array_join(slice(tokens, i, {n}), ' ')),
-                       if(size(tokens) > 0, array(array_join(tokens, ' ')), array()))
-                    """
-                )
-            ),
-        )
-        .select("doc_id", "shingle")
-        .dropDuplicates()
+    return toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"""
+                array_distinct(if(size(tokens) >= {n},
+                   transform(sequence(1, size(tokens) - {n} + 1),
+                             i -> array_join(slice(tokens, i, {n}), ' ')),
+                   if(size(tokens) > 0, array(array_join(tokens, ' ')), array())))
+                """
+            )
+        ).alias("shingle"),
     )
 
 
-def _cap_common_shingles(
+def _over_cap(sh: DataFrame, max_df: int) -> DataFrame:
+    """(shingle, df) for every shingle in more than max_df docs — at
+    most rows / (max_df + 1) of them. A combinable count, NOT a
+    whole-partition count window: the window form buffers every row of
+    one shingle in a single task, and the boilerplate shingles the cap
+    exists to drop are exactly the hub groups (10^8-doc shingles)."""
+    return (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+    )
+
+
+def _capped_shingles(
     sh: DataFrame, max_df: int | None, op: str = "jaccard"
 ) -> DataFrame:
-    """Drop shingles occurring in more than max_df docs before any
-    self-join — boilerplate shingles otherwise create O(df²) pairs.
-    Not silent: the cap is logged at plan time, and `shingle_df_stats`
-    reports exactly which shingles a given cap drops."""
+    """Pin the shingle table once (the input is tokenized exactly
+    once), then drop shingles occurring in more than max_df docs before
+    any self-join — boilerplate shingles otherwise create O(df²) pairs.
+    The drop is a left-anti join against the small over-cap set (AQE
+    broadcasts it), so the cap re-reads the pinned rows, never the
+    input. Not silent: the cap is logged at plan time, and
+    `shingle_df_stats` reports exactly which shingles a given cap
+    drops."""
+    sh = _pin(sh)
     if max_df is None:
         _log.warning(
             "%s: max_shingle_df=None — self-join is unbounded on "
@@ -201,19 +234,7 @@ def _cap_common_shingles(
         "%s: dropping shingles with doc-frequency > %d before the "
         "self-join (audit with shingle_df_stats)", op, max_df
     )
-    # combinable count + semi-join against the low-df shingle set —
-    # NOT a whole-partition count window: the window form buffers
-    # every row of one shingle in a single task, and the boilerplate
-    # shingles this cap exists to drop are exactly the hub groups
-    # (10^8-doc shingles). The aggregate reduces map-side; hub rows
-    # then fail the semi-join probe (AQE-splittable) and stream out.
-    low_df = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= max_df)
-        .select("shingle")
-    )
-    return sh.join(low_df, "shingle", "left_semi")
+    return sh.join(_over_cap(sh, max_df).select("shingle"), "shingle", "left_anti")
 
 
 def shingle_df_stats(
@@ -226,13 +247,9 @@ def shingle_df_stats(
     """Audit the shingle cap: (shingle, df) for every shingle the cap
     would drop, most frequent first. Run this when tuning
     max_shingle_df on a new corpus."""
-    return (
-        shingles(df, id_col, text_col, n)
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_shingle_df)
-        .orderBy(F.desc("df"))
-    )
+    return _over_cap(
+        shingles(df, id_col, text_col, n), max_shingle_df
+    ).orderBy(F.desc("df"))
 
 
 # ---------------------------------------------------------------------------
@@ -266,20 +283,6 @@ def _jaccard_tail(pairs: DataFrame, shl: DataFrame, shr: DataFrame,
     )
 
 
-def _jaccard_from_candidates(cands: DataFrame, shl: DataFrame,
-                             shr: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard restricted to an explicit candidate-pair set
-    (a, b): common-shingle counts only for candidates, then the
-    shared size/ratio tail."""
-    common = (
-        cands.join(shl.withColumnRenamed("doc_id", "a"), "a")
-        .join(shr.withColumnRenamed("doc_id", "b"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return _jaccard_tail(common, shl, shr, threshold)
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -296,16 +299,12 @@ def ngram_jaccard_pairs(
     dropped from BOTH the index and the set sizes, so the reported
     jaccard is over the capped shingle sets (consistent, auditable via
     shingle_df_stats)."""
-    sh = _pin(
-        _cap_common_shingles(
-            shingles(df, id_col, text_col, n), max_shingle_df,
-            op="ngram_jaccard_pairs",
-        )
+    sh = _capped_shingles(
+        shingles(df, id_col, text_col, n), max_shingle_df,
+        op="ngram_jaccard_pairs",
     )
-    # probe side spread across task slots: pair enumeration explodes
-    # |bucket|² rows, which must not run in one coalesced partition
     pairs = (
-        ensure_min_partitions(sh).alias("l")
+        sh.alias("l")
         .join(sh.alias("r"), "shingle")
         .filter(F.col("l.doc_id") < F.col("r.doc_id"))
         .groupBy(
@@ -335,11 +334,11 @@ def portable_hash64_sql(col_sql: str) -> str:
     return f"cast(conv(substr(md5({col_sql}), 1, 15), 16, 10) as bigint)"
 
 
-def _hash64(col_sql: str, hash_strategy: str):
+def _hash64_sql(col_sql: str, hash_strategy: str) -> str:
     if hash_strategy == "xxhash64":
-        return F.expr(f"xxhash64({col_sql})")
+        return f"xxhash64({col_sql})"
     if hash_strategy == "md5":
-        return F.expr(portable_hash64_sql(col_sql))
+        return portable_hash64_sql(col_sql)
     raise ValueError(f"unknown hash_strategy {hash_strategy!r}")
 
 
@@ -361,86 +360,109 @@ def minhash_signatures(
     seed: int = 42,
     hash_strategy: str = "xxhash64",
 ) -> DataFrame:
-    """(doc_id, sig: array<long>) — k-permutation MinHash over shingle
-    hash values using (a*h + b) mod p universal hashing in
-    GF(2^31-1). One groupBy(doc_id): each permutation is a
-    min-aggregate, all JVM-side (map-side partial min → tiny shuffle).
+    """(doc_id, shingles: array<string>, sig: array<long>) — one row
+    per doc: its shingle set and its k-permutation MinHash over the
+    shingle hash values, using (a*h + b) mod p universal hashing in
+    GF(2^31-1). One groupBy(doc_id) collects the shingles and their
+    hashes; the signature is then ONE array expression per doc,
+    sig[i] = min over h of (a_i*h + b_i) mod p, all JVM-side.
     hash_strategy='md5' swaps xxhash64 for the portable md5-prefix
     hash (DuckDB-replicable, slower)."""
     coeffs = minhash_coeffs(num_hashes, seed)
-    h = sh.withColumn(
-        "h", F.pmod(_hash64("shingle", hash_strategy), F.lit(_MERSENNE))
-    )
-    aggs = [
-        F.min(
-            (F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)
-        ).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    wide = h.groupBy("doc_id").agg(*aggs)
-    return wide.select(
-        "doc_id", F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("sig")
+    ca = ", ".join(str(a) for a, _ in coeffs)
+    cb = ", ".join(str(b) for _, b in coeffs)
+    h = F.pmod(F.expr(_hash64_sql("shingle", hash_strategy)), F.lit(_MERSENNE))
+    return (
+        sh.groupBy("doc_id")
+        .agg(F.collect_list("shingle").alias("shingles"), F.collect_list(h).alias("h"))
+        .select(
+            "doc_id",
+            "shingles",
+            F.expr(
+                f"zip_with(array({ca}), array({cb}), (a, b) -> "
+                f"array_min(transform(h, x -> (x * a + b) % {_MERSENNE})))"
+            ).alias("sig"),
+        )
     )
 
 
-def _banded_signatures(
-    sig: DataFrame, bands: int, rows_per_band: int, hash_strategy: str
+def _band_candidates(
+    sig_l: DataFrame,
+    sig_r: DataFrame,
+    num_hashes: int,
+    bands: int,
+    hash_strategy: str,
 ) -> DataFrame:
-    """(doc_id, band, band_hash): LSH band keys from a signature table
-    — one posexplode, band keys are uniformly-distributed hashes
-    (immune to content skew). Shared by the self-join and cross-corpus
-    variants so their bucketing cannot diverge."""
-    band_fn = (
-        "xxhash64(%s)"
-        if hash_strategy == "xxhash64"
-        else portable_hash64_sql("%s")
+    """Distinct (a, b) doc pairs sharing any LSH band key; a < b when
+    sig_l and sig_r are the same table. One posexplode per side, band
+    keys are uniformly-distributed hashes (immune to content skew).
+    Shared by the self-join and cross-corpus variants so their
+    bucketing cannot diverge."""
+    assert num_hashes % bands == 0
+    r = num_hashes // bands
+    band_key = _hash64_sql(f"array_join(slice(sig, b * {r} + 1, {r}), ',')", hash_strategy)
+
+    def banded(sig: DataFrame) -> DataFrame:
+        return sig.select(
+            "doc_id",
+            F.posexplode(
+                F.expr(f"transform(sequence(0, {bands - 1}), b -> {band_key})")
+            ).alias("band", "band_hash"),
+        )
+
+    self_join = sig_r is sig_l
+    bl = banded(sig_l)
+    pairs = ensure_min_partitions(bl).alias("l").join(
+        (bl if self_join else banded(sig_r)).alias("r"), ["band", "band_hash"]
     )
-    band_key = band_fn % (
-        f"array_join(slice(sig, b * {rows_per_band} + 1, {rows_per_band}), ',')"
-    )
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {bands - 1}), b -> {band_key})")
-        ).alias("band", "band_hash"),
-    )
+    if self_join:
+        pairs = pairs.filter(F.col("l.doc_id") < F.col("r.doc_id"))
+    return pairs.select(
+        F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
+    ).dropDuplicates()
 
 
-def _estimate_prefilter(
+def _verify_candidates(
     cands: DataFrame,
     sig_l: DataFrame,
     sig_r: DataFrame,
     threshold: float,
     num_hashes: int,
 ) -> DataFrame:
-    """Signature-estimate prefilter before exact verification:
-    est(J) = fraction of agreeing minhash components, computed
-    pair-local from the two signatures (JVM zip_with, no extra
-    shuffle). Low-threshold configs (wide bands) otherwise admit
-    nearly all pairs as candidates and the exact-verify join fans out
-    |cands| x |shingles per doc| rows. An unbiased estimator with
-    k=num_hashes components has std ~sqrt(J(1-J)/k); the margin keeps
-    the prefilter recall-safe."""
+    """(a, b, jaccard) for the candidates whose EXACT capped-shingle
+    Jaccard is ≥ threshold. Each candidate row is joined to both docs'
+    (shingles, sig) once; on that row a signature-estimate prefilter
+    (fraction of agreeing MinHash components, std ~sqrt(J(1-J)/k); the
+    3-sigma margin keeps it recall-safe) skips the set intersection
+    for pairs that cannot qualify, and the survivors are verified with
+    size(array_intersect) — no per-shingle explode, join or groupBy."""
     margin = 3.0 * (0.25 / num_hashes) ** 0.5
+
+    def side(sig: DataFrame, k: str) -> DataFrame:
+        return sig.select(
+            F.col("doc_id").alias(k), F.col("shingles").alias(f"sh_{k}"),
+            F.col("sig").alias(f"sig_{k}"),
+        )
+
+    agree = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
+    )
+    # common > 0: a band-key or 31-bit shingle-hash collision can pair
+    # two docs that share no shingle; like the count-common join,
+    # report only pairs that share one
+    common = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        cands.join(
-            sig_l.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a")), "a"
-        )
-        .join(
-            sig_r.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b")), "b"
-        )
+        cands.join(side(sig_l, "a"), "a")
+        .join(side(sig_r, "b"), "b")
+        .filter(agree / F.lit(float(num_hashes)) >= threshold - margin)
+        .select("a", "b", common.alias("common"), F.size("sh_a").alias("sz_a"),
+                F.size("sh_b").alias("sz_b"))
         .withColumn(
-            "est_j",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda v: v,
-                )
-            )
-            / F.lit(float(num_hashes)),
+            "jaccard",
+            F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
         )
-        .filter(F.col("est_j") >= threshold - margin)
-        .select("a", "b")
+        .filter((F.col("common") > 0) & (F.col("jaccard") >= threshold))
+        .select("a", "b", "jaccard")
     )
 
 
@@ -462,35 +484,23 @@ def minhash_lsh_pairs(
     EXACT shingle Jaccard (the returned `jaccard` is exact, so output ⊆
     ngram_jaccard_pairs; LSH only bounds recall).
 
-    Scale: signatures are one aggregate; banding is an explode(bands) →
-    groupBy(band, band_hash) — shuffle keys are uniformly-distributed
+    Scale: one pinned per-doc table (shingle set + signature) feeds
+    the banding and the verification; banding is an explode(bands) →
+    join on (band, band_hash) — shuffle keys are uniformly-distributed
     hashes, immune to content skew."""
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    sh = _cap_common_shingles(
+    sh = _capped_shingles(
         shingles(df, id_col, text_col, n), max_shingle_df,
         op="minhash_lsh_pairs",
     )
-    if verify:  # a single consumer (the signatures) when not verifying
-        sh = _pin(sh)
     sig = _pin(
         minhash_signatures(
             sh, num_hashes=num_hashes, seed=seed, hash_strategy=hash_strategy
         )
     )
-    banded = _banded_signatures(sig, bands, rows_per_band, hash_strategy)
-    cands = (
-        ensure_min_partitions(banded).alias("l")
-        .join(banded.alias("r"), ["band", "band_hash"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .dropDuplicates()
-    )
+    cands = _band_candidates(sig, sig, num_hashes, bands, hash_strategy)
     if not verify:
         return cands
-    est = _estimate_prefilter(cands, sig, sig, threshold, num_hashes)
-    # exact-Jaccard verification of surviving candidates only
-    return _jaccard_from_candidates(est, sh, sh, threshold)
+    return _verify_candidates(cands, sig, sig, threshold, num_hashes)
 
 
 # ---------------------------------------------------------------------------
@@ -514,7 +524,7 @@ def simhash(
     toks = ensure_min_partitions(df).select(
         F.col(id_col).alias("doc_id"),
         F.explode(text_tokens(text_col)).alias("tok"),
-    ).withColumn("h", _hash64("tok", hash_strategy))
+    ).withColumn("h", F.expr(_hash64_sql("tok", hash_strategy)))
     votes = [
         F.sum(
             F.when(F.expr(f"(h >> {b}) & 1") == 1, 1).otherwise(-1)
@@ -600,12 +610,10 @@ def _cross_capped_shingles(
     conservative, never under-caps)."""
     shl = shingles(left, id_col, text_col, n).withColumn("side", F.lit("l"))
     shr = shingles(right, id_col, text_col, n).withColumn("side", F.lit("r"))
-    # pin the UNION-capped table once: both side-slices and all their
+    # one pinned table for the union: both side-slices and all their
     # downstream consumers read the same stored blocks instead of each
-    # re-running both corpora's shingling + the union df-cap
-    both = _pin(
-        _cap_common_shingles(shl.unionByName(shr), max_shingle_df, op=op)
-    )
+    # re-running both corpora's shingling
+    both = _capped_shingles(shl.unionByName(shr), max_shingle_df, op=op)
     return (
         both.filter(F.col("side") == "l").drop("side"),
         both.filter(F.col("side") == "r").drop("side"),
@@ -638,7 +646,7 @@ def jaccard_pairs_cross(
         "jaccard_pairs_cross",
     )
     pairs = (
-        ensure_min_partitions(shl).alias("l")
+        shl.alias("l")
         .join(shr.alias("r"), "shingle")
         .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .agg(F.count(F.lit(1)).alias("common"))
@@ -671,8 +679,6 @@ def minhash_lsh_pairs_cross(
     persist it bucketed by (band, band_hash) and each new crawl
     increment joins against it without re-shingling the reference
     corpus. Band keys are uniform hashes: no content skew."""
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     shl, shr = _cross_capped_shingles(
         left, right, n, id_col, text_col, max_shingle_df,
         "minhash_lsh_pairs_cross",
@@ -687,22 +693,11 @@ def minhash_lsh_pairs_cross(
             shr, num_hashes=num_hashes, seed=seed, hash_strategy=hash_strategy
         )
     )
-    cands = (
-        ensure_min_partitions(
-            _banded_signatures(sig_l, bands, rows_per_band, hash_strategy)
-        ).alias("l")
-        .join(
-            _banded_signatures(sig_r, bands, rows_per_band, hash_strategy)
-            .alias("r"),
-            ["band", "band_hash"],
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .dropDuplicates()
-    )
+    cands = _band_candidates(sig_l, sig_r, num_hashes, bands, hash_strategy)
     if not verify:
         return cands
-    est = _estimate_prefilter(cands, sig_l, sig_r, threshold, num_hashes)
-    return _jaccard_from_candidates(est, shl, shr, threshold)
+    return _verify_candidates(cands, sig_l, sig_r, threshold, num_hashes)
+
 
 # ---------------------------------------------------------------------------
 # Span-level exact dedup (C4-style duplicate-paragraph removal)

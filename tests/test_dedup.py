@@ -340,6 +340,108 @@ def test_cross_cap_drops_union_boilerplate(spark):
     assert len(full) == 9 and all(abs(r.jaccard - 1.0) < 1e-12 for r in full)
 
 
+def test_dedup_ops_tokenize_each_input_once(spark):
+    """Each shingle-based pair operator reads and tokenizes each input
+    row exactly once: the text passes through a Python identity UDF
+    that counts its evaluations."""
+    evals = spark.sparkContext.accumulator(0)
+
+    def count(text):
+        evals.add(1)
+        return text
+
+    counted = F.udf(count, "string")
+
+    def wrap(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string").select(
+            "doc_id", counted("text").alias("text")
+        )
+
+    ops = {
+        "minhash_lsh_pairs": lambda: D.minhash_lsh_pairs(
+            wrap(CORPUS), threshold=0.5, num_hashes=64, bands=32
+        ),
+        "ngram_jaccard_pairs": lambda: D.ngram_jaccard_pairs(
+            wrap(CORPUS), threshold=0.3
+        ),
+        "jaccard_pairs_cross": lambda: D.jaccard_pairs_cross(
+            wrap(LEFT_CORPUS), wrap(RIGHT_CORPUS), threshold=0.15
+        ),
+        "minhash_lsh_pairs_cross": lambda: D.minhash_lsh_pairs_cross(
+            wrap(LEFT_CORPUS), wrap(RIGHT_CORPUS), threshold=0.5,
+            num_hashes=64, bands=16,
+        ),
+    }
+    for name, op in ops.items():
+        evals.value = 0
+        assert op().collect(), name
+        assert evals.value == len(CORPUS), name
+
+
+# a 3-gram in max_shingle_df + 1 docs: the cap drops it, which lowers
+# docs 1-4's set sizes, lifts (1, 5) and (3, 6) to >= 0.5 and leaves
+# (3, 4) — sharing only the boilerplate — with no common shingle
+HUB_MAX_DF = 3
+HUB_CORPUS = [
+    (1, "copyright acme corp alpha beta gamma delta epsilon"),
+    (2, "copyright acme corp alpha beta gamma delta zeta"),
+    (3, "copyright acme corp one two three four five"),
+    (4, "copyright acme corp six seven eight nine ten"),
+    (5, "alpha beta gamma delta epsilon"),
+    (6, "one two three four five six"),
+]
+
+
+def _capped_jaccard_oracle(corpus, max_df, threshold, n=3):
+    sets = {}
+    for i, text in corpus:
+        toks = _py_tokens(text)
+        sets[i] = {" ".join(toks[k:k + n]) for k in range(len(toks) - n + 1)}
+    df = {}
+    for s in sets.values():
+        for g in s:
+            df[g] = df.get(g, 0) + 1
+    capped = {i: {g for g in s if df[g] <= max_df} for i, s in sets.items()}
+    out = {}
+    for a, b in itertools.combinations(sorted(capped), 2):
+        common = len(capped[a] & capped[b])
+        if common:
+            j = common / (len(capped[a]) + len(capped[b]) - common)
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def test_self_join_cap_drops_hub_shingle(spark):
+    """The self-join family's shingle cap: pairs and Jaccard values are
+    over the capped sets, with set sizes counted after the cap."""
+    docs = spark.createDataFrame(HUB_CORPUS, "doc_id long, text string")
+    uncapped = _capped_jaccard_oracle(HUB_CORPUS, len(HUB_CORPUS), 0.01)
+    for threshold in (0.01, 0.5):
+        want = _capped_jaccard_oracle(HUB_CORPUS, HUB_MAX_DF, threshold)
+        assert want != {k: v for k, v in uncapped.items() if v >= threshold}
+        runs = {
+            "ngram": D.ngram_jaccard_pairs(
+                docs, threshold=threshold, max_shingle_df=HUB_MAX_DF
+            ),
+        }
+        if threshold == 0.5:
+            # 64 bands of 2 rows: P(miss | J >= 0.5) <= 0.75^64 ~ 1e-8
+            runs["minhash"] = D.minhash_lsh_pairs(
+                docs, threshold=threshold, num_hashes=128, bands=64,
+                max_shingle_df=HUB_MAX_DF, verify=True,
+            )
+        for name, df in runs.items():
+            got = {(r.a, r.b): r.jaccard for r in df.collect()}
+            assert set(got) == set(want), (name, threshold)
+            for k, j in want.items():
+                assert abs(got[k] - j) < 1e-12, (name, k)
+    assert (3, 4) in uncapped
+    assert _capped_jaccard_oracle(HUB_CORPUS, HUB_MAX_DF, 0.5) == {
+        (1, 2): 4 / 6, (1, 5): 3 / 5, (3, 6): 3 / 6,
+    }
+
+
 # ---------------------------------------------------------------------------
 # Paragraph-level dedup
 # ---------------------------------------------------------------------------
