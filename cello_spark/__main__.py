@@ -30,22 +30,23 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
-    p.add_argument("--cores", type=int, default=os.cpu_count() or 8)
+    # None: get_spark sizes it ($SPARK_GRAFT_CPUS, else all cores)
+    p.add_argument("--cores", type=int, default=None)
     p.add_argument("--shuffle-partitions", type=int, default=None)
 
 
 def _spark(args):
     from cello_spark.session import get_spark
 
-    kw = {"cores": args.cores}
-    if args.shuffle_partitions is not None:
-        kw["shuffle_partitions"] = args.shuffle_partitions
-    return get_spark(app_name="cello_spark_cli", **kw)
+    return get_spark(
+        app_name="cello_spark_cli",
+        cores=args.cores,
+        shuffle_partitions=args.shuffle_partitions,
+    )
 
 
 def cmd_predict(args) -> int:
@@ -108,11 +109,14 @@ def cmd_kg(args) -> int:
         thresholds,
         include_media_triples=args.media_triples,
     )
+    results = pipe.run()
     stages = [
         {"stage": r.name, "rows": r.rows, "skipped": r.skipped}
-        for r in pipe.run()
+        for r in results
     ]
-    n_triples = pipe.output("triples").count()
+    # the triples stage's committed row count (from its parquet
+    # footers, or its manifest entry on a resumed run): no count job
+    n_triples = next(r.rows for r in results if r.name == "triples")
     print(json.dumps({"kg": stages, "triples": n_triples}))
     return 0
 

@@ -40,9 +40,9 @@ def tokens(col: str | Column = "text") -> Column:
     Empties drop via `array_remove`, not `filter(…, t -> t != '')`:
     higher-order-function lambdas evaluate interpreted per element,
     and this expression runs once per text span — measured
-    (tools/diag_tokenizer.py, 4M docs) the HOF form costs 75.6 JVM
-    core-sec at local[8] vs 52.3 for array_remove (identical
-    output), and 99.0 vs 78.0 at local[32]."""
+    (BENCH/BASELINE.md "Tokenizer drop-empty shape", 4M docs) the
+    HOF form costs 75.6 JVM core-sec at local[8] vs 52.3 for
+    array_remove (identical output), and 99.0 vs 78.0 at local[32]."""
     c = F.col(col) if isinstance(col, str) else col
     folded = F.translate(F.lower(c), "\t\n\r", "   ")
     return F.array_remove(F.split(folded, " "), "")

@@ -20,7 +20,9 @@ Reference semantics reproduced (behavior, not code):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from cello_spark import oracle
 
 
 def _fresh(df: DataFrame) -> DataFrame:
@@ -96,12 +98,13 @@ def transitive_closure_auto(
     rels: tuple[str, ...] | None = ("is_a",),
     driver_side_max_edges: int = 200_000,
 ) -> DataFrame:
-    """Closure with a size-based cutover: ontology-scale graphs (the
-    KG pipeline's case — CL has ~6.6k terms) are BFS'd on the driver
-    and shipped back as one DataFrame (zero shuffle, zero iteration
-    jobs); larger graphs fall back to the iterative self-join
-    operator. The scale burden in this pipeline is on the document
-    side, never the ontology side (SURVEY §7.4)."""
+    """Closure with a size-based cutover: graphs up to
+    `driver_side_max_edges` edges (ontology scale — CL has ~6.6k
+    terms) are closed on the driver by `oracle.closure_pairs`, the BFS
+    `prepare_ontology` runs, and shipped back as one DataFrame (zero
+    shuffle, zero iteration jobs); larger graphs fall back to the
+    iterative self-join operator. The scale burden in this pipeline is
+    on the document side, never the ontology side (SURVEY §7.4)."""
     base = edges
     if rels is not None:
         base = base.filter(F.col("rel").isin(list(rels)))
@@ -109,63 +112,37 @@ def transitive_closure_auto(
     n = base.limit(driver_side_max_edges + 1).count()
     if n > driver_side_max_edges:
         return transitive_closure(edges, rels=rels)
-    pairs = [(r.src, r.dst) for r in base.collect()]
-    parents: dict[str, set[str]] = {}
-    for c, p in pairs:
-        parents.setdefault(c, set()).add(p)
-    out: list[tuple[str, str]] = []
-    for node in parents:
-        seen: set[str] = set()
-        frontier = set(parents[node])
-        while frontier:
-            seen |= frontier
-            frontier = {g for f in frontier for g in parents.get(f, ())} - seen
-        out.extend((node, a) for a in seen if a != node)
-    spark = edges.sparkSession
+    pairs = oracle.closure_pairs([(r.src, r.dst) for r in base.collect()])
+    # a node on a cycle reaches itself; the distributed operator drops
+    # self-pairs, so the driver side does too
+    out = [(d, a) for d, a in pairs if d != a]
     # schema derived from the INPUT edge types so the result type does
     # not depend on which side of the cutover the graph lands on
     # (round-1 verdict: long-keyed graphs flipped to string here)
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("descendant", base.schema["src"].dataType),
             T.StructField("ancestor", base.schema["dst"].dataType),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return edges.sparkSession.createDataFrame(out, schema)
 
 
 def connected_components_auto(
     pairs: DataFrame, driver_side_max_edges: int = 200_000
 ) -> DataFrame:
-    """Connected components with the same size cutover: union-find on
-    the driver for dictionary-scale alias graphs, iterative min-id
-    propagation otherwise."""
+    """Connected components with the same size cutover: the
+    `oracle.connected_components` union-find (the one
+    `prepare_ontology` runs) on the driver for dictionary-scale alias
+    graphs, iterative min-id propagation otherwise."""
     p = pairs.select("a", "b").dropDuplicates()
     n = p.limit(driver_side_max_edges + 1).count()
     if n > driver_side_max_edges:
         return connected_components(pairs)
-    rows = [(r.a, r.b) for r in p.collect()]
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    out = [(node, find(node)) for node in parent]
-    spark = pairs.sparkSession
+    comp = oracle.connected_components([(r.a, r.b) for r in p.collect()])
     # preserve the input node type across the cutover (see
     # transitive_closure_auto); a/b must share one type for min-id
     # component labels to be meaningful at all
-    from pyspark.sql import types as T
-
     a_t = p.schema["a"].dataType
     b_t = p.schema["b"].dataType
     if a_t != b_t:
@@ -176,7 +153,7 @@ def connected_components_auto(
     schema = T.StructType(
         [T.StructField("node", a_t), T.StructField("component", a_t)]
     )
-    return spark.createDataFrame(out, schema)
+    return pairs.sparkSession.createDataFrame(list(comp.items()), schema)
 
 
 def anatomical_filter(

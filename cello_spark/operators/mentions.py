@@ -189,9 +189,9 @@ def detect_mentions(
     # build per-position arrays" form) evaluate INTERPRETED per
     # element; their per-position Scala-collection allocation
     # anti-scales with task parallelism on a shared heap (measured
-    # ~2.8x core-second inflation local[8]→local[32],
-    # tools/diag_ngram_variants.py). This shape keeps the whole
-    # stage — explode → gate → explode → join — in one
+    # ~2.8x core-second inflation local[8]→local[32], BENCH/BASELINE.md
+    # "Lambda-free n-gram candidate builder"). This shape keeps the
+    # whole stage — explode → gate → explode → join — in one
     # WholeStageCodegen span with the document side never shuffled.
     #
     # The explode ships each position's NEXT max_n-1 tokens alongside

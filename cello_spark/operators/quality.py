@@ -15,11 +15,12 @@ Scale design:
   lambda-free (the arrays_zip/posexplode window pattern from the
   mention stage — nested higher-order-function lambdas evaluate
   interpreted per element and anti-scale on a shared heap, measured
-  in tools/diag_ngram_variants.py), `stack` unpivots the per-n grams
-  in the same codegen span, then exactly TWO shuffles: a map-side
-  combinable count on (doc, n, gram) and the per-doc conditional
-  aggregate. Gram keys are doc-scoped so there is no hub-key skew.
-  Line stats are pure per-row column expressions (no shuffle).
+  in BENCH/BASELINE.md "Lambda-free n-gram candidate builder"),
+  `stack` unpivots the per-n grams in the same codegen span, then
+  exactly TWO shuffles: a map-side combinable count on (doc, n, gram)
+  and the per-doc conditional aggregate. Gram keys are doc-scoped so
+  there is no hub-key skew. Line stats are pure per-row column
+  expressions (no shuffle).
 - gopher_quality_filter: repetition_stats + per-row signals, one
   doc_id equi-join (both sides already partitioned by doc_id from
   the aggregate; AQE handles the residual exchange).

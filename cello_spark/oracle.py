@@ -54,9 +54,9 @@ def ancestors(edges: list[tuple[str, str]], node: str) -> set[str]:
 
 
 def closure_pairs(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
-    """All (descendant, ancestor) pairs, no self-pairs. The
-    child->parent map is built once, not once per node as a loop over
-    `ancestors` would."""
+    """All (descendant, ancestor) pairs; a node pairs with itself only
+    on a cycle. The child->parent map is built once, not once per node
+    as a loop over `ancestors` would."""
     parents = _parent_map(edges)
     nodes = {n for e in edges for n in e}
     return {(n, a) for n in nodes for a in _bfs(parents, n)}

@@ -21,8 +21,9 @@ where semantically required. The distributed equivalents of the
 ontology-side algorithms (iterative transitive closure, min-id
 connected components, anti-join most-specific) live in
 operators/graph.py — pytest-verified against the same oracle and
-exposed through __spark_entry__ queries — and kick in automatically
-via the *_auto variants when a graph exceeds the driver cutover.
+exposed through __spark_entry__ queries — but this pipeline does not
+use them: prepare_ontology always runs oracle.closure_pairs and
+oracle.connected_components on the driver, at any ontology size.
 
 Inputs arrive via the ctx dict (documents/features as DataFrames,
 ontology bundle driver-side) so the same wiring runs on fixtures in

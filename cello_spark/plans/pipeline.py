@@ -41,6 +41,29 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+def _write_lineage(
+    sdir: str, name: str, pids: list[int], counts: list[int]
+) -> None:
+    """Replace ``<sdir>/_lineage`` with one parquet file of
+    (partition_id int32, rows int64, stage string) rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lin_dir = os.path.join(sdir, "_lineage")
+    shutil.rmtree(lin_dir, ignore_errors=True)
+    os.makedirs(lin_dir, exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "partition_id": pa.array(pids, pa.int32()),
+                "rows": pa.array(counts, pa.int64()),
+                "stage": pa.array([name] * len(pids), pa.string()),
+            }
+        ),
+        os.path.join(lin_dir, "part-00000.parquet"),
+    )
+
+
 @dataclass
 class StageResult:
     name: str
@@ -247,7 +270,6 @@ class Pipeline:
         """Per-partition lineage from the parquet footers of the files
         the write job produced (file part-NNNNN ↔ task partition NNNNN;
         num_rows lives in the footer metadata). Driver-side only."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
@@ -267,19 +289,7 @@ class Pipeline:
         with ThreadPoolExecutor(max_workers=16) as ex:
             counts = list(ex.map(_rows, names))
         pids = [int(f.split("-")[1]) for f in names]
-        lin_dir = os.path.join(sdir, "_lineage")
-        shutil.rmtree(lin_dir, ignore_errors=True)
-        os.makedirs(lin_dir, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "partition_id": pa.array(pids, pa.int32()),
-                    "rows": pa.array(counts, pa.int64()),
-                    "stage": pa.array([name] * len(pids), pa.string()),
-                }
-            ),
-            os.path.join(lin_dir, "part-00000.parquet"),
-        )
+        _write_lineage(sdir, name, pids, counts)
         return int(sum(counts))
 
     def _write_tiny(self, pdf, name: str, sdir: str, tmp_dir: str, data_dir: str) -> int:
@@ -297,19 +307,7 @@ class Pipeline:
         shutil.rmtree(data_dir, ignore_errors=True)
         os.makedirs(sdir, exist_ok=True)
         os.replace(tmp_dir, data_dir)
-        lin_dir = os.path.join(sdir, "_lineage")
-        shutil.rmtree(lin_dir, ignore_errors=True)
-        os.makedirs(lin_dir, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "partition_id": pa.array([0], pa.int32()),
-                    "rows": pa.array([len(pdf)], pa.int64()),
-                    "stage": pa.array([name], pa.string()),
-                }
-            ),
-            os.path.join(lin_dir, "part-00000.parquet"),
-        )
+        _write_lineage(sdir, name, [0], [len(pdf)])
         return len(pdf)
 
     def output(self, name: str) -> DataFrame:

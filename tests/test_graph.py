@@ -183,6 +183,29 @@ def test_auto_cutover_preserves_input_types(spark):
         tuple(r) for r in cc_big.collect()
     }
 
+    # a cycle (1 → 2 → 3 → 1), a self-loop (4 → 4) and a tail into the
+    # cycle (5 → 1): cycle nodes reach themselves, and both paths drop
+    # those self-pairs
+    cyclic = spark.createDataFrame(
+        [(1, 2, "is_a"), (2, 3, "is_a"), (3, 1, "is_a"), (4, 4, "is_a"),
+         (5, 1, "is_a")],
+        "src long, dst long, rel string",
+    )
+    want = {(d, a) for d in (1, 2, 3, 5) for a in (1, 2, 3) if d != a}
+    small = G.transitive_closure_auto(cyclic)
+    big = G.transitive_closure_auto(cyclic, driver_side_max_edges=0)
+    assert {(r.descendant, r.ancestor) for r in small.collect()} == want
+    assert {(r.descendant, r.ancestor) for r in big.collect()} == want
+
+    pairs = spark.createDataFrame(
+        [(10, 20), (20, 30), (30, 10), (40, 40), (50, 30)], "a long, b long"
+    )
+    cc_small = G.connected_components_auto(pairs)
+    cc_big = G.connected_components_auto(pairs, driver_side_max_edges=0)
+    assert {tuple(r) for r in cc_small.collect()} == {
+        tuple(r) for r in cc_big.collect()
+    } == {(10, 10), (20, 10), (30, 10), (50, 10), (40, 40)}
+
 
 def test_anatomical_filter(spark):
     """P5 (cello/cello.py:707-733): drop a term and ALL its subterms

@@ -6,9 +6,8 @@ separate GC, executor-shipped closures, cross-JVM shuffle fetch, and
 `--py-files`-style package shipping via ship_package).
 
 Runs the full KG pipeline at W=1 vs W=4 workers (8 cores each) on the
-same cached input (generated on first use by `ensure_input`, which the
-profile/diag scripts share), interleaved best-of-R, and writes
-BENCH/local_cluster.json.
+same cached input (generated on first use by `ensure_input`),
+interleaved best-of-R, and writes BENCH/local_cluster.json.
 
 Usage: python tools/bench_local_cluster.py [n_docs] [repeats]
 """
