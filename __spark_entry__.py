@@ -531,11 +531,10 @@ def q_onn_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_group_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The de-hubbed distributed per-group sorted rank
-    (partitioning.per_group_sorted_index): rank of every document
-    within its source, doc_id order — exactly row_number() over
-    (PARTITION BY source ORDER BY doc_id) - 1, computed without a
-    single-task hub sort."""
+    """The per-group sorted rank (partitioning.per_group_sorted_index):
+    rank of every document within its source, doc_id order — exactly
+    row_number() over (PARTITION BY source ORDER BY doc_id) - 1, with
+    the plan picked by the largest source's row count."""
     from cello_spark.partitioning import per_group_sorted_index
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
@@ -545,16 +544,16 @@ def q_group_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_group_rank_dehub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_group_rank with the de-hubbed path FORCED (probe_skew=False):
-    at sf0.01 the skew probe routes q_group_rank through the plain
-    window, so this twin keeps the range-partitioned rank machinery
-    (localCheckpoint-pinned __rpid, null-safe offsets join) under
-    cross-engine verification too."""
-    from cello_spark.partitioning import per_group_sorted_index
+    """q_group_rank through the range-partitioned rank, called
+    directly: at sf0.01 no source exceeds partitioning.HUB_ROWS, so
+    q_group_rank takes the plain window, and this twin keeps the
+    range-partitioned rank machinery (localCheckpoint-pinned __rpid,
+    null-safe offsets join) under cross-engine verification too."""
+    from cello_spark.partitioning import range_sorted_index
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return per_group_sorted_index(
-        docs, ["source"], ["doc_id"], idx_col="rank_idx", probe_skew=False
+    return range_sorted_index(
+        docs, ["source"], ["doc_id"], idx_col="rank_idx"
     ).select("doc_id", "source", "rank_idx")
 
 
@@ -989,21 +988,15 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cello_spark.operators.clustering import (
         kmeans_assign,
         kmeans_fit,
-        kmeanspp_init,
+        kmeans_init,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     feats = emb.select(
         F.col("vec_id").alias("item"), F.col("embedding").alias("features")
     )
-    # re-derive the SAME deterministic init kmeans_fit uses (sorted
-    # sample → seeded k-means++)
-    init_rows = feats.orderBy("item").limit(4096).collect()
-    S = np.stack(
-        [np.asarray(r["features"], dtype=np.float64) for r in init_rows]
-    )
-    C0 = kmeanspp_init(S, 8, 42)
-    C = kmeans_fit(feats, k=8, n_iter=10)
+    C0 = kmeans_init(feats, 8)
+    C = kmeans_fit(feats, k=8, n_iter=10, init=C0)
 
     def inertia(Cm: np.ndarray) -> float:
         bc = spark.sparkContext.broadcast(np.asarray(Cm, dtype=np.float64))
@@ -1989,21 +1982,6 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_cap_per_stratum_dehub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_cap_per_stratum with the two-phase salted top-k FORCED
-    (hub_rows=1): at sf0.01 the skew probe routes the default query
-    through the single window, so this twin keeps the bucketed
-    pre-cap machinery under cross-engine verification."""
-    from cello_spark.operators.corpus import cap_per_stratum
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        cap_per_stratum(docs, 20, strata_col="source", hub_rows=1)
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    )
-
-
 def q_cap_per_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap (the C4/RefinedWeb limit-pages-per-
     domain rule): at most 20 docs per source, survivors chosen by
@@ -2122,7 +2100,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_group_rank": q_group_rank,
         "q_group_rank_dehub": q_group_rank_dehub,
         "q_cap_per_stratum": q_cap_per_stratum,
-        "q_cap_per_stratum_dehub": q_cap_per_stratum_dehub,
         "q_hvg_topn": q_hvg_topn,
         "q_transitive_reduction": q_transitive_reduction,
         "q_topo_layers": q_topo_layers,
@@ -4053,17 +4030,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL SELECT * FROM func
         """,
         "q_cap_per_stratum": f"""
-            SELECT doc_id, source FROM (
-              SELECT doc_id, source,
-                     row_number() OVER (
-                       PARTITION BY source
-                       ORDER BY {_duck_h64("cast(doc_id AS VARCHAR)")} ASC,
-                                doc_id ASC
-                     ) AS rk
-              FROM documents
-            ) WHERE rk <= 20
-        """,
-        "q_cap_per_stratum_dehub": f"""
             SELECT doc_id, source FROM (
               SELECT doc_id, source,
                      row_number() OVER (

@@ -167,10 +167,9 @@ def main() -> None:
     # amortizes across jobs.
     for t in ("lineitem", "orders", "part", "customer", "supplier",
               "nation", "region", "events", "documents", "embeddings"):
-        try:
-            spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-        except Exception:
-            pass
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            spark.read.parquet(path).count()
     # pre-fork the Python worker pool (see session.warm_python_workers:
     # first-mapInPandas spin-up is a one-time ~10-15s session tax on
     # this box, amortized to nothing by a long-lived cluster's reused
@@ -213,12 +212,14 @@ def main() -> None:
     # flagship on the REAL Cell Ontology (6,634 terms) when the
     # reference OBO is readable — the fixture ontology can't expose
     # real-alias-dictionary or closure-size assumptions
-    kg_real = None
     real_obo = os.environ.get(
         "SPARK_GRAFT_REAL_OBO",
         "/root/reference/cello/onto_lib_py3/obo/CL.18-11-13.obo",
     )
-    if os.path.exists(real_obo):
+    if not os.path.exists(real_obo):
+        kg_real = {"skipped": f"{real_obo} not found"}
+        print(f"# kg_real_obo skipped: {real_obo} not found", file=sys.stderr)
+    else:
         sys.path.insert(
             0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
         )

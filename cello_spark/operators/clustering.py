@@ -19,7 +19,7 @@ partial-sum block, the driver reduces blocks in partition order
 shuffle at any point; the feature table never moves. At 100 TB this is
 the same plan: k·d floats per partition to the driver per iteration.
 
-Determinism: init = seeded k-means++ over the sample of the
+Determinism: init (`kmeans_init`) = seeded k-means++ over the
 `sample_size` LOWEST-id items (one small orderBy + limit + collect —
 the D² sampling runs driver-side on that sample with a fixed-seed
 generator); ties in assignment break to the lowest centroid id
@@ -74,30 +74,54 @@ def kmeanspp_init(
     return X[idx].astype(np.float64).copy()
 
 
+def _sorted_sample(
+    features: DataFrame, k: int, sample_size: int, id_col: str, features_col: str
+) -> np.ndarray:
+    """The `sample_size` lowest-id feature rows as a float64 matrix (one
+    small orderBy + limit + collect — the same global top-k at any
+    parallelism); raises if fewer than k items exist."""
+    rows = (
+        features.select(id_col, features_col)
+        .orderBy(id_col)
+        .limit(max(sample_size, k))
+        .collect()
+    )
+    if len(rows) < k:
+        raise ValueError(f"k-means: k={k} but only {len(rows)} items")
+    return np.stack([np.asarray(r[features_col], dtype=np.float64) for r in rows])
+
+
+def kmeans_init(
+    features: DataFrame,
+    k: int,
+    sample_size: int = 4096,
+    seed: int = 42,
+    id_col: str = "item",
+    features_col: str = "features",
+) -> np.ndarray:
+    """The deterministic k×d init `kmeans_fit` starts from: seeded
+    k-means++ over the `sample_size` lowest-id items."""
+    return kmeanspp_init(
+        _sorted_sample(features, k, sample_size, id_col, features_col), k, seed
+    )
+
+
 def kmeans_fit(
     features: DataFrame,  # (item, features: array<double>)
     k: int,
     n_iter: int = 20,
     id_col: str = "item",
     features_col: str = "features",
-    sample_size: int = 4096,
-    seed: int = 42,
+    init: np.ndarray | None = None,
 ) -> np.ndarray:
     """Fit k centroids with Lloyd iterations (map-side partial sums
-    only — see module docstring). Returns the k×d centroid matrix."""
+    only — see module docstring) from `init`, default
+    `kmeans_init(features, k)`. Returns the k×d centroid matrix."""
     spark = features.sparkSession
     feats = features.select(
         F.col(id_col).alias("item"), F.col(features_col).alias("features")
     ).persist()
-    init_rows = feats.orderBy("item").limit(max(sample_size, k)).collect()
-    if len(init_rows) < k:
-        raise ValueError(
-            f"kmeans_fit: k={k} but only {len(init_rows)} items"
-        )
-    S = np.stack(
-        [np.asarray(r["features"], dtype=np.float64) for r in init_rows]
-    )
-    C = kmeanspp_init(S, k, seed)
+    C = kmeans_init(feats, k) if init is None else np.asarray(init, dtype=np.float64)
     d = C.shape[1]
 
     for _ in range(n_iter):
@@ -172,15 +196,7 @@ def kmeans_fit_sample(
     clustering the full table's mass distribution.
     `normalize=True` L2-normalizes the sample rows (spherical
     k-means over directions)."""
-    rows = (
-        features.select(id_col, features_col)
-        .orderBy(id_col)
-        .limit(max(sample_size, k))
-        .collect()
-    )
-    if len(rows) < k:
-        raise ValueError(f"kmeans_fit_sample: k={k} but only {len(rows)} items")
-    X = np.stack([np.asarray(r[features_col], dtype=np.float64) for r in rows])
+    X = _sorted_sample(features, k, sample_size, id_col, features_col)
     if normalize:
         X = X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
     C = kmeanspp_init(X, k, seed)

@@ -415,7 +415,6 @@ def cap_per_stratum(
     strata_col: str = "source",
     id_col: str = "doc_id",
     salt: str = "",
-    hub_rows: int = 262_144,
 ) -> DataFrame:
     """Deterministic per-stratum cap: keep at most n_max rows per
     stratum — the "limit pages per domain" rule web-corpus pipelines
@@ -425,12 +424,10 @@ def cap_per_stratum(
     is a uniform, reproducible sample of each stratum — identical
     across re-runs, partitionings, and engines.
 
-    Scale: two-phase top-k (partitioning.capped_per_group) — phase 1
-    pre-caps within (stratum, hash-salt bucket) so a giant stratum is
-    sorted by n_buckets tasks instead of one; phase 2 ranks at most
-    n_buckets * n_max survivors per stratum, a bound set by the
-    parameters, not the data. Output is identical to the
-    single-window form."""
+    Scale: one rank window through partitioning.capped_per_group.
+    For n_max <= 1000 Spark's map-side WindowGroupLimit keeps at most
+    n_max rows per stratum per map task before the stratum shuffle,
+    so a giant stratum never reaches one task whole."""
     if n_max < 1:
         raise ValueError(f"n_max must be >= 1, got {n_max}")
     from cello_spark.partitioning import capped_per_group
@@ -448,8 +445,6 @@ def cap_per_stratum(
             [strata_col],
             ["__h", id_col],
             n_max,
-            bucket_key=id_col,
-            hub_rows=hub_rows,
         )
         .drop("__h")
     )

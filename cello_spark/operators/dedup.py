@@ -77,18 +77,19 @@ def exact_duplicates(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_ids: int = 100,
-    hub_rows: int = 262_144,
 ) -> DataFrame:
     """Groups of byte-identical (normalized) docs: returns
     (fingerprint, n_dups, keep_id, dup_ids, n_ids_omitted) for groups
     of size > 1. dup_ids holds the id-order-first `max_ids` member ids
     — an explicit cap, never the whole group: a boilerplate page
     duplicated 10^8 times across a crawl would otherwise put 10^8 ids
-    in ONE array/row (the unbounded-collect_list hazard). The capped
-    membership comes from partitioning.capped_per_group (two-phase
-    top-k when the group is hub-sized), so no task ever aggregates
-    more than max_ids ids per fingerprint; n_ids_omitted says what the
-    cap dropped. Pass max_ids=None only on inputs known small.
+    in ONE array/row (the unbounded-collect_list hazard). The cap is
+    partitioning.capped_per_group over every fingerprint, applied
+    before the restriction to duplicates: its map-side
+    WindowGroupLimit keeps at most max_ids ids per fingerprint per map
+    task ahead of the fingerprint shuffle, so no task receives a whole
+    hub group. n_ids_omitted says what the cap dropped. Pass
+    max_ids=None only on inputs known small.
 
     .. versionchanged:: round 4
        Output contract change: dup_ids used to hold the FULL group
@@ -97,9 +98,10 @@ def exact_duplicates(
        explicitly (and accept the hub-group hazard that motivated the
        cap); callers reading positionally must account for the new
        trailing ``n_ids_omitted`` column."""
+    from cello_spark.partitioning import capped_per_group
+
     # pinned: the fingerprint projection (md5 over all text) feeds the
-    # group aggregate, the duplicate semi-join, and the cap — one scan
-    # instead of three
+    # group aggregate and the cap — one scan instead of two
     fp = _pin(
         df.select(
             F.col(id_col).alias("doc_id"),
@@ -114,23 +116,15 @@ def exact_duplicates(
         )
         .filter(F.col("n_dups") > 1)
     )
-    # restrict to actual duplicates BEFORE the cap/collect: on a
-    # typical corpus >99% of fingerprints are singletons and would
-    # otherwise flow through the rank shuffle only to be dropped by
-    # the final inner join
-    dups = fp.join(groups.select("fingerprint"), "fingerprint", "left_semi")
-    if max_ids is None:
-        members = dups
-    else:
-        from cello_spark.partitioning import capped_per_group
-
-        # hub_rows forwards to capped_per_group's skew probe: groups
-        # larger than it take the two-phase top-k instead of a single
-        # window task (lower it in tests to force that path)
-        members = capped_per_group(
-            dups, ["fingerprint"], ["doc_id"], n_max=max_ids,
-            hub_rows=hub_rows,
-        )
+    members = (
+        fp
+        if max_ids is None
+        else capped_per_group(fp, ["fingerprint"], ["doc_id"], n_max=max_ids)
+    )
+    # the singletons (>99% of fingerprints on a typical corpus) leave
+    # before the collect_list aggregate; the capped side is already
+    # partitioned by fingerprint, so this semi-join adds no shuffle
+    members = members.join(groups.select("fingerprint"), "fingerprint", "left_semi")
     ids = members.groupBy("fingerprint").agg(
         F.array_sort(F.collect_list("doc_id")).alias("dup_ids")
     )

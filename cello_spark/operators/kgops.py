@@ -26,7 +26,7 @@ definitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 _KEY = ["subj", "pred", "obj"]
 
@@ -114,7 +114,6 @@ def kg_negative_samples(
     k: int = 2,
     seed: int = 42,
     corrupt: str = "obj",
-    hub_rows: int = 262_144,
 ) -> DataFrame:
     """Type-consistent negative sampling for KG-embedding training
     (TransE / DistMult style): for every positive (s, p, o) emit up to
@@ -132,24 +131,25 @@ def kg_negative_samples(
     negatives — standard practice; callers wanting exactly k re-draw
     with a second seed.
 
-    Scale: the domain index is a range-partitioned distributed rank
-    (partitioning.per_group_sorted_index) — a predicate whose entity
-    domain is huge (an rdf:type-like predicate with 10^8 objects)
-    spans many range partitions instead of being ONE task's window
-    sort; corruption requests join the indexed domain on (pred, idx)
-    — a uniform hash key, no hub skew — and the false-negative filter
-    is one anti-join on the triple key. No driver-side collection, no
-    broadcast of unbounded domains."""
+    Scale: the domain index is partitioning.sized_sorted_index, chosen
+    by the largest domain size (already aggregated for the draw): a
+    plain window when every domain fits partitioning.HUB_ROWS, else
+    the range-partitioned rank, so a huge domain (an rdf:type-like
+    predicate with 10^8 objects) spans many range partitions instead
+    of being ONE task's window sort; corruption requests join the
+    indexed domain on (pred, idx) — a uniform hash key, no hub skew —
+    and the false-negative filter is one anti-join on the triple key.
+    No driver-side collection, no broadcast of unbounded domains."""
     if corrupt not in ("obj", "subj"):
         raise ValueError(f"corrupt must be 'obj' or 'subj', got {corrupt!r}")
     if k < 1:
         # sequence(0, k-1) descends for k <= 0, silently emitting
         # draws 0 and -1 — reject instead
         raise ValueError(f"k must be >= 1, got {k}")
-    from cello_spark.partitioning import per_group_sorted_index
+    from cello_spark.partitioning import sized_sorted_index
 
     # the distinct triple key is read by the domain derivation, the
-    # skew-probe action below, the corruption requests, and the final
+    # domain-size action below, the corruption requests, and the final
     # false-negative anti-join — materialize it ONCE (same trade as
     # kg_random_walks / the dedup `_pin`s) so those consumers probe
     # stored blocks instead of re-running the dedup shuffle.
@@ -160,20 +160,11 @@ def kg_negative_samples(
     )
     ent_col = corrupt
     ents = t.select("pred", F.col(ent_col).alias("ent")).dropDuplicates()
-    # domain sizes are needed for the mod-draw anyway — reuse them as
-    # the skew probe instead of paying per_group_sorted_index's own
-    # probe pass (one count-aggregate job serves both)
+    # domain sizes are needed for the mod-draw anyway — their maximum
+    # picks the rank plan, so no separate probe job runs
     dom_sizes = ents.groupBy("pred").agg(F.count(F.lit(1)).alias("dom_sz"))
     mx = (dom_sizes.agg(F.max("dom_sz")).first()[0]) or 0
-    if mx <= hub_rows:
-        w = Window.partitionBy("pred").orderBy("ent")
-        dom = ents.withColumn(
-            "idx", (F.row_number().over(w) - 1).cast("int")
-        )
-    else:
-        dom = per_group_sorted_index(
-            ents, ["pred"], ["ent"], idx_col="idx", probe_skew=False
-        )
+    dom = sized_sorted_index(ents, ["pred"], ["ent"], mx)
     reqs = (
         t.join(dom_sizes, "pred")
         .select(
@@ -233,7 +224,6 @@ def kg_random_walks(
     walk_len: int = 4,
     walks_per_node: int = 1,
     seed: int = 42,
-    hub_rows: int = 262_144,
 ) -> DataFrame:
     """Deterministic uniform random walks over the directed triple
     graph — the corpus generator for node-embedding training
@@ -248,10 +238,12 @@ def kg_random_walks(
     Output: (start, walk, path, n_steps) with path the '->'-joined
     node sequence (walk_len edges at most).
 
-    Scale: the adjacency index is a range-partitioned distributed
-    rank (partitioning.per_group_sorted_index) — a hub node's
-    neighbor list spans many range partitions instead of being ONE
-    task's window sort; each of the walk_len steps is two equi-joins
+    Scale: the adjacency index is partitioning.sized_sorted_index,
+    chosen by the largest out-degree (already aggregated for the
+    draw): a plain window when every degree fits
+    partitioning.HUB_ROWS, else the range-partitioned rank, so a hub
+    node's neighbor list spans many range partitions instead of being
+    ONE task's window sort; each of the walk_len steps is two equi-joins
     (frontier ⋈ degree, frontier ⋈ adjacency on (node, idx)) — join
     keys are nodes, so hub-heavy graphs inherit AQE skew splitting;
     the frontier never grows (|nodes| x walks_per_node rows
@@ -264,9 +256,9 @@ def kg_random_walks(
             f"need walk_len >= 1 and walks_per_node >= 1, got "
             f"{walk_len}/{walks_per_node}"
         )
-    from cello_spark.partitioning import per_group_sorted_index
+    from cello_spark.partitioning import sized_sorted_index
 
-    # the edge list is read by the skew probe, the degree table, the
+    # the edge list is read by the degree table and its maximum, the
     # adjacency index, and every one of the walk_len step joins —
     # materialize it ONCE (eager localCheckpoint) so all consumers
     # probe stored blocks instead of re-running the dedup shuffle
@@ -278,18 +270,11 @@ def kg_random_walks(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    # out-degrees are needed for the mod-draw anyway — reuse them as
-    # the skew probe (one count-aggregate job serves both). When a
-    # hub node exists the index routes through the de-hubbed rank.
+    # out-degrees are needed for the mod-draw anyway — their maximum
+    # picks the rank plan, so no separate probe job runs
     deg = e.groupBy("cur").agg(F.count(F.lit(1)).alias("d"))
     mx = (deg.agg(F.max("d")).first()[0]) or 0
-    if mx <= hub_rows:
-        w = Window.partitionBy("cur").orderBy("nxt")
-        adj = e.withColumn("idx", (F.row_number().over(w) - 1).cast("int"))
-    else:
-        adj = per_group_sorted_index(
-            e, ["cur"], ["nxt"], idx_col="idx", probe_skew=False
-        )
+    adj = sized_sorted_index(e, ["cur"], ["nxt"], mx)
     frontier = (
         e.select(F.col("cur").alias("start"))
         .dropDuplicates()

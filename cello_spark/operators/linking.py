@@ -395,32 +395,26 @@ def link_results_long(linked: DataFrame, labels: list[str]) -> DataFrame:
     )
 
 
-def typing_triples(linked: DataFrame, dedup_within_row: bool = False) -> DataFrame:
+def typing_triples(linked: DataFrame) -> DataFrame:
     """(doc, rdf:type, label) for the selected label and its ancestors
     (the reference's ancestor-filled final binary,
     cello/cello.py:875-891).
 
-    No global dedup here: `linked` carries one row per doc_id and
+    No dedup here: `linked` carries one row per doc_id and
     final_labels is distinct within a row (np.nonzero column indices
     in link_documents), so the output is already distinct — a
     dropDuplicates would be a pure-overhead full shuffle of every
-    typing triple. The pipeline's triples stage dedups once AFTER
-    canonical rewrite (where collapses can genuinely create
-    duplicates).
-
-    dedup_within_row=True guards hand-built rows with repeated labels
-    via array_distinct. It is OFF by default because ArrayDistinct
-    evaluates per row with a fresh hash set (no codegen) and that
-    allocation anti-scales on a shared JVM heap — measured 8.4→30.0
-    core-sec (8→32 cores) vs 0.7→1.1 for the plain explode on the same
-    4M-doc input, i.e. it alone tripled this stage's core cost at high
-    parallelism for a guarantee link_documents already provides."""
-    labels = F.array_distinct("final_labels") if dedup_within_row else F.col("final_labels")
+    typing triple, and an array_distinct per row (no codegen, a fresh
+    hash set per row) measured 8.4→30.0 core-sec (8→32 cores) vs
+    0.7→1.1 for the plain explode on a 4M-doc input. The pipeline's
+    triples stage dedups once AFTER canonical rewrite (where collapses
+    can genuinely create duplicates). Hand-built rows with repeated
+    labels therefore yield repeated triples."""
     return (
         linked.filter(F.col("most_specific") != "")
         .select(
             F.col("doc_id").alias("subj"),
-            F.explode(labels).alias("obj"),
+            F.explode("final_labels").alias("obj"),
         )
         .withColumn("pred", F.lit("rdf:type"))
         .select("subj", "pred", "obj")

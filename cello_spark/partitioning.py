@@ -36,90 +36,94 @@ def ensure_min_partitions(
     return df.repartition(n, key) if key else df.repartition(n)
 
 
+# Largest group a plain row_number window may sort in one task. An
+# absolute bound, deliberately NOT relative to the input size (that
+# would re-admit giant groups on giant inputs). Read at call time, so
+# tests can lower it to force the range-partitioned rank.
+HUB_ROWS = 262_144
+
+
 def per_group_sorted_index(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[str],
     idx_col: str = "idx",
     num_partitions: int | None = None,
-    probe_skew: bool = True,
-    hub_rows: int = 262_144,
 ) -> DataFrame:
     """0-based rank of each row in its group's (order_cols)-sorted
-    order, computed WITHOUT a per-group single-task window sort.
+    order: exactly `row_number().over(partitionBy(group)) - 1`.
 
-    `row_number().over(Window.partitionBy(group))` sends every row of
-    a group to ONE task's sort — the hub-key hazard: a predicate with
-    10^8 distinct objects, or a hub node's adjacency list, becomes a
-    single straggler (or OOM) at scale. This helper computes the exact
-    same global per-group rank via order-preserving range partitioning:
+    One map-side-combinable aggregate measures the largest group, and
+    `sized_sorted_index` picks the plan from that count. Callers that
+    already hold the per-group counts call `sized_sorted_index`
+    directly and skip this probe job."""
+    largest = (
+        df.groupBy(*group_cols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.max("__n"))
+        .first()[0]
+    ) or 0
+    return sized_sorted_index(
+        df, group_cols, order_cols, largest, idx_col, num_partitions
+    )
 
-    1. `repartitionByRange(group_cols + order_cols)` — each partition
-       holds a contiguous slice of the global sort order, bounded by
-       ~|df|/num_partitions rows regardless of group sizes (a hub
-       group simply spans several consecutive partitions);
-    2. a local `row_number` windowed on (range-partition id, group) —
-       every window partition is a subset of one range partition, so
-       no task ever sorts more than a partition's worth of rows;
-    3. per-(partition, group) counts (a tiny table: at most one row
-       per group per partition it touches, and groups are contiguous,
-       so its size is ~n_groups + num_partitions) prefix-summed over
-       partition ids within each group give the offset of each
-       partition's slice;
-    4. offset + local rank - 1 = the exact global per-group rank —
-       invariant to where the (sampled) range boundaries fall, so the
-       output is deterministic even though the partitioning isn't.
 
-    The offsets join key is (partition id, group) — bounded by the
-    range-partition size, never a hub key. order_cols must be a total
-    order within each group (callers dedupe first); ties across rows
-    would make ranks partition-dependent.
+def sized_sorted_index(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    largest: int,
+    idx_col: str = "idx",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """The one hub rule: given the row count of `df`'s largest group,
+    rank with the plain `row_number` window (one shuffle, each group
+    sorted in one task) when that count is at most HUB_ROWS, and with
+    `range_sorted_index` otherwise."""
+    if largest <= HUB_ROWS:
+        w = Window.partitionBy(*group_cols).orderBy(*order_cols)
+        return df.withColumn(idx_col, (F.row_number().over(w) - 1).cast("int"))
+    return range_sorted_index(df, group_cols, order_cols, idx_col, num_partitions)
 
-    `part` (the ranged data + its partition ids) feeds BOTH the local
-    ranks and the per-partition counts. __rpid comes from sampled
-    range boundaries, so the two consumers MUST observe the same
-    physical partitioning — relying on Catalyst exchange reuse for
-    that is a silent-wrong-answer hazard (reuse can be disabled via
-    spark.sql.exchange.reuse, or the subtrees can stop canonicalizing
-    identically). It is therefore pinned with an eager
-    localCheckpoint: __rpid is then a property of stored blocks, not
-    of a re-runnable sample. The checkpoint also computes the ranged
-    data ONCE for consumers that probe the result repeatedly
-    (kg_random_walks probes it walk_len times). Cost: executor
-    block-storage of one copy of df and loss of lineage-based
-    recovery for those blocks (an executor loss fails-and-retries the
-    job instead of recomputing the partition) — the right trade for a
-    correctness dependency. The offsets join uses null-safe equality
-    on the group columns so NULL group keys rank as their own group,
-    exactly like the row_number window this replaces.
-    With `probe_skew=True` (default) a one-pass map-side-combinable
-    aggregate first measures the largest group; when no group exceeds
-    `hub_rows` (an absolute single-task-sort bound — deliberately NOT
-    relative to input size, which would re-admit giant groups on
-    giant inputs) the plain `row_number` window is used instead — a
-    single shuffle, no
-    checkpoint, and a per-task sort bounded by the probed maximum.
-    The de-hubbed machinery only engages when a hub group actually
-    exists, so small/even inputs pay the cheap plan and skewed inputs
-    the safe one. The probe is one count-aggregate job (rows = one
-    per group, combined map-side); pass probe_skew=False to force the
-    de-hubbed path (plan tests do).
-    """
+
+def range_sorted_index(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    idx_col: str = "idx",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """The rank of `per_group_sorted_index`, computed without sorting
+    any group in one task (a predicate's 10^8 objects or a hub node's
+    adjacency list would otherwise be one straggler, or an OOM):
+
+    1. `repartitionByRange(group_cols + order_cols)`: each partition
+       holds a contiguous slice of the global sort order, ~|df| /
+       num_partitions rows whatever the group sizes;
+    2. a local `row_number` over (range-partition id, group), so no
+       task sorts more than one partition;
+    3. per-(partition, group) counts, ~n_groups + num_partitions rows,
+       prefix-summed over partition ids within each group, give each
+       slice's offset;
+    4. offset + local rank - 1 is the global rank wherever the sampled
+       range boundaries fall, so the output is deterministic.
+
+    order_cols must be a total order within each group (callers
+    dedupe first). The offsets join is keyed by (partition id, group),
+    never a bare hub key, and is null-safe, so NULL group keys rank as
+    their own group, as in the window.
+
+    The ranged data is pinned with an eager localCheckpoint: its
+    partition ids come from sampled boundaries, and the local ranks
+    and the counts must see the same partitioning, which exchange
+    reuse does not guarantee (spark.sql.exchange.reuse can be off).
+    The pin also computes it once for callers that probe the result
+    repeatedly (kg_random_walks, walk_len times). It costs one stored
+    copy of df, and an executor loss fails the job instead of
+    recomputing the lost blocks."""
     spark = df.sparkSession
     n = num_partitions or max(spark.sparkContext.defaultParallelism, 1)
     cols = [*group_cols, *order_cols]
-    if probe_skew:
-        mx = (
-            df.groupBy(*group_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .agg(F.max("__n"))
-            .first()[0]
-        ) or 0
-        if mx <= hub_rows:
-            w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-            return df.withColumn(
-                idx_col, (F.row_number().over(w) - 1).cast("int")
-            )
     part = (
         df.repartitionByRange(n, *cols)
         .withColumn("__rpid", F.spark_partition_id())
@@ -156,64 +160,24 @@ def capped_per_group(
     group_cols: list[str],
     order_cols: list[str],
     n_max: int,
-    n_buckets: int = 64,
-    bucket_key: str | None = None,
-    probe_skew: bool = True,
-    hub_rows: int = 262_144,
 ) -> DataFrame:
-    """Keep the first n_max rows per group in (order_cols) order — the
-    distributed two-phase top-k that replaces a single
-    `row_number().over(partitionBy(group)) <= n_max` window.
+    """Keep the first n_max rows per group in (order_cols) order: one
+    `row_number` window plus a `rank <= n_max` filter.
 
-    Phase 1 pre-caps within (group, hash-salt bucket): each bucket's
-    window task sorts ~|group|/n_buckets rows, so a hub group is split
-    across n_buckets tasks instead of one. Phase 2 ranks the survivors
-    — at most n_buckets * n_max rows per group, a bound set by the
-    PARAMETERS, not the data — and keeps the global first n_max.
-    Output is identical to the single-window form because phase 1 can
-    never evict a row that is within the global top n_max (each bucket
-    keeps its own top n_max, a superset of its contribution to the
-    global top n_max).
-
-    bucket_key defaults to the first order column; pass an id column
-    when order_cols start with a computed expression's column.
-
-    As in per_group_sorted_index, `probe_skew=True` (default) first
-    measures the largest group with one map-side-combinable
-    aggregate; when no group exceeds hub_rows the single-window form
-    runs directly (Spark's WindowGroupLimit pushes the rank filter
-    below the sort, so the probed-bounded group never fully sorts in
-    one task). Skewed inputs take the two-phase path.
-    """
+    Spark plans this as a distributed top-k for
+    n_max <= spark.sql.optimizer.windowGroupLimitThreshold (1000 by
+    default): a `WindowGroupLimit ... Partial` in every map task keeps
+    each task's first n_max rows per group before the shuffle, and a
+    `Final` one after it, so a hub group reaches its reducer as at most
+    n_max rows per map task. At n_max = 1001 Spark plans a plain window
+    instead: each group is sorted in one task, which spills on a hub
+    but still gives the right rows. A constant group key is planned as
+    `TakeOrderedAndProject`."""
     if n_max < 1:
         raise ValueError(f"n_max must be >= 1, got {n_max}")
-    if probe_skew:
-        mx = (
-            df.groupBy(*group_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .agg(F.max("__n"))
-            .first()[0]
-        ) or 0
-        if mx <= hub_rows:
-            w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-            return (
-                df.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= n_max)
-                .drop("__rk")
-            )
-    key = bucket_key or order_cols[0]
-    bucketed = df.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets))
-    )
-    w1 = Window.partitionBy("__bkt", *group_cols).orderBy(*order_cols)
-    pre = (
-        bucketed.withColumn("__rk", F.row_number().over(w1))
-        .filter(F.col("__rk") <= n_max)
-        .drop("__bkt", "__rk")
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
-        pre.withColumn("__rk", F.row_number().over(w2))
+        df.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= n_max)
         .drop("__rk")
     )

@@ -467,11 +467,15 @@ def select_hvg(
     selected columns to original order). Tie-break on equal dispersion
     is (gene_id asc) — deterministic, unlike numpy argsort[::-1].
 
-    Plan: one groupBy(gene) aggregate (map-side partials) + a single
-    rank window over the GENE DIM (≤~60k rows — one tiny partition,
-    not a scale hazard). Output (gene_id, mean, var, dispersion)."""
+    Plan: one groupBy(gene) aggregate (map-side partials), then a
+    total-order top-n_top (orderBy + limit), which Spark plans as
+    TakeOrderedAndProject: each task keeps its own n_top genes and one
+    task merges those, so n_top has no size bound. Output
+    (gene_id, mean, var, dispersion)."""
     if method not in ("seurat", "cell_ranger", "dispersion"):
         raise ValueError(f"select_hvg: unknown method {method!r}")
+    if n_top < 1:
+        raise ValueError(f"select_hvg: n_top must be >= 1, got {n_top}")
     if n_samples is None:
         n_samples = long_df.select("sample_id").distinct().count()
     n = float(n_samples)
@@ -491,20 +495,7 @@ def select_hvg(
     stats = stats.withColumn(
         "dispersion", F.coalesce(disp, F.lit(0.0))
     )
-    # global top-n_top over the gene dim without a bare global window
-    # (capped_per_group with a constant group key: phase 1 pre-caps in
-    # hash buckets, the final rank only sees <= n_buckets * n_top
-    # survivors — parameter-bounded, not data-bounded)
-    from cello_spark.partitioning import capped_per_group
-
-    top = capped_per_group(
-        stats.withColumn("__g", F.lit(1)),
-        ["__g"],
-        [F.desc("dispersion"), F.asc("gene_id")],
-        n_max=n_top,
-        bucket_key="gene_id",
-        probe_skew=False,
-    ).drop("__g")
+    top = stats.orderBy(F.desc("dispersion"), F.asc("gene_id")).limit(n_top)
     return top.orderBy("gene_id")
 
 

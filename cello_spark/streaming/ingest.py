@@ -8,14 +8,18 @@ mention detection runs as the SAME stateless operator used in batch
 (operators/mentions.detect_mentions — streaming reuses the batch plan,
 nothing is reimplemented), and outputs append to the mentions table.
 
-Two processing styles:
-- `ingest_available_now` : catch-up batch over whatever files are new,
-  then stop — the cron/airflow-style micro-batch. Combined with the
-  stage-level manifest (plans/pipeline.py) this gives file-level
-  incremental resume on the ingest side.
-- `start_ingest_stream`  : continuous micro-batches (caller manages
-  lifecycle) with optional watermarked per-term rate aggregation for
-  monitoring.
+Entry points, all Trigger.AvailableNow catch-up runs (process whatever
+files are new, then stop — the cron/airflow-style micro-batch; with
+the stage-level manifest in plans/pipeline.py this gives file-level
+incremental resume on the ingest side):
+- `ingest_available_now` : new documents → appended mention rows.
+- `run_incremental_kg`   : new documents → canonical typing triples,
+  the batch pipeline's per-document body per micro-batch;
+  `incremental_triples` reads the resulting triple table.
+Stream operators for callers that run their own query:
+`mention_rates` (watermarked per-term windows),
+`stateful_mention_totals` (applyInPandasWithState running totals) and
+`session_windows` (native session_window sessionization).
 
 The per-row span-sequence invariant holds by construction: documents
 are never mutated — mentions are an additive side table keyed by
@@ -27,7 +31,6 @@ from __future__ import annotations
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from cello_spark.operators.mentions import detect_mentions
 
@@ -117,16 +120,6 @@ def stream_documents(
     )
 
 
-def streaming_mentions(
-    documents_stream: DataFrame, alias_dict: DataFrame
-) -> DataFrame:
-    """The batch mention operator applied to a stream — stateless
-    (explode + broadcast joins), so no watermark/state is involved;
-    dedup is skipped (at-least-once per (span, term), see
-    detect_mentions(distinct=False))."""
-    return detect_mentions(documents_stream, alias_dict, distinct=False)
-
-
 def ingest_available_now(
     spark: SparkSession,
     input_dir: str,
@@ -143,7 +136,9 @@ def ingest_available_now(
     `schema` overrides inference (see stream_documents); an empty
     input_dir starts cleanly under DOCUMENT_SCHEMA either way."""
     docs = stream_documents(spark, input_dir, schema=schema)
-    mentions = streaming_mentions(docs, alias_dict)
+    # stateless (explode + broadcast joins): no watermark or state; no
+    # dedup, so mentions are at-least-once per (span, term)
+    mentions = detect_mentions(docs, alias_dict, distinct=False)
     q = (
         mentions.writeStream.format("parquet")
         .option("path", output_dir)
@@ -348,28 +343,6 @@ def incremental_triples(spark: SparkSession, workdir: str) -> DataFrame:
     except AnalysisException:  # no micro-batch has committed yet
         return onto_tr
     return onto_tr.unionByName(typing.select("subj", "pred", "obj"))
-
-
-def start_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    alias_dict: DataFrame,
-    trigger_seconds: int = 30,
-    schema: str | None = None,
-) -> StreamingQuery:
-    """Continuous micro-batch ingest (caller owns the query lifecycle)."""
-    docs = stream_documents(spark, input_dir, schema=schema)
-    mentions = streaming_mentions(docs, alias_dict)
-    return (
-        mentions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
 
 
 def session_windows(

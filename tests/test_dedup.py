@@ -54,8 +54,7 @@ def test_exact_duplicates(spark, docs):
 def test_exact_duplicates_hub_fingerprint_capped(spark):
     """A fingerprint group with 50k copies must NOT materialize a 50k
     array row: dup_ids is capped at max_ids with an explicit omitted
-    count (a truly hub-sized group additionally routes the membership
-    cap through the two-phase top-k per the skew probe)."""
+    count (tests/test_dehub.py pins the cap's map-side plan)."""
     n = 50_000
     hub = spark.range(n).select(
         F.col("id").alias("doc_id"), F.lit("same boilerplate page").alias("text")
@@ -72,35 +71,6 @@ def test_exact_duplicates_hub_fingerprint_capped(spark):
     assert g.n_ids_omitted == n - 7
     assert sorted(g.dup_ids) == list(g.dup_ids)
     assert set(g.dup_ids) <= set(range(n))
-
-
-def test_exact_duplicates_two_phase_cap_matches_window(spark):
-    """Force the two-phase capped_per_group route inside
-    exact_duplicates (hub_rows below the group size) and assert its
-    output is row-identical to the single-window path on the same
-    input — the phase-1 pre-cap may never evict a globally-top-max_ids
-    member."""
-    n = 5_000
-    hub = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.lit("same boilerplate page").alias("text"),
-    )
-    docs2 = hub.unionByName(
-        spark.createDataFrame(
-            [(n + 1, "unique a"), (n + 2, "unique b"), (n + 3, "unique a")],
-            "doc_id long, text string",
-        )
-    )
-    two_phase = D.exact_duplicates(docs2, max_ids=7, hub_rows=100).collect()
-    window = D.exact_duplicates(docs2, max_ids=7).collect()
-    assert sorted(
-        [(r.fingerprint, r.n_dups, r.keep_id, tuple(r.dup_ids), r.n_ids_omitted) for r in two_phase]
-    ) == sorted(
-        [(r.fingerprint, r.n_dups, r.keep_id, tuple(r.dup_ids), r.n_ids_omitted) for r in window]
-    )
-    hub_row = [r for r in two_phase if r.n_dups == n][0]
-    assert hub_row.dup_ids == list(range(7))
-    assert hub_row.n_ids_omitted == n - 7
 
 
 def test_ngram_jaccard_pairs(spark, docs):

@@ -171,18 +171,14 @@ def test_typing_triples_shape(spark, linked_df):
     assert t.select("subj").distinct().count() == n_docs
 
 
-def test_typing_triples_dedup_flag(spark):
-    """Hand-built rows with repeated labels: the default (plain
-    explode, codegen-friendly) emits the duplicates; dedup_within_row
-    restores the array_distinct guard."""
+def test_typing_triples_keeps_repeated_labels(spark):
+    """Hand-built rows with repeated labels: the plain explode
+    (codegen-friendly, no per-row dedup) emits the duplicates."""
     hand = spark.createDataFrame(
         [("d1", "CL:1", ["CL:1", "CL:0", "CL:1"])],
         "doc_id string, most_specific string, final_labels array<string>",
     )
     assert typing_triples(hand).count() == 3
-    deduped = typing_triples(hand, dedup_within_row=True)
-    assert deduped.count() == 2
-    assert {r.obj for r in deduped.collect()} == {"CL:0", "CL:1"}
 
 
 def test_link_documents_clustered(spark, onto, small_world, label_edges):

@@ -284,7 +284,7 @@ def _rand_docs_pdf(rng, n=120, n_sources=5):
                 "text": txt,
             }
         )
-    # one giant stratum so the two-phase cap's hub path is exercised
+    # one giant stratum so the cap sees a hub group
     for i in range(n, n + 60):
         rows.append({"doc_id": f"d{i:04d}", "source": "s0", "text": "alpha"})
     return pd.DataFrame(rows)

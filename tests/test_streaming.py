@@ -164,7 +164,6 @@ def test_stateful_totals_accumulate_and_survive_restart(spark, world, tmp_path):
     from cello_spark.streaming.ingest import (
         stateful_mention_totals,
         stream_documents,
-        streaming_mentions,
     )
 
     alias_df, batch1, batch2 = world
@@ -174,7 +173,9 @@ def test_stateful_totals_accumulate_and_survive_restart(spark, world, tmp_path):
     def run_once():
         totals = {}
         docs = stream_documents(spark, in_dir, max_files_per_trigger=1)
-        out = stateful_mention_totals(streaming_mentions(docs, alias_df))
+        out = stateful_mention_totals(
+            detect_mentions(docs, alias_df, distinct=False)
+        )
 
         def sink(batch_df, batch_id):
             for r in batch_df.collect():
