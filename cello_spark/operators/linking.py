@@ -261,9 +261,10 @@ def link_documents(
     open/close — measured at 1M docs: 80 small scan partitions cost
     2x the Python CPU of 16 right-sized ones). Callers feeding many
     partitions that hold fewer than a few Arrow batches
-    (session.ARROW_MAX_RECORDS rows each) should `coalesce` first —
-    see plans/kg.stage_linked for the sizing rule. Irrelevant at
-    cluster scale, where every scan split holds >>4 batches."""
+    (session.ARROW_MAX_RECORDS rows each) should `coalesce` first.
+    Irrelevant at cluster scale, where every scan split holds >>4
+    batches, and behind a shuffle (the KG pipeline's mention gate),
+    whose output is already sized to the shuffle partitions."""
     spark = features.sparkSession
     bc = spark.sparkContext.broadcast(model)
 

@@ -28,9 +28,12 @@ oracle.connected_components on the driver, at any ontology size.
 Inputs arrive via the ctx dict (documents/features as DataFrames,
 ontology bundle driver-side) so the same wiring runs on fixtures in
 tests, on the bench generator, and on real tables in production.
-Stages 5 and 7 call the per-document body (gate_mentioned,
-link_mentioned, document_triples) that streaming/ingest.py's
-run_incremental_kg runs on every micro-batch.
+Stages 5 and 7 call the per-document body that streaming/ingest.py's
+run_incremental_kg runs on every micro-batch: link_mentioned gates the
+features to mentioned docs (gate_mentioned) before scoring, and
+document_triples types and canonically rewrites the gated linked rows.
+There is one plan at every mention density, so building the pipeline
+runs no Spark job.
 """
 
 from __future__ import annotations
@@ -52,14 +55,7 @@ from cello_spark.sources.ontology import INVERTIBLE_RELS
 # this constant only names the fixture's for callers that pin it.
 TERM_PREFIX = "CS:"
 
-# mentioned-doc fraction above which the linked stage scores ALL
-# features (zero-exchange scan into the scorer, narrow post-join)
-# instead of pre-gating the wide features through a shuffle — see
-# stage_linked. Measured breakeven is high: the exchange the dense
-# plan saves is cheap relative to the extra scoring below ~0.9.
-GATE_SELECTIVITY = 0.9
-
-# documents the density probe samples (estimate_mention_density)
+# sample size of the corpus mention-density statistic
 DENSITY_SAMPLE_DOCS = 4096
 
 # largest non-identity canonical slice the rewrite compiles to a literal
@@ -280,10 +276,10 @@ def build_kg_pipeline(
     `term_prefix` (e.g. ('CL:', 'UO:', 'ZZ:')) only overrides that.
 
     The document side is the per-document KG body shared with
-    streaming.run_incremental_kg — link_mentioned, then
-    document_triples, with the mention gate (gate_mentioned) in one of
-    the two — split over the `linked` and `triples` stages."""
-    raw_features = features  # pre-repartition plan: cheap count source
+    streaming.run_incremental_kg, split over three stages: `mentions`
+    (detect_mentions), `linked` (link_mentioned: mention gate, then
+    scorer) and `triples` (document_triples). Building the pipeline
+    runs no Spark job; every job belongs to Pipeline.run."""
     documents = _ensure_parallelism(documents, spark)
     features = _ensure_parallelism(features, spark)
     prep = prepare_ontology(onto, term_prefix=term_prefix)
@@ -331,73 +327,26 @@ def build_kg_pipeline(
         )
 
     # mention gate: only docs that mention at least one ontology term
-    # contribute typing triples. TWO plans, chosen by sampled density:
-    #
-    #   sparse (mentioned fraction < GATE_SELECTIVITY): the linked
-    #     stage semi-joins the WIDE features against mentioned doc_ids
-    #     BEFORE scoring — the exchange of the surviving features is
-    #     paid to skip scoring the unmentioned majority. linked depends
-    #     on mentions and the stages serialize.
-    #
-    #   dense (most docs mentioned — this bench, and any corpus
-    #     pre-filtered upstream): score EVERYTHING — the features scan
-    #     feeds mapInPandas with ZERO exchange and ZERO dependency on
-    #     the mentions stage, so mention detection (documents input)
-    #     and scoring (features input) run CONCURRENTLY, packing each
-    #     other's ramp/tail/straggler idle; the gate semi-join moves to
-    #     the triples stage, on the NARROW linked rows (doc_id +
-    #     labels, ~5x smaller than the feature vectors).
-    #
-    # Both gates are gate_mentioned with the corpus (SHUFFLE_HASH)
-    # hint. The density probe samples a few thousand documents at
-    # build time (same stats role as a CBO's ANALYZE sample; limit()
-    # keeps it one sub-second job).
-    dense = (
-        estimate_mention_density(
-            documents, spark.createDataFrame(prep["alias_dict"])
-        )
-        >= GATE_SELECTIVITY
-    )
-
+    # contribute typing triples, so the linked stage semi-joins the
+    # WIDE features against the mentioned doc_ids (gate_mentioned,
+    # CORPUS_GATE) BEFORE the Python scorer, and triples reads only
+    # gated linked rows — the body a streaming micro-batch runs. This
+    # is the plan at every mention density. Scoring every doc
+    # concurrently with mention detection and gating the linked rows
+    # afterwards loses even where every doc is mentioned: the two
+    # stages contend for the same cores (0.93x at local[8]), and
+    # choosing between the plans took a build-time limit() sample that
+    # funnels half the corpus into one task (1.2-1.6 s per 8,000-doc
+    # unit on 4 cores, where the gated plan's latency_p50_s is 3.4 s
+    # against 4.9 s; BENCH/BASELINE.md, "One gated KG plan").
     def stage_linked(ctx: dict) -> DataFrame:
-        if dense:
-            # right-size the UDF input: each mapInPandas task costs
-            # ~150ms of fixed Python overhead (task setup, broadcast
-            # unpickle, Arrow stream open/close — measured), so many
-            # small scan partitions double the stage's Python CPU.
-            # Shuffle-free coalesce into core-aligned waves: up to 3
-            # waves of tasks (fewer tasks → less fixed py overhead —
-            # measured 12% on the stage at local[8] vs batch-count-
-            # derived task counts), floored at 2x cores so parallelism
-            # never starves, capped by the ≥4-Arrow-batch task size
-            # when the input is small. (The sparse plan needs none of
-            # this: its exchange already re-sizes to 2x-cores shuffle
-            # partitions. At 100 TB the scan splits hold >>4 batches
-            # each and this is a no-op.)
-            from cello_spark.session import ARROW_MAX_RECORDS
-
-            # count the RAW scan, not the repartition-wrapped plan —
-            # counting `features` would execute the round-robin
-            # exchange _ensure_parallelism added, a full extra shuffle
-            # of every feature row inside the timed stage
-            n_docs = raw_features.count()
-            par = spark.sparkContext.defaultParallelism
-            max_parts = int(n_docs // (4 * ARROW_MAX_RECORDS)) or 1
-            target = max(2 * par, min(3 * par, max_parts))
-            feats_in = features
-            if features.rdd.getNumPartitions() > target:
-                feats_in = features.coalesce(target)
-            return link_mentioned(feats_in, model)
         return link_mentioned(features, model, ctx["mentions"])
 
     def stage_triples(ctx: dict) -> DataFrame:
-        # the dense linked stage scored every doc so it could run
-        # concurrently with mention detection: gate its narrow rows here
         return document_triples(
             ctx["linked"],
             ctx["canonical_map"],
             prep,
-            mentions=ctx["mentions"] if dense else None,
             onto_triples=ctx["onto_triples"],
         )
 
@@ -413,19 +362,18 @@ def build_kg_pipeline(
         )
 
     # stages declare their inputs and run concurrently once those
-    # commit (DAG overlap: in the dense plan mentions and linked share
-    # no input, so each backfills the other's ramp/tail idle)
-    triples_deps = ["onto_triples", "linked", "canonical_map"] + (
-        ["mentions"] if dense else []
-    )
+    # commit: the ontology-side stages and media_triples overlap the
+    # document chain mentions -> linked -> triples
     (
         pipe.add_stage("ontology", stage_ontology, tiny=True, deps=[])
         .add_stage("closure", stage_closure, tiny=True, deps=[])
         .add_stage("onto_triples", stage_onto_triples, tiny=True, deps=[])
         .add_stage("mentions", stage_mentions, deps=[])
-        .add_stage("linked", stage_linked, deps=[] if dense else ["mentions"])
+        .add_stage("linked", stage_linked, deps=["mentions"])
         .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=[])
-        .add_stage("triples", stage_triples, deps=triples_deps)
+        .add_stage(
+            "triples", stage_triples, deps=["onto_triples", "linked", "canonical_map"]
+        )
     )
     if include_media_triples:
         pipe.add_stage("media_triples", stage_media_triples, deps=["canonical_map"])
@@ -469,33 +417,30 @@ def gate_mentioned(df: DataFrame, mentions: DataFrame, hint: str) -> DataFrame:
 def link_mentioned(
     features: DataFrame,
     model: LinkingModel,
-    mentions: DataFrame | None = None,
+    mentions: DataFrame,
     hint: str = CORPUS_GATE,
 ) -> DataFrame:
-    """Linked labels of the documents in `features`, gated to mentioned
-    docs first when `mentions` is given (mentions=None scores every doc:
-    the dense batch plan, which gates in document_triples instead).
-    emit_scores=False: triple emission consumes only the selected
+    """Linked labels of the documents in `features` that have at least
+    one row in `mentions`: the gate (gate_mentioned, join hint `hint`)
+    runs below the Python scorer, so unmentioned docs are never shipped
+    to it. emit_scores=False: triple emission consumes only the selected
     labels; the probs/bins arrays are ~20x the bytes and re-derivable,
     so their Arrow transfer and parquet write are skipped entirely."""
-    if mentions is not None:
-        features = gate_mentioned(features, mentions, hint)
-    return link_documents(features, model, emit_scores=False)
+    return link_documents(
+        gate_mentioned(features, mentions, hint), model, emit_scores=False
+    )
 
 
 def document_triples(
     linked: DataFrame,
     canonical_map: DataFrame,
     prep: dict,
-    mentions: DataFrame | None = None,
     onto_triples: DataFrame | None = None,
 ) -> DataFrame:
-    """Canonical typing triples of `linked` (gated to mentioned docs
-    first when `mentions` is given), after the schema-layer
-    `onto_triples` when given — the batch `triples` stage emits both
-    layers, a streaming micro-batch only its typing triples."""
-    if mentions is not None:
-        linked = gate_mentioned(linked, mentions, CORPUS_GATE)
+    """Canonical typing triples of `linked` (already gated by
+    link_mentioned), after the schema-layer `onto_triples` when given —
+    the batch `triples` stage emits both layers, a streaming micro-batch
+    only its typing triples."""
     raw = typing_triples(linked)
     if onto_triples is not None:
         raw = onto_triples.unionByName(raw)
@@ -506,11 +451,11 @@ def document_triples(
 
 def estimate_mention_density(documents: DataFrame, alias_df: DataFrame) -> float:
     """Fraction of documents with ≥1 dictionary mention, estimated on a
-    limit() sample — the table-stats probe behind the gate-plan choice
-    (a CBO would read the same number from ANALYZE statistics).
-    limit() is the cheapest sample (first partitions only); its bias is
-    acceptable for a one-bit plan decision with a conservative 0.9
-    threshold."""
+    limit() sample of DENSITY_SAMPLE_DOCS documents. A corpus statistic
+    for reports (the traced benchmark run prints it): no plan reads it,
+    and nothing in cello_spark calls it — the KG plan gates by mention
+    at every density. limit() is the cheapest sample (first partitions
+    only) and biased toward them; it runs two Spark jobs."""
     sample = documents.select("doc_id", "spans").limit(DENSITY_SAMPLE_DOCS)
     n = sample.count()
     if n == 0:

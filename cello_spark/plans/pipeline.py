@@ -12,10 +12,10 @@ granularity, per-partition lineage + metrics"):
 - Stages declare their inputs (``deps=[...]``); stages whose deps are
   satisfied run CONCURRENTLY, each submitting its write job from its
   own driver thread — Spark's scheduler backfills idle task slots of
-  one job with tasks of the other, so two independent scan-heavy
-  stages (e.g. mention detection over documents and feature scoring
-  over features) pack each other's ramp-up/tail/straggler idle instead
-  of serializing it. ``deps=None`` (the default) means "all earlier
+  one job with tasks of the other, so independent stages (e.g. the KG
+  pipeline's media_triples beside its mentions -> linked -> triples
+  chain) pack each other's ramp-up/tail/straggler idle instead of
+  serializing it. ``deps=None`` (the default) means "all earlier
   stages", which degenerates to exactly the old sequential behavior.
   The manifest/resume contract is unchanged: each stage still commits
   atomically and independently.
@@ -188,6 +188,7 @@ class Pipeline:
             df = fn(ctx)
             tmp_dir = os.path.join(sdir, "_tmp_data")
             shutil.rmtree(tmp_dir, ignore_errors=True)
+            reader = self.spark.read
             if tiny:
                 rows = self._write_tiny(df, name, sdir, tmp_dir, data_dir)
             else:
@@ -205,8 +206,14 @@ class Pipeline:
                 os.makedirs(sdir, exist_ok=True)
                 os.replace(tmp_dir, data_dir)
                 rows = self._write_lineage_from_footers(name, sdir, data_dir)
+                # read back with the schema just written: inferring it
+                # re-reads the footers on the critical path between
+                # dependent stages (0.066 s vs 0.010 s on an 18-file
+                # output, 4 cores); parquet reads make every field nullable
+                # either way, so both give the same schema
+                reader = reader.schema(df.schema)
             wall = time.monotonic() - t0
-            out = self.spark.read.parquet(data_dir)
+            out = reader.parquet(data_dir)
             with lock:
                 ctx[name] = out
                 manifest["stages"][name] = {

@@ -297,8 +297,8 @@ def run_incremental_kg(
         sess = batch_docs.sparkSession
         alias_df = sess.createDataFrame(prep["alias_dict"])
         mentions = detect_mentions(batch_docs, alias_df, distinct=False)
-        # micro-batches are small relative to the corpus → always the
-        # sparse plan: gate the wide features before scoring
+        # the batch plan's gate, broadcast: a micro-batch's mentioned
+        # set is dict-sized
         linked = kg.link_mentioned(
             sess.read.parquet(features_path), model, mentions, kg.MICRO_BATCH_GATE
         )

@@ -4,6 +4,7 @@ invariant, stage-granular resume, lineage metrics."""
 import json
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -308,35 +309,116 @@ def test_canonical_rewrite_dedups_only_where_merges_collide(spark):
     assert "Deduplicate" not in plan_str
 
 
-def test_gate_plans_produce_identical_triples(
-    spark, tmp_path, onto, small_world, monkeypatch
+def test_gate_drops_unmentioned_docs_before_scoring(
+    spark, tmp_path, onto, small_world, pipe
 ):
-    """The adaptive mention gate picks between pre-gating the wide
-    features (sparse corpora) and scoring everything + narrow post-join
-    (dense corpora). Both plans must emit the identical triple set."""
-    from cello_spark.plans import kg as kgmod
+    """The linked stage scores only documents with a mention: with the
+    text of every 5th doc replaced by dictionary-free words, exactly the
+    mentioned docs reach the scorer, the blanked docs emit no typing
+    triple, and every other doc's triples are unchanged. The gate is a
+    LeftSemi join below the Python scorer, not a filter after it."""
+    from cello_spark.plans.kg import link_mentioned, make_linking_model
 
+    docs_pdf = small_world["documents"].copy()
+    blanked = set(docs_pdf.doc_id.iloc[::5])
+    docs_pdf["spans"] = [
+        [
+            {**s, "text": "qzx vrrk plomb"} if s["kind"] == "text" else s
+            for s in spans
+        ]
+        if doc_id in blanked
+        else spans
+        for doc_id, spans in zip(docs_pdf.doc_id, docs_pdf.spans)
+    ]
+    feats = spark.createDataFrame(small_world["features"])
+    p = build_kg_pipeline(
+        spark,
+        str(tmp_path / "gated"),
+        spark.createDataFrame(docs_pdf),
+        feats,
+        onto,
+        small_world["weights"],
+        small_world["thresholds"],
+    )
+    p.run()
+
+    mentioned = sorted(
+        r.doc_id for r in p.output("mentions").select("doc_id").distinct().collect()
+    )
+    assert mentioned == sorted(set(docs_pdf.doc_id) - blanked)
+    linked = sorted(r.doc_id for r in p.output("linked").select("doc_id").collect())
+    assert linked == mentioned
+
+    got = {tuple(r) for r in p.output("triples").collect()}
+    assert not {t for t in got if t[0] in blanked}
+    base = {tuple(r) for r in pipe.output("triples").collect()}
+    assert got == {t for t in base if t[0] not in blanked}
+
+    model = make_linking_model(
+        onto, small_world["weights"], small_world["thresholds"]
+    )
+    scored = link_mentioned(feats, model, p.output("mentions"))
+    lines = scored._jdf.queryExecution().executedPlan().toString().splitlines()
+    at = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    depth = lines[at].index("MapInPandas")
+    below = []
+    for line in lines[at + 1 :]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        below.append(line)
+    assert any("LeftSemi" in line for line in below), "\n".join(lines)
+
+
+def test_build_kg_pipeline_runs_no_spark_job(spark, tmp_path, onto, small_world):
+    """Building the pipeline only plans: there is one gated plan at
+    every mention density, so no build-time sample or count runs a
+    job, and the linked stage waits for mentions."""
     docs = spark.createDataFrame(small_world["documents"])
     feats = spark.createDataFrame(small_world["features"])
-
-    def run_with(threshold: float, tag: str):
-        monkeypatch.setattr(kgmod, "GATE_SELECTIVITY", threshold)
+    sc = spark.sparkContext
+    group = "build_kg_pipeline_no_job"
+    sc.setJobGroup(group, "build only")
+    try:
         p = build_kg_pipeline(
             spark,
-            str(tmp_path / tag),
+            str(tmp_path / "build"),
             docs,
             feats,
             onto,
             small_world["weights"],
             small_world["thresholds"],
         )
-        p.run()
-        return sorted(tuple(r) for r in p.output("triples").collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [d for n, _, _, d in p.stages if n == "linked"] == [["mentions"]]
 
-    dense = run_with(0.0, "dense")    # always score-all + narrow join
-    sparse = run_with(1.1, "sparse")  # always pre-gate wide features
-    assert dense == sparse
-    assert len(dense) > 0
+
+def test_stages_read_outputs_with_written_schema(spark, tmp_path, onto, small_world):
+    """Each stage reads its committed inputs with the schema they were
+    written with, which equals the schema parquet inference gives."""
+    p = build_kg_pipeline(
+        spark,
+        str(tmp_path / "schema"),
+        spark.createDataFrame(small_world["documents"]),
+        spark.createDataFrame(small_world["features"]),
+        onto,
+        small_world["weights"],
+        small_world["thresholds"],
+    )
+    seen: dict = {}
+
+    def probe(ctx):
+        seen.update({k: v.schema for k, v in ctx.items()})
+        return pd.DataFrame({"n": [len(ctx)]})
+
+    p.add_stage("probe", probe, tiny=True)  # deps=None: every stage
+    p.run()
+    assert set(seen) == {name for name, _, _, _ in p.stages} - {"probe"}
+    for name, schema in seen.items():
+        data_dir = os.path.join(p.workdir, name, "data")
+        assert schema == spark.read.parquet(data_dir).schema, name
 
 
 def test_triples_identical_across_parallelism(spark, tmp_path, onto, small_world):
