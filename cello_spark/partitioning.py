@@ -20,17 +20,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+def planned_partitions(df: DataFrame) -> int | None:
+    """The number of partitions `df` will have, read from its physical
+    plan without running a job; None when AQE decides it at run time.
+
+    `df.rdd.getNumPartitions()` would execute every shuffle in an
+    adaptive plan to learn the coalesced count, and the caller's query
+    then runs those shuffles again. Here an adaptive plan is walked
+    down from its top to the node that fixes the partitioning: an
+    explicit `repartition(n)` exchange or a coalesce gives its count,
+    an exchange AQE may coalesce gives None. A plan without exchanges
+    is not adaptive, and building its RDD (scan splits, local data)
+    runs nothing."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        return df.rdd.getNumPartitions()
+    node = plan.executedPlan()
+    while True:
+        name = node.nodeName()
+        n = node.outputPartitioning().numPartitions()
+        if name == "Exchange":
+            explicit = node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+            return n if explicit else None
+        if name in ("Coalesce", "AQEShuffleRead") or node.children().size() != 1:
+            return n or None
+        node = node.children().head()
+
+
 def ensure_min_partitions(
     df: DataFrame, factor: int = 2, key: str | None = None
 ) -> DataFrame:
-    """Repartition `df` to factor * defaultParallelism iff it currently
-    has fewer partitions than the cluster has task slots. `key` makes
-    the repartition hash-keyed (for downstream co-partitioning) instead
-    of round-robin. Explicit numPartitions are respected by AQE (never
-    re-coalesced)."""
+    """Repartition `df` to factor * defaultParallelism unless its plan
+    already gives it at least as many partitions as the cluster has
+    task slots (`planned_partitions`; runs no job). A count AQE decides
+    at run time counts as too few: AQE coalesces only small shuffles
+    below the slot count, and those are cheap to spread again. `key`
+    makes the repartition hash-keyed (for downstream co-partitioning)
+    instead of round-robin. Explicit numPartitions are respected by AQE
+    (never re-coalesced)."""
     spark = df.sparkSession
     slots = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= slots:
+    planned = planned_partitions(df)
+    if planned is not None and planned >= slots:
         return df
     n = factor * slots
     return df.repartition(n, key) if key else df.repartition(n)

@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, NullType, StructType
 
 
 def _write_lineage(
@@ -62,6 +63,17 @@ def _write_lineage(
         ),
         os.path.join(lin_dir, "part-00000.parquet"),
     )
+
+
+def _has_void(dt: DataType) -> bool:
+    """True when a NullType occurs anywhere in `dt`."""
+    if isinstance(dt, StructType):
+        return any(_has_void(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_void(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_void(dt.keyType) or _has_void(dt.valueType)
+    return isinstance(dt, NullType)
 
 
 @dataclass
@@ -190,7 +202,9 @@ class Pipeline:
             shutil.rmtree(tmp_dir, ignore_errors=True)
             reader = self.spark.read
             if tiny:
-                rows = self._write_tiny(df, name, sdir, tmp_dir, data_dir)
+                rows, schema = self._write_tiny(df, name, sdir, tmp_dir, data_dir)
+                if schema is not None:
+                    reader = reader.schema(schema)
             else:
                 # one write job is the stage's ONLY Spark action: each
                 # task writes one parquet file, so per-partition lineage
@@ -299,23 +313,34 @@ class Pipeline:
         _write_lineage(sdir, name, pids, counts)
         return int(sum(counts))
 
-    def _write_tiny(self, pdf, name: str, sdir: str, tmp_dir: str, data_dir: str) -> int:
+    def _write_tiny(
+        self, pdf, name: str, sdir: str, tmp_dir: str, data_dir: str
+    ) -> tuple[int, StructType | None]:
         """Driver-side materialization for tiny stages: pyarrow write
-        (no Spark jobs), identical directory layout + lineage schema."""
+        (no Spark jobs), identical directory layout + lineage schema.
+        Returns the row count and the Spark schema of the written
+        table, so the stage reads its output back without a
+        schema-inference job (one task per read). The schema is None,
+        and the read infers, where the two would differ: for an Arrow
+        type Spark cannot map, and for Arrow's null type (an all-None or
+        empty object column), which maps to void but is inferred as
+        int."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        pdf = pdf.copy()
+        table = pa.Table.from_pandas(pdf, preserve_index=False)
         os.makedirs(tmp_dir, exist_ok=True)
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            os.path.join(tmp_dir, "part-00000.parquet"),
-        )
+        pq.write_table(table, os.path.join(tmp_dir, "part-00000.parquet"))
         shutil.rmtree(data_dir, ignore_errors=True)
         os.makedirs(sdir, exist_ok=True)
         os.replace(tmp_dir, data_dir)
         _write_lineage(sdir, name, [0], [len(pdf)])
-        return len(pdf)
+        try:
+            schema = from_arrow_schema(table.schema)
+        except TypeError:
+            return len(pdf), None
+        return len(pdf), None if _has_void(schema) else schema
 
     def output(self, name: str) -> DataFrame:
         data_dir = os.path.join(self._stage_dir(name), "data")

@@ -5,11 +5,43 @@ code runs unchanged on a multi-executor cluster (AQE, adaptive skew
 join, Arrow batching). Parallelism and shuffle partitioning are
 parameterized so the bench can run the identical job at local[8] and
 local[32] to evidence scaling efficiency.
+
+Cold start: most of a session's bring-up is driver-JVM class loading.
+`get_spark` starts the driver JVM from a JDK class-data-sharing
+(AppCDS) archive of the classes a session loads, which cuts `setup_s`
+by about a third on the 4-core box (`BENCH/BASELINE.md`, "Cold
+start"). The archive lives in
+`$XDG_CACHE_HOME/cello_spark/cds/` (else `~/.cache/cello_spark/cds/`),
+one `<key>.jsa` of ~170 MB per JDK + Spark install: the key hashes the
+real path, size and mtime of the `java` binary, the Spark jars dir
+listing (names, sizes, mtimes) and the pyspark version, so an upgrade
+trains a new one. When none exists, the first `get_spark` runs a
+one-time training child (~40 s): a session built by this same code
+with `-XX:ArchiveClassesAtExit`, a Python warm-up and a small shuffle +
+parquet job, then a clean JVM exit; the archive is published by an
+atomic rename only when that JVM exits 0, because a truncated archive
+crashes the JVM that maps it. A failed training leaves `<key>.failed`
+and later sessions start without CDS. Delete the dir to retrain.
+
+CDS is used only when the launch reads nothing from Spark's conf dir:
+the dir (`$SPARK_CONF_DIR`, else `$SPARK_HOME/conf`) holds only
+`*.template` files and none of `_CLASSPATH_ENV` is set. The JDK
+refuses to dump with a non-empty directory on the classpath, and the
+launcher puts the conf dir first, so such launches point
+`SPARK_CONF_DIR` at an empty dir in the cache (the same for training
+and use, so the classpaths match). Any other launch, an unwritable
+cache, or a JVM already running, starts exactly as without CDS.
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import shutil
+import signal
+import subprocess
+import sys
 import tempfile
 import zipfile
 
@@ -81,8 +113,21 @@ def get_spark(
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores, the
     driver heap to $SPARK_DRIVER_MEM or `default_driver_mem()`. On a
     real cluster the master/executor settings come from spark-submit
-    and the ``local[...]`` master here is simply not used.
+    and the ``local[...]`` master here is simply not used. A driver JVM
+    started here uses the cached AppCDS archive, training it first when
+    there is none (see the module docstring).
     """
+    return _start_session(app_name, cores, shuffle_partitions, extra_conf)
+
+
+def _start_session(
+    app_name: str,
+    cores: int | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+    record_to: str | None = None,
+) -> SparkSession:
+    """`get_spark`; `record_to` is set only by the CDS training run."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -96,6 +141,10 @@ def get_spark(
         os.environ.setdefault(k, v)
 
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
+    driver_opts = f"-XX:+UseG1GC -XX:+AlwaysPreTouch -Xms{driver_mem}"
+    cds = _cds_options(record_to)
+    if cds is not None:
+        driver_opts = f"{driver_opts} {cds[0]}"
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -143,10 +192,7 @@ def get_spark(
         # other, so keep the JDK default G1. Pre-touch cost is a
         # one-time session startup tax, exactly what a long-lived
         # cluster executor amortizes.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-XX:+UseG1GC -XX:+AlwaysPreTouch -Xms{driver_mem}",
-        )
+        .config("spark.driver.extraJavaOptions", driver_opts)
         .config(
             "spark.executor.extraJavaOptions",
             "-XX:+UseG1GC -XX:+AlwaysPreTouch",
@@ -164,10 +210,201 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = _launch(builder, cds[1] if cds is not None else None)
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def _launch(builder, conf_dir: str | None) -> SparkSession:
+    """`builder.getOrCreate()`, with `SPARK_CONF_DIR` pointed at
+    `conf_dir` while the gateway's launch command reads it."""
+    if conf_dir is None:
+        return builder.getOrCreate()
+    prev = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        return builder.getOrCreate()
+    finally:
+        if prev is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = prev
+
+
+# ---------------------------------------------------------------------------
+# Class-data sharing (AppCDS) for the driver JVM; see the module docstring.
+# ---------------------------------------------------------------------------
+
+# Variables that add to the launch classpath or read files beside it.
+_CLASSPATH_ENV = (
+    "SPARK_CLASSPATH",
+    "SPARK_DIST_CLASSPATH",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+)
+# A stale archive (other JDK, other classpath) only warns and the JVM
+# carries on, but JVM warnings go to stdout by default, where the CLI
+# prints its JSON line.
+_CDS_LOG = "-Xlog:disable -Xlog:all=warning:stderr"
+_CDS_TRAIN_TIMEOUT_S = 600
+
+
+def _cds_cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "cello_spark", "cds")
+
+
+def _java_binary() -> str | None:
+    """The real path of the `java` the Spark launcher runs."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    return os.path.realpath(java) if java and os.path.isfile(java) else None
+
+
+def _cds_key(java: str, jars_dir: str) -> str:
+    """Names one JDK + Spark install: the java binary's real path, size
+    and mtime, the jars dir listing (names, sizes, mtimes) and the
+    pyspark version."""
+    import pyspark
+
+    h = hashlib.sha256(pyspark.__version__.encode())
+    for path in [java] + [
+        os.path.join(jars_dir, n) for n in sorted(os.listdir(jars_dir))
+    ]:
+        st = os.stat(path)
+        h.update(f"\0{path}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:20]
+
+
+def _stock_conf(spark_home: str) -> bool:
+    """True when Spark's conf dir holds only `*.template` files (or is
+    missing) and no `_CLASSPATH_ENV` variable is set: an empty conf dir
+    then launches the same driver."""
+    if any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return False
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        names = os.listdir(conf)
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+    return all(n.endswith(".template") for n in names)
+
+
+def _cds_options(record_to: str | None = None) -> tuple[str, str] | None:
+    """(driver JVM flags, empty conf dir) for a launch from the cached
+    archive, or for recording one to `record_to`; None to launch
+    without CDS. Trains the archive first when there is none."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None  # the driver JVM is already running
+    spark_home = _find_spark_home()
+    jars = os.path.join(spark_home, "jars")
+    java = _java_binary()
+    if java is None or not os.path.isdir(jars) or not _stock_conf(spark_home):
+        return None
+    cache = _cds_cache_dir()
+    # the launcher splits extraJavaOptions on blanks and quotes
+    if any(c in cache for c in " \t\n'\"\\"):
+        return None
+    conf_dir = os.path.join(cache, "conf")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir):
+            return None
+        if record_to is not None:
+            return f"-XX:ArchiveClassesAtExit={record_to} {_CDS_LOG}", conf_dir
+        key = _cds_key(java, jars)
+    except OSError:
+        return None
+    jsa = os.path.join(cache, f"{key}.jsa")
+    if not os.path.exists(jsa) and not os.path.exists(
+        os.path.join(cache, f"{key}.failed")
+    ):
+        _cds_train(cache, key)
+    if not os.path.isfile(jsa):
+        return None
+    return f"-XX:SharedArchiveFile={jsa} {_CDS_LOG}", conf_dir
+
+
+def _cds_train(cache: str, key: str) -> None:
+    """Run `_cds_record` in a child process and publish its archive as
+    `<key>.jsa` by an atomic rename iff the child exits 0; otherwise
+    leave `<key>.failed`. Concurrent trainings each record to their own
+    tmp file. The child's output goes to `<key>.log`."""
+    tmp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]); "
+        "from cello_spark.session import _cds_record; "
+        "sys.exit(_cds_record(sys.argv[2]))"
+    )
+    try:
+        with open(os.path.join(cache, f"{key}.log"), "wb") as log:
+            child = subprocess.Popen(
+                [sys.executable, "-c", code, root, tmp],
+                stdin=subprocess.DEVNULL,
+                stdout=log,
+                stderr=subprocess.STDOUT,
+                start_new_session=True,
+            )
+            try:
+                rc = child.wait(timeout=_CDS_TRAIN_TIMEOUT_S)
+            except subprocess.TimeoutExpired:
+                rc = None
+            finally:
+                # whatever the outcome (a timeout, this process
+                # interrupted, a child that died before its JVM), end
+                # the whole training: the child, its JVM (which may
+                # still be writing the tmp file) and its Python workers
+                # share one process group
+                with contextlib.suppress(ProcessLookupError):
+                    os.killpg(child.pid, signal.SIGKILL)
+                child.wait()
+        if rc == 0 and os.path.isfile(tmp):
+            os.replace(tmp, os.path.join(cache, f"{key}.jsa"))
+        else:
+            with open(os.path.join(cache, f"{key}.failed"), "w") as f:
+                f.write(f"training exited with {rc}; see {key}.log\n")
+    except OSError:
+        pass  # cache not writable: start without CDS
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _cds_record(archive: str) -> int:
+    """The training run: a session whose driver JVM dumps the classes
+    it loaded to `archive` at exit, a Python-worker warm-up and one
+    small createDataFrame / join / aggregate / window / parquet
+    write + read, then a clean JVM exit. Returns the JVM's exit code."""
+    import pandas as pd
+    from pyspark.sql import Window, functions as F
+
+    spark = _start_session("cello_spark_cds", None, None, None, record_to=archive)
+    warm_python_workers(spark)
+    work = tempfile.mkdtemp()
+    try:
+        out = os.path.join(work, "t")
+        df = spark.createDataFrame(
+            pd.DataFrame({"k": [i % 7 for i in range(256)], "v": range(256)})
+        )
+        sums = df.groupBy("k").agg(F.sum("v").alias("s"))
+        rank = F.row_number().over(Window.partitionBy("k").orderBy("v"))
+        df.join(sums, "k").withColumn("r", rank).write.parquet(out)
+        spark.read.parquet(out).collect()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    jvm = spark.sparkContext._gateway.proc
+    spark.stop()
+    jvm.stdin.close()  # the gateway exits on EOF; the dump runs at exit
+    return jvm.wait(timeout=_CDS_TRAIN_TIMEOUT_S)
 
 
 def warm_python_workers(spark, waves: int = 2) -> float:

@@ -372,27 +372,33 @@ def test_gate_drops_unmentioned_docs_before_scoring(
 def test_build_kg_pipeline_runs_no_spark_job(spark, tmp_path, onto, small_world):
     """Building the pipeline only plans: there is one gated plan at
     every mention density, so no build-time sample or count runs a
-    job, and the linked stage waits for mentions."""
+    job, and the linked stage waits for mentions. An input that
+    already holds a shuffle (`.repartition(2)`) is not executed to
+    count its partitions either."""
     docs = spark.createDataFrame(small_world["documents"])
     feats = spark.createDataFrame(small_world["features"])
     sc = spark.sparkContext
-    group = "build_kg_pipeline_no_job"
-    sc.setJobGroup(group, "build only")
-    try:
-        p = build_kg_pipeline(
-            spark,
-            str(tmp_path / "build"),
-            docs,
-            feats,
-            onto,
-            small_world["weights"],
-            small_world["thresholds"],
+    for n_parts in (None, 2):
+        d, f = (docs, feats) if n_parts is None else (
+            docs.repartition(n_parts), feats.repartition(n_parts)
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert [d for n, _, _, d in p.stages if n == "linked"] == [["mentions"]]
+        group = f"build_kg_pipeline_no_job_{n_parts}"
+        sc.setJobGroup(group, "build only")
+        try:
+            p = build_kg_pipeline(
+                spark,
+                str(tmp_path / f"build{n_parts}"),
+                d,
+                f,
+                onto,
+                small_world["weights"],
+                small_world["thresholds"],
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], n_parts
+        assert [d for n, _, _, d in p.stages if n == "linked"] == [["mentions"]]
 
 
 def test_stages_read_outputs_with_written_schema(spark, tmp_path, onto, small_world):
@@ -416,9 +422,70 @@ def test_stages_read_outputs_with_written_schema(spark, tmp_path, onto, small_wo
     p.add_stage("probe", probe, tiny=True)  # deps=None: every stage
     p.run()
     assert set(seen) == {name for name, _, _, _ in p.stages} - {"probe"}
+    tiny = {name for name, _, is_tiny, _ in p.stages if is_tiny} - {"probe"}
+    assert tiny == {"ontology", "closure", "onto_triples", "canonical_map"}
     for name, schema in seen.items():
         data_dir = os.path.join(p.workdir, name, "data")
         assert schema == spark.read.parquet(data_dir).schema, name
+
+
+def test_tiny_stages_run_no_spark_job(spark, tmp_path):
+    """A fresh run of driver-resident stages over in-memory inputs runs
+    no Spark job: not for the writes, and no schema-inference job when
+    each output is read back."""
+    from cello_spark.plans.pipeline import Pipeline
+
+    p = Pipeline(spark, str(tmp_path / "tiny"))
+    p.add_stage(
+        "terms",
+        lambda ctx: pd.DataFrame({"id": ["A:1", "A:2"], "depth": [0, 1]}),
+        tiny=True,
+    )
+    p.add_stage(
+        "pairs",
+        lambda ctx: pd.DataFrame(
+            {"a": ["A:1"], "b": ["A:2"], "w": [0.5], "path": [["A:1", "A:2"]]}
+        ),
+        tiny=True,
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    results = p.run()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert [(r.name, r.rows, r.skipped) for r in results] == [
+        ("terms", 2, False), ("pairs", 1, False)
+    ]
+    assert p.output("pairs").collect()[0]["path"] == ["A:1", "A:2"]
+
+
+def test_tiny_stage_null_columns_read_as_inferred(spark, tmp_path):
+    """An all-None or empty object column is Arrow's null type: its
+    stage output reads back with the type parquet inference gives, as
+    every other column does."""
+    from cello_spark.plans.pipeline import Pipeline
+
+    p = Pipeline(spark, str(tmp_path / "nulls"))
+    p.add_stage(
+        "nulls",
+        lambda ctx: pd.DataFrame({"a": [None, None], "l": [[], []], "n": [1, 2]}),
+        tiny=True,
+    )
+    p.add_stage(
+        "empty",
+        lambda ctx: pd.DataFrame({"a": pd.Series([], dtype=object)}),
+        tiny=True,
+    )
+    seen: dict = {}
+    p.add_stage(
+        "probe",
+        lambda ctx: seen.update({k: v.schema for k, v in ctx.items()})
+        or pd.DataFrame({"n": [1]}),
+        tiny=True,
+    )
+    p.run()
+    for name in ("nulls", "empty"):
+        data_dir = os.path.join(p.workdir, name, "data")
+        assert seen[name] == spark.read.parquet(data_dir).schema, name
 
 
 def test_triples_identical_across_parallelism(spark, tmp_path, onto, small_world):
