@@ -57,7 +57,24 @@ def tokens(col: str | Column = "text") -> Column:
 _MENTION_FOLD = "!\"#$%&'*,./:;<=>?@[\\]^_`{|}~"
 
 
-def mention_tokens(col: str | Column = "text") -> Column:
+def sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal. The backslash is escaped
+    before the quote: a value ending in a backslash would otherwise
+    escape the closing quote."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def mention_tokens_sql(col: str = "text") -> str:
+    """`mention_tokens` as a Spark SQL expression over the column (or
+    struct field path) `col`, for plans built from SQL strings."""
+    fold = "\t\n\r" + _MENTION_FOLD
+    return (
+        f"array_remove(split(translate(lower({col}), {sql_string(fold)}, "
+        f"{sql_string(' ' * len(fold))}), ' '), '')"
+    )
+
+
+def mention_tokens(col: str = "text") -> Column:
     """Tokenizer for the mention-detection path: like `tokens` but
     additionally folds ASCII punctuation (except ()+-) to spaces, so
     aliases adjacent to punctuation ('t cell,' / 'monocyte.') still
@@ -66,18 +83,14 @@ def mention_tokens(col: str | Column = "text") -> Column:
     one more codegen'd pass over the string, no regex engine. Empties
     drop via `array_remove` — see the HOF-vs-codegen measurement in
     `tokens`."""
-    c = F.col(col) if isinstance(col, str) else col
-    folded = F.translate(
-        F.lower(c), "\t\n\r" + _MENTION_FOLD, " " * (3 + len(_MENTION_FOLD))
-    )
-    return F.array_remove(F.split(folded, " "), "")
+    return F.expr(mention_tokens_sql(col))
 
 
-def normalize_alias(col: str | Column) -> Column:
+def normalize_alias(col: str) -> Column:
     """Dictionary-side normalization matching `mention_tokens`: apply
     to alias strings when building alias_dict so both sides of the
     mention join share one canonical form."""
-    return F.array_join(mention_tokens(col), " ")
+    return F.expr(f"array_join({mention_tokens_sql(col)}, ' ')")
 
 
 def token_count_ws(col: str | Column = "text") -> Column:

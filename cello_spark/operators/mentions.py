@@ -41,9 +41,11 @@ Scale design (100 TB documents, KB-size dictionary):
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, functions as F
 
-from cello_spark.functions.text import mention_tokens as _mention_tokens
+from cello_spark.functions.text import mention_tokens_sql, sql_string
 
 MAX_ALIAS_TOKENS = 6
 
@@ -56,22 +58,15 @@ MAX_CASE_GATE_TOKENS = 10_000
 def text_spans(documents: DataFrame) -> DataFrame:
     """(doc_id, span_idx, offset, text) for kind='text' spans."""
     return (
-        documents.select(
-            "doc_id", F.posexplode("spans").alias("span_idx", "span")
-        )
-        .filter(F.col("span.kind") == "text")
-        .select(
-            "doc_id",
-            "span_idx",
-            F.col("span.offset").alias("offset"),
-            F.col("span.text").alias("text"),
-        )
+        documents.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")
+        .where("span.kind = 'text'")
+        .selectExpr("doc_id", "span_idx", "span.offset AS offset", "span.text AS text")
     )
 
 
 def detect_mentions(
     documents: DataFrame,
-    alias_dict: DataFrame,  # (alias_norm, term_id) — small, broadcast
+    alias_dict: DataFrame | pd.DataFrame,  # (alias_norm, term_id) — small
     max_n: int | None = None,
     distinct: bool = True,
     dict_collect_threshold: int = 1_000_000,
@@ -105,6 +100,14 @@ def detect_mentions(
          alias dictionary (see the module docstring for why the
          n-gram string, not a hash of the window, is the probe key).
 
+    `alias_dict` is a Spark DataFrame or a driver-held pandas one (the
+    KG pipeline's `prepare_ontology()["alias_dict"]`, string term ids).
+    A pandas dictionary up to `dict_collect_threshold` rows runs no
+    Spark job here: its size and first tokens are read on the driver.
+    A Spark dictionary is counted, and collected when it is at most
+    `dict_collect_threshold` rows — dict-sized data, and the CASE/IN
+    gate needs the literals anyway.
+
     For dictionaries larger than `dict_collect_threshold` rows, no
     COLLECT touches the driver: max_n and the first-token gate table
     are computed with small Spark aggregations (always the join gate;
@@ -113,21 +116,29 @@ def detect_mentions(
     the dictionary to the driver and ship it to every executor (driver
     memory + the 8 GB broadcast limit), so past the threshold the
     probe joins are left to AQE, which broadcasts iff the built side
-    is actually small and otherwise runs a shuffled hash join. Below
-    the threshold the dictionary is collected once — dict-sized data,
-    and the CASE/IN gate needs the literals anyway.
+    is actually small and otherwise runs a shuffled hash join.
+
+    The plan is built from SQL strings (selectExpr / where), a handful
+    of py4j calls per step, instead of one call per Column node.
     """
     spark = documents.sparkSession
+    held = alias_dict if isinstance(alias_dict, pd.DataFrame) else None
+    if held is not None:
+        n_aliases = len(held)
+        if n_aliases:
+            alias_dict = spark.createDataFrame(held[["alias_norm", "term_id"]])
+        term_type = "string"
+    else:
+        n_aliases = alias_dict.count()
+        term_type = alias_dict.schema["term_id"].dataType.simpleString()
     # empty-dictionary returns must carry the SAME schema the populated
     # path produces (doc_id/term_id types come from the inputs), or a
     # caller unioning per-batch results hits an AnalysisException the
     # first time one batch has no aliases
     empty_schema = (
         f"doc_id {documents.schema['doc_id'].dataType.simpleString()}, "
-        "span_idx int, offset int, alias_norm string, "
-        f"term_id {alias_dict.schema['term_id'].dataType.simpleString()}"
+        f"span_idx int, offset int, alias_norm string, term_id {term_type}"
     )
-    n_aliases = alias_dict.count()
     if n_aliases == 0:
         return spark.createDataFrame([], empty_schema)
     # dictionary-side join strategy: explicit broadcast only while the
@@ -152,9 +163,13 @@ def detect_mentions(
             .agg(F.sort_array(F.collect_set("l")).alias("ns"))
         )
     else:
-        aliases = alias_dict.select("alias_norm", "term_id").collect()
+        if held is not None:
+            aliases = held["alias_norm"].tolist()
+        else:
+            aliases = [r[0] for r in alias_dict.select("alias_norm").collect()]
+        split = [a.split(" ") for a in aliases]
         if max_n is None:
-            max_n = max(len(a.alias_norm.split(" ")) for a in aliases)
+            max_n = max(map(len, split))
         # per-first-token EXACT alias length set: positions only build
         # candidates whose length some alias starting with that token
         # actually has. A token that starts only {2,3}-word aliases
@@ -164,8 +179,7 @@ def detect_mentions(
         # anti-scales on a shared heap (~1.5x fewer candidate lengths
         # on the fixture dictionary, more on real ontologies whose
         # long aliases are rare).
-        for a in aliases:
-            parts_ = a.alias_norm.split(" ")
+        for parts_ in split:
             if len(parts_) <= max_n:
                 ft_lengths.setdefault(parts_[0], set()).add(len(parts_))
         if not ft_lengths:
@@ -176,11 +190,8 @@ def detect_mentions(
                 "tok string, ns array<int>",
             )
 
-    toks = text_spans(documents).select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        _mention_tokens("text").alias("tokens"),
+    toks = text_spans(documents).selectExpr(
+        "doc_id", "span_idx", "offset", f"{mention_tokens_sql()} AS tokens"
     )
     # Candidate construction is shared by both gates and deliberately
     # lambda-free: posexplode positions, gate them, explode the exact
@@ -205,20 +216,20 @@ def detect_mentions(
     zip_expr = "arrays_zip(tokens" + "".join(
         f", slice(tokens, {k + 1}, size(tokens))" for k in range(1, max_n)
     ) + ")"
-    tokpos = toks.select(
+    tokpos = toks.selectExpr(
         "doc_id",
         "span_idx",
         "offset",
-        F.size("tokens").alias("n_toks"),
-        F.posexplode(F.expr(zip_expr)).alias("pos", "w"),
-    ).select(
+        "size(tokens) AS n_toks",
+        f"posexplode({zip_expr}) AS (pos, w)",
+    ).selectExpr(
         "doc_id",
         "span_idx",
         "offset",
         "n_toks",
         "pos",
-        F.col("w")["tokens"].alias("tok"),
-        *[F.col("w")[str(k)].alias(f"t{k}") for k in range(1, max_n)],
+        "w.tokens AS tok",
+        *[f"w.`{k}` AS t{k}" for k in range(1, max_n)],
     )
     window_cols = ["tok"] + [f"t{k}" for k in range(1, max_n)]
     ngram_case = "CASE n " + " ".join(
@@ -229,23 +240,18 @@ def detect_mentions(
     if gate_df is None:
         # group first tokens by identical length set: a handful of
         # distinct sets (e.g. {1}, {2,3}, {3,4}) → a short CASE whose
-        # IN lists Catalyst compiles to hash-set InSet probes
+        # IN lists Catalyst compiles to hash-set InSet probes. A token
+        # holding a quote or a backslash cannot occur in a document
+        # (mention_tokens folds both), so its literal just never matches.
         by_set: dict[tuple[int, ...], list[str]] = {}
         for t, ls in ft_lengths.items():
             by_set.setdefault(tuple(sorted(ls)), []).append(t)
-
-        def _in_lit(toks_: list[str]) -> str:
-            return ", ".join(
-                "'" + t.replace("'", "\\'") + "'" for t in sorted(toks_)
-            )
-
         n_cand = "CASE " + " ".join(
-            f"WHEN tok IN ({_in_lit(ts)}) THEN array({', '.join(map(str, ls))})"
+            f"WHEN tok IN ({', '.join(map(sql_string, sorted(ts)))}) "
+            f"THEN array({', '.join(map(str, ls))})"
             for ls, ts in sorted(by_set.items())
         ) + " ELSE NULL END"
-        gated = tokpos.withColumn("ns", F.expr(n_cand)).where(
-            F.col("ns").isNotNull()
-        )
+        gated = tokpos.selectExpr("*", f"{n_cand} AS ns").where("ns IS NOT NULL")
     else:
         # inner broadcast join IS the gate: non-starting positions drop
         gated = tokpos.join(_dict_side(gate_df), "tok")
@@ -253,25 +259,20 @@ def detect_mentions(
     # check — no higher-order function, stays in whole-stage codegen.
     # The bound check also guarantees every token the selected CASE
     # branch reads is non-null (nulls only pad past the span's end).
-    cands = gated.select(
+    strung = gated.selectExpr(
         "doc_id",
         "span_idx",
         "offset",
         "n_toks",
         "pos",
         *window_cols,
-        F.explode("ns").alias("n"),
-    ).where(F.expr("n <= n_toks - pos"))
-    strung = cands.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        F.expr(ngram_case).alias("ngram"),
+        "explode(ns) AS n",
+    ).where("n <= n_toks - pos").selectExpr(
+        "doc_id", "span_idx", "offset", f"{ngram_case} AS ngram"
     )
     out = strung.join(
-        _dict_side(alias_dict),
-        strung.ngram == alias_dict.alias_norm,
-    ).select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
+        _dict_side(alias_dict), F.expr("ngram = alias_norm")
+    ).selectExpr("doc_id", "span_idx", "offset", "alias_norm", "term_id")
     if not distinct:
         # streaming callers and the KG pipeline skip the dedup — a
         # stateful dropDuplicates on an unbounded stream needs a
@@ -287,11 +288,8 @@ def detect_mentions(
     # that drop alias_norm never pay its exchange bytes.
     return (
         out.groupBy("doc_id", "span_idx", "term_id")
-        .agg(
-            F.min("offset").alias("offset"),
-            F.min("alias_norm").alias("alias_norm"),
-        )
-        .select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
+        .agg(F.expr("min(offset) AS offset"), F.expr("min(alias_norm) AS alias_norm"))
+        .selectExpr("doc_id", "span_idx", "offset", "alias_norm", "term_id")
     )
 
 

@@ -696,7 +696,7 @@ def caption_pairs(documents: DataFrame) -> DataFrame:
     )
 
 
-def media_triples(documents: DataFrame, alias_dict: DataFrame) -> DataFrame:
+def media_triples(documents: DataFrame, alias_dict) -> DataFrame:
     """Media-grounding triples for the KG from interleaved documents —
     the media-side analog of the typing triples the main pipeline
     emits (plans/kg.py stage_triples):
@@ -707,7 +707,8 @@ def media_triples(documents: DataFrame, alias_dict: DataFrame) -> DataFrame:
           caption_pairs above)
 
     `alias_dict` is the same (alias_norm, term_id) dictionary the
-    mention stage broadcasts; caption mention detection reuses
+    mention stage broadcasts, a Spark or driver-held pandas DataFrame
+    (detect_mentions takes either); caption mention detection reuses
     detect_mentions verbatim by wrapping each caption as a one-span
     pseudo-document keyed by its media_ref, so gating/tokenization
     semantics cannot drift from the text path. Costs one extra pass

@@ -305,7 +305,10 @@ def build_kg_pipeline(
     # --- document-side stages: distributed ---------------------------
 
     def stage_mentions(ctx: dict) -> DataFrame:
-        alias_df = spark.createDataFrame(prep["alias_dict"])
+        # the dictionary goes in as the driver-held pandas frame, so
+        # building this plan runs no Spark job (no count / collect of
+        # data the driver already holds).
+        #
         # alias_norm is projected out of the materialization: it is
         # re-derivable (term_id ⋈ alias dictionary) and is the widest
         # column — at 1M docs it is ~40% of the stage's bytes, and the
@@ -322,9 +325,9 @@ def build_kg_pipeline(
         # 2.6x). Span-level-distinct consumers dedup downstream where
         # the semantics actually need it (detect_mentions keeps
         # distinct=True as its standalone default).
-        return detect_mentions(documents, alias_df, distinct=False).select(
-            "doc_id", "span_idx", "offset", "term_id"
-        )
+        return detect_mentions(
+            documents, prep["alias_dict"], distinct=False
+        ).select("doc_id", "span_idx", "offset", "term_id")
 
     # mention gate: only docs that mention at least one ontology term
     # contribute typing triples, so the linked stage semi-joins the
@@ -343,27 +346,22 @@ def build_kg_pipeline(
         return link_mentioned(features, model, ctx["mentions"])
 
     def stage_triples(ctx: dict) -> DataFrame:
-        return document_triples(
-            ctx["linked"],
-            ctx["canonical_map"],
-            prep,
-            onto_triples=ctx["onto_triples"],
-        )
+        return document_triples(ctx["linked"], prep, onto_triples=ctx["onto_triples"])
 
     def stage_media_triples(ctx: dict) -> DataFrame:
         from cello_spark.operators.multimodal import media_triples as _mt
 
-        alias_df = spark.createDataFrame(prep["alias_dict"])
         return canonical_rewrite_triples(
-            _mt(documents, alias_df),
-            ctx["canonical_map"],
+            _mt(documents, prep["alias_dict"]),
+            prep["canonical_map"],
             prep["merged_terms"],
             prep["term_prefix"],
         )
 
     # stages declare their inputs and run concurrently once those
     # commit: the ontology-side stages and media_triples overlap the
-    # document chain mentions -> linked -> triples
+    # document chain mentions -> linked -> triples. The rewrites read
+    # the driver-held prep["canonical_map"], not the stage's output.
     (
         pipe.add_stage("ontology", stage_ontology, tiny=True, deps=[])
         .add_stage("closure", stage_closure, tiny=True, deps=[])
@@ -372,11 +370,11 @@ def build_kg_pipeline(
         .add_stage("linked", stage_linked, deps=["mentions"])
         .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=[])
         .add_stage(
-            "triples", stage_triples, deps=["onto_triples", "linked", "canonical_map"]
+            "triples", stage_triples, deps=["onto_triples", "linked"]
         )
     )
     if include_media_triples:
-        pipe.add_stage("media_triples", stage_media_triples, deps=["canonical_map"])
+        pipe.add_stage("media_triples", stage_media_triples, deps=[])
     return pipe
 
 
@@ -433,19 +431,19 @@ def link_mentioned(
 
 def document_triples(
     linked: DataFrame,
-    canonical_map: DataFrame,
     prep: dict,
     onto_triples: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical typing triples of `linked` (already gated by
     link_mentioned), after the schema-layer `onto_triples` when given —
     the batch `triples` stage emits both layers, a streaming micro-batch
-    only its typing triples."""
+    only its typing triples. The rewrite reads the driver-held
+    prep["canonical_map"], so building this plan runs no Spark job."""
     raw = typing_triples(linked)
     if onto_triples is not None:
         raw = onto_triples.unionByName(raw)
     return canonical_rewrite_triples(
-        raw, canonical_map, prep["merged_terms"], prep["term_prefix"]
+        raw, prep["canonical_map"], prep["merged_terms"], prep["term_prefix"]
     )
 
 
@@ -471,7 +469,7 @@ def estimate_mention_density(documents: DataFrame, alias_df: DataFrame) -> float
 
 def canonical_rewrite_triples(
     raw: DataFrame,  # (subj, pred, obj) — DISTINCT by construction
-    canonical_map: DataFrame,  # (node, canonical) — dict-sized
+    canonical_map: DataFrame | pd.DataFrame,  # (node, canonical) — dict-sized
     merged_terms: list[str],  # terms that merge under canonicalization
     term_prefix: str | tuple[str, ...],  # the ontology's id spaces
 ) -> DataFrame:
@@ -506,20 +504,32 @@ def canonical_rewrite_triples(
     and does no per-row work at all. Above the cap (a corpus-scale
     canonical map, e.g. doc-entity canonicalization) it falls back to
     broadcast joins over the restricted slice, the right plan at that
-    size."""
-    nonid = canonical_map.filter(
-        (F.col("node") != F.col("canonical"))
-        & _starts_with_any("node", _prefix_tuple(term_prefix))
-    )
-    head = nonid.limit(MAX_LITERAL_MAP + 1).collect()
+    size.
+
+    A driver-held pandas `canonical_map` (prepare_ontology's) gives its
+    slice without a Spark job; a Spark one collects the slice's head."""
+    prefixes = _prefix_tuple(term_prefix)
+    if isinstance(canonical_map, pd.DataFrame):
+        held = canonical_map[
+            (canonical_map.node != canonical_map.canonical)
+            & canonical_map.node.str.startswith(prefixes)
+        ][["node", "canonical"]]
+        head = list(held.itertuples(index=False, name=None))
+        if len(head) > MAX_LITERAL_MAP:
+            nonid = raw.sparkSession.createDataFrame(held)
+    else:
+        nonid = canonical_map.filter(
+            (F.col("node") != F.col("canonical")) & _starts_with_any("node", prefixes)
+        )
+        head = [
+            (r.node, r.canonical) for r in nonid.limit(MAX_LITERAL_MAP + 1).collect()
+        ]
     if not head:
         return raw  # identity map: nothing rewrites, nothing merges
 
     def _rewrite(df: DataFrame) -> DataFrame:
         if len(head) <= MAX_LITERAL_MAP:
-            lit = F.create_map(
-                *[F.lit(x) for r in head for x in (r.node, r.canonical)]
-            )
+            lit = F.create_map(*[F.lit(x) for pair in head for x in pair])
             return df.select(
                 F.coalesce(
                     F.try_element_at(lit, F.col("subj")), F.col("subj")

@@ -38,6 +38,7 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -80,6 +81,13 @@ _BLAS_ENV = {
     "MALLOC_CONF": "dirty_decay_ms:-1,muzzy_decay_ms:-1",
 }
 
+# Initial driver heap per task slot: committed and pre-touched at JVM
+# start (see the heap comment in _start_session). G1 sizes the young
+# generation as 5-60% of the COMMITTED heap, so this is a floor as well:
+# at the JDK's 256 MB default a kg_dense unit ran 4-9 young GCs instead
+# of 1-2 (BENCH/BASELINE.md, "Heap: pre-touch what the run uses").
+INITIAL_HEAP_PER_SLOT_MB = 256
+
 
 def _mem_total_kb() -> int:
     with open("/proc/meminfo") as f:
@@ -90,16 +98,37 @@ def _mem_total_kb() -> int:
 
 
 def default_driver_mem(mem_total_kb: int | None = None) -> str:
-    """Default driver heap: half of physical memory (MemTotal) in whole
-    GiB, at least 1g and at most 24g. The heap is committed and
-    pre-touched at JVM start (-Xms=-Xmx + AlwaysPreTouch, see
-    get_spark), so it must fit beside the Python workers and the page
-    cache; 24g covers every workload in this repo (broadcast dims are
-    dict-sized; stage data streams through executors) and keeps the
-    pre-touch startup tax bounded on large boxes."""
+    """Default MAXIMUM driver heap (-Xmx): half of physical memory
+    (MemTotal) in whole GiB, at least 1g and at most 24g. Only the
+    initial heap (`initial_heap`, sized by task slots) is committed and
+    pre-touched at JVM start; the heap grows toward this bound only
+    when a run's live set needs it, so the bound must fit beside the
+    Python workers and the page cache when it is reached. 24g covers
+    every workload in this repo (broadcast dims are dict-sized; stage
+    data streams through executors)."""
     if mem_total_kb is None:
         mem_total_kb = _mem_total_kb()
     return f"{min(24, max(1, mem_total_kb // (2 * 1024 * 1024)))}g"
+
+
+_MEM_UNITS_KB = {"k": 1, "m": 1024, "g": 1024**2, "t": 1024**3}
+
+
+def memory_mb(size: str) -> int:
+    """Whole MB in a Spark memory string: a number with a k/m/g/t unit
+    (either case, optionally followed by b), or a bare number of MB as
+    `spark.driver.memory` reads it. '512m' -> 512, '3g' -> 3072."""
+    m = re.fullmatch(r"(\d+)(?:([kmgt])b?)?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {size!r}")
+    return int(m[1]) * _MEM_UNITS_KB[m[2] or "m"] // 1024
+
+
+def initial_heap(cores: int, driver_mem: str) -> str:
+    """The driver's initial heap (-Xms): INITIAL_HEAP_PER_SLOT_MB per
+    task slot, never more than the maximum heap `driver_mem`, in MB.
+    4 slots / '3g' -> '1024m'; 8 slots / '1g' -> '1024m'."""
+    return f"{min(memory_mb(driver_mem), INITIAL_HEAP_PER_SLOT_MB * cores)}m"
 
 
 def get_spark(
@@ -141,7 +170,9 @@ def _start_session(
         os.environ.setdefault(k, v)
 
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
-    driver_opts = f"-XX:+UseG1GC -XX:+AlwaysPreTouch -Xms{driver_mem}"
+    driver_opts = (
+        f"-XX:+UseG1GC -XX:+AlwaysPreTouch -Xms{initial_heap(cores, driver_mem)}"
+    )
     cds = _cds_options(record_to)
     if cds is not None:
         driver_opts = f"{driver_opts} {cds[0]}"
@@ -178,20 +209,25 @@ def _start_session(
             str(ARROW_MAX_RECORDS),
         )
         .config("spark.driver.memory", driver_mem)
-        # -Xms=-Xmx + AlwaysPreTouch: commit and touch the whole heap
-        # at JVM start. Without it the heap grows lazily and every
-        # fresh page costs a guest page fault + hypervisor EPT fault
-        # while ALL allocating task threads contend on the mmap lock —
-        # on this virtualized box that serialized the string-heavy
-        # codegen stages at high parallelism (measured, synthetic
-        # string-allocation job at local[32]: 21.6s lazy-growth vs
-        # 5.8s pre-touched; real mentions stage: 79.7s vs 28.8s). The
-        # earlier round's ParallelGCThreads=8 pin treated the symptom
-        # (GC thrash amid fault storms); with a pre-touched fixed-size
-        # heap, G1/ZGC/sized-ParallelGC all land within noise of each
-        # other, so keep the JDK default G1. Pre-touch cost is a
-        # one-time session startup tax, exactly what a long-lived
-        # cluster executor amortizes.
+        # spark.driver.memory is the MAXIMUM heap (-Xmx). The initial
+        # heap (-Xms, initial_heap: 256 MB per task slot, capped at the
+        # maximum) is committed at JVM start, and AlwaysPreTouch touches
+        # it there. Without pre-touch every fresh heap page costs a
+        # guest page fault + hypervisor EPT fault while ALL allocating
+        # task threads contend on the mmap lock; on a virtualized box
+        # that serialized the string-heavy codegen stages at high
+        # parallelism (synthetic string-allocation job at local[32]:
+        # 21.6s lazy-growth vs 5.8s pre-touched; real mentions stage:
+        # 79.7s vs 28.8s). With AlwaysPreTouch, G1 also touches every
+        # later heap expansion from its GC workers at the safepoint,
+        # so task threads never fault fresh heap pages whether or not
+        # the heap grows. Committing the whole maximum instead
+        # (-Xms=-Xmx) costs 0.9-1.3 s of pre-touch per launch at 3 GB
+        # and 2.3-2.9 s at 7 GB, and keeps that much resident: kg_dense
+        # peak RSS 4.2 GB at -Xms3g against 2.1 GB at 1 GB initial
+        # (BENCH/BASELINE.md, "Heap: pre-touch what the run uses").
+        # G1/ZGC/sized-ParallelGC land within noise of each other on a
+        # pre-touched heap, so keep the JDK default G1.
         .config("spark.driver.extraJavaOptions", driver_opts)
         .config(
             "spark.executor.extraJavaOptions",

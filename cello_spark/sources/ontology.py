@@ -349,10 +349,10 @@ def alias_dictionary(terms: DataFrame) -> DataFrame:
     # normalize_alias applies the SAME punctuation-folding tokenization
     # as the document side (functions/text.py mention_tokens) so both
     # sides of the mention join share one canonical form
-    names = terms.select(normalize_alias(F.col("name")).alias("alias_norm"), "term_id")
+    names = terms.select(normalize_alias("name").alias("alias_norm"), "term_id")
     syns = terms.select(
         F.explode_outer("synonyms").alias("s"), "term_id"
-    ).select(normalize_alias(F.col("s.syn_str")).alias("alias_norm"), "term_id")
+    ).select(normalize_alias("s.syn_str").alias("alias_norm"), "term_id")
     return (
         names.unionByName(syns)
         .filter(F.col("alias_norm").isNotNull() & (F.col("alias_norm") != ""))

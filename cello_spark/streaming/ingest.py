@@ -282,7 +282,7 @@ def run_incremental_kg(
     # invocation (idempotent overwrite), already canonically rewritten
     onto_tr = kg.canonical_rewrite_triples(
         spark.createDataFrame(prep["onto_triples"]),
-        spark.createDataFrame(prep["canonical_map"]),
+        prep["canonical_map"],
         prep["merged_terms"],
         prep["term_prefix"],
     )
@@ -292,19 +292,18 @@ def run_incremental_kg(
 
     def _process(batch_docs: DataFrame, batch_id: int) -> None:
         # foreachBatch hands a DataFrame bound to a per-query session
-        # clone: build the dict-sized inputs and read the feature table
-        # through THAT session so no plan mixes sessions
+        # clone: detect_mentions and the rewrite build their dict-sized
+        # inputs from the driver-held prep (no Spark job) through the
+        # batch's session, and the feature table is read through THAT
+        # session, so no plan mixes sessions
         sess = batch_docs.sparkSession
-        alias_df = sess.createDataFrame(prep["alias_dict"])
-        mentions = detect_mentions(batch_docs, alias_df, distinct=False)
+        mentions = detect_mentions(batch_docs, prep["alias_dict"], distinct=False)
         # the batch plan's gate, broadcast: a micro-batch's mentioned
         # set is dict-sized
         linked = kg.link_mentioned(
             sess.read.parquet(features_path), model, mentions, kg.MICRO_BATCH_GATE
         )
-        triples = kg.document_triples(
-            linked, sess.createDataFrame(prep["canonical_map"]), prep
-        )
+        triples = kg.document_triples(linked, prep)
         triples.write.mode("overwrite").parquet(
             os.path.join(typing_root, f"batch-{batch_id:09d}")
         )

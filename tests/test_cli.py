@@ -259,7 +259,8 @@ def test_cli_subprocess_kg_resume_predict_cl_obo(spark, tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     # each CLI process starts its own driver JVM beside this session's:
-    # a small pre-touched heap keeps the two inside the box's memory
+    # a small maximum heap keeps the two inside the box's memory however
+    # far either heap grows from its pre-touched per-slot start
     env = {**os.environ, "SPARK_DRIVER_MEM": "2g"}
 
     def run_cli(argv):

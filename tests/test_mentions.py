@@ -257,3 +257,56 @@ def test_million_alias_dictionary_smoke(spark):
     m = detect_mentions(docs, adict, dict_collect_threshold=500_000)
     got = {r.term_id for r in m.collect()}
     assert got == {"T:31337", "T:999999"}
+
+
+def test_pandas_dictionary_matches_spark_dictionary(spark, onto, small_world, monkeypatch):
+    """The driver-held pandas dictionary (prepare_ontology's) gives the
+    rows of the same dictionary as a Spark DataFrame, through the CASE/IN
+    gate and through the join gate, and planning with it runs no job."""
+    from cello_spark.plans.kg import prepare_ontology
+
+    docs = spark.createDataFrame(small_world["documents"])
+    pdf = prepare_ontology(onto)["alias_dict"]
+    sdf = spark.createDataFrame(pdf)
+    sc = spark.sparkContext
+    for max_case in (mentions.MAX_CASE_GATE_TOKENS, 0):
+        monkeypatch.setattr(mentions, "MAX_CASE_GATE_TOKENS", max_case)
+        want = sorted(map(tuple, detect_mentions(docs, sdf).collect()))
+        group = f"pandas_dictionary_plan_{max_case}"
+        sc.setJobGroup(group, "plan only")
+        try:
+            got = detect_mentions(docs, pdf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], max_case
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert ("INSET" in plan or " IN (" in plan) == (max_case > 0), max_case
+        assert want and sorted(map(tuple, got.collect())) == want, max_case
+
+
+def test_quote_backslash_and_tab_aliases_match_nothing(spark, onto, small_world):
+    """Document tokens never hold a backslash, a quote or a tab
+    (mention_tokens folds them to spaces), so aliases holding them match
+    nothing, and they must not break the CASE/IN gate's literals: a
+    token ending in a backslash once escaped its closing quote
+    (ParseException)."""
+    import pandas as pd
+
+    from cello_spark.plans.kg import prepare_ontology
+
+    docs = spark.createDataFrame(small_world["documents"])
+    pdf = prepare_ontology(onto)["alias_dict"]
+    odd = pd.DataFrame(
+        {
+            "alias_norm": ["c\\ cell", "it's cell", "t\tcell", "cell\\", "\\'", "t\\"],
+            "term_id": pdf.term_id.iloc[0],
+        }
+    )
+    with_odd = pd.concat([pdf, odd], ignore_index=True)
+    want = sorted(
+        map(tuple, detect_mentions(docs, spark.createDataFrame(pdf)).collect())
+    )
+    assert want
+    for d in (spark.createDataFrame(with_odd), with_odd):
+        assert sorted(map(tuple, detect_mentions(docs, d).collect())) == want

@@ -242,13 +242,15 @@ def test_canonicalization_driver_vs_distributed_parity(spark):
         assert got == want, f"trial {trial}"
 
 
-def test_canonical_rewrite_dedups_only_where_merges_collide(spark):
+def test_canonical_rewrite_dedups_only_where_merges_collide(spark, monkeypatch):
     """canonical_rewrite_triples must equal rewrite+full-dropDuplicates
-    exactly, while shuffling only the merge-affected slice. Exercises a
-    synthetic xref merge (CS:B -> CS:A) — absent from the fixture
-    ontology, which has no synonym merges."""
+    exactly, while shuffling only the merge-affected slice, from a Spark
+    or a driver-held pandas map, as a literal map or broadcast joins.
+    Exercises a synthetic xref merge (CS:B -> CS:A) — absent from the
+    fixture ontology, which has no synonym merges."""
     from pyspark.sql import functions as F
 
+    from cello_spark.plans import kg
     from cello_spark.plans.kg import canonical_rewrite_triples
 
     raw = spark.createDataFrame(
@@ -299,6 +301,11 @@ def test_canonical_rewrite_dedups_only_where_merges_collide(spark):
     assert len(got_rows) == len(set(got_rows))
     assert ("d1", "rdf:type", "CS:A") in got_rows
     assert ("CS:A", "is_a", "CS:D") in got_rows
+    for max_literal in (kg.MAX_LITERAL_MAP, 0):
+        monkeypatch.setattr(kg, "MAX_LITERAL_MAP", max_literal)
+        for m in (cmap, cmap.toPandas()):
+            got_m = canonical_rewrite_triples(raw, m, merged, ("CS:",))
+            assert sorted(tuple(r) for r in got_m.collect()) == want_rows
 
     # no merges -> pure pass-through: multiplicity preserved (the
     # distinct-input precondition makes that equal to full dedup), and
@@ -399,6 +406,49 @@ def test_build_kg_pipeline_runs_no_spark_job(spark, tmp_path, onto, small_world)
             sc.setLocalProperty("spark.job.description", None)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], n_parts
         assert [d for n, _, _, d in p.stages if n == "linked"] == [["mentions"]]
+
+
+def test_pipeline_plans_mentions_and_rewrite_without_jobs(
+    spark, tmp_path, onto, small_world
+):
+    """The mentions and triples stages plan from the driver-held alias
+    dictionary and canonical map: a pipeline run submits no job before
+    the mentions write (no count or collect of the dictionary) and none
+    for the rewrite's canonical slice. Each stage's plan is built in its
+    own job group, on the stage's thread."""
+    p = build_kg_pipeline(
+        spark,
+        str(tmp_path / "plan_no_job"),
+        spark.createDataFrame(small_world["documents"]),
+        spark.createDataFrame(small_world["features"]),
+        onto,
+        small_world["weights"],
+        small_world["thresholds"],
+    )
+    sc = spark.sparkContext
+    groups = {}
+
+    def planned_in_group(name, fn):
+        def plan(ctx):
+            groups[name] = f"plan_no_job_{name}"
+            sc.setJobGroup(groups[name], f"plan {name}")
+            try:
+                return fn(ctx)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+
+        return plan
+
+    p.stages = [
+        (n, planned_in_group(n, fn) if n in ("mentions", "triples") else fn, tiny, deps)
+        for n, fn, tiny, deps in p.stages
+    ]
+    results = {r.name: r for r in p.run()}
+    assert results["mentions"].rows > 0 and results["triples"].rows > 0
+    assert sorted(groups) == ["mentions", "triples"]
+    for name, group in groups.items():
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
 
 
 def test_stages_read_outputs_with_written_schema(spark, tmp_path, onto, small_world):

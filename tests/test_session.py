@@ -14,7 +14,7 @@ import pytest
 from pyspark import SparkContext
 
 from cello_spark import session
-from cello_spark.session import default_driver_mem
+from cello_spark.session import default_driver_mem, initial_heap, memory_mb
 
 GIB_KB = 1024 * 1024
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -34,6 +34,25 @@ def test_default_driver_mem_bounds():
 def test_default_driver_mem_reads_this_box():
     mem = default_driver_mem()
     assert mem.endswith("g") and 1 <= int(mem[:-1]) <= 24
+
+
+def test_initial_heap_is_per_slot_and_never_above_the_max():
+    assert initial_heap(4, "3g") == "1024m"
+    assert initial_heap(1, "1g") == "256m"
+    assert initial_heap(8, "1g") == "1024m"  # capped at -Xmx
+
+
+def test_memory_mb_parses_spark_memory_strings():
+    assert memory_mb("512m") == 512
+    assert memory_mb("3g") == 3072
+    assert memory_mb("2G") == 2048
+    assert memory_mb("1048576k") == 1024
+    assert memory_mb("1t") == 1024 * 1024
+    assert memory_mb("3gb") == 3072
+    assert memory_mb("768") == 768  # a bare number is MB
+    for bad in ("1.5g", "3 g", "g", "1048576b"):
+        with pytest.raises(ValueError):
+            memory_mb(bad)
 
 
 # ---------------------------------------------------------------------------
@@ -224,9 +243,10 @@ def test_zip_directory_reread_only_when_zip_changes(tmp_path, monkeypatch):
 
 def test_get_spark_driver_starts_from_published_archive(tmp_path):
     """A fresh process on a stock install (trains the archive first if
-    this box has none yet): the driver JVM gets the archive and the
-    stderr log routing, the session runs a job, SPARK_CONF_DIR is
-    restored, and stdout carries only the script's own line."""
+    this box has none yet): the driver JVM gets the archive, the stderr
+    log routing and a pre-touched initial heap of one slot's share (not
+    the 1g maximum), the session runs a job, SPARK_CONF_DIR is restored,
+    and stdout carries only the script's own line."""
     code = (
         "import json, os, sys; sys.path.insert(0, sys.argv[1]);"
         "from cello_spark import get_spark;"
@@ -251,3 +271,5 @@ def test_get_spark_driver_starts_from_published_archive(tmp_path):
     assert len(archive) == 1, got["opts"]
     assert archive[0].endswith(".jsa") and os.path.isfile(archive[0].split("=", 1)[1])
     assert "-Xlog:disable -Xlog:all=warning:stderr" in got["opts"]
+    opts = got["opts"].split()
+    assert "-XX:+AlwaysPreTouch" in opts and "-Xms256m" in opts, got["opts"]
