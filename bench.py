@@ -1,7 +1,9 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the end-to-end
 KG pipeline (triples/sec headline) on a deterministic synthetic
-document set sized to the SF.
+document set sized to the SF, once on the fixture ontology (`kg`) and
+once on a generated Cell-Ontology-scale OBO (`kg_real_obo`: 6.6k terms,
+~14.7k edges, shared-xref merges, 5% obsolete terms; 500 labels).
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -22,6 +24,7 @@ plan execution (count of the result), no df.cache() anywhere.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -101,20 +104,37 @@ def _sf_tag(sf_dir: str) -> str:
     return base[2:] if base.startswith("sf") else base
 
 
-def bench_kg(spark, n_docs: int, cache_root: str) -> dict:
+def _ontology_key(onto) -> str:
+    """Digest of everything make_documents reads from `onto`."""
+    state = (onto.terms.values.tolist(), onto.edges.values.tolist(), onto.labels)
+    return hashlib.sha1(repr(state).encode()).hexdigest()[:12]
+
+
+def _cl_scale_ontology():
+    """The generated CL-scale OBO (seed 1) with its first 500 live terms
+    as labels (the CellO model trains on a label subset too); mentions,
+    closure and canonicalization still see all 6.6k terms."""
+    from perfbench.inputs import CL_LABELS, cl_obo_text
+
+    from cello_spark.sources.ontology import ontology_from_obo
+
+    text = cl_obo_text(1)
+    labels = sorted(ontology_from_obo(text).labels)[:CL_LABELS]
+    return ontology_from_obo(text, labels=labels)
+
+
+def bench_kg(spark, onto, n_docs: int, cache_root: str) -> dict:
     """Full KG pipeline wall time → triples/sec. Fixture documents are
-    generated once per (n_docs, seed) and cached as parquet so repeated
-    runs (and both scaling levels) read identical input."""
+    generated once per (ontology, n_docs) and cached as parquet so
+    repeated runs read identical input."""
     from cello_spark.plans.kg import build_kg_pipeline
     from cello_spark.sources.fixtures import (
         make_documents,
         make_model_weights,
-        make_ontology,
         make_thresholds,
     )
 
-    onto = make_ontology()
-    cache = os.path.join(cache_root, f"kg_docs_{n_docs}")
+    cache = os.path.join(cache_root, f"kg_docs_{_ontology_key(onto)}_{n_docs}")
     docs_path, feats_path = f"{cache}/documents", f"{cache}/features"
     if not (os.path.exists(docs_path) and os.path.exists(feats_path)):
         docs_pdf, feats_pdf, _ = make_documents(onto, n_docs=n_docs)
@@ -203,33 +223,21 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), ".cache", "bench"
     )
     n_kg_docs = KG_DOCS_BY_SF.get(sf_tag, 5_000)
-    kg_cold = bench_kg(spark, n_kg_docs, cache_root)
-    kg = bench_kg(spark, n_kg_docs, cache_root)  # warm rep
+    from cello_spark.sources.fixtures import make_ontology
+
+    onto = make_ontology()
+    kg_cold = bench_kg(spark, onto, n_kg_docs, cache_root)
+    kg = bench_kg(spark, onto, n_kg_docs, cache_root)  # warm rep
     total += kg["wall_sec"]
     timings["kg_pipeline"] = kg["wall_sec"]
     timings_cold["kg_pipeline"] = kg_cold["wall_sec"]
 
-    # flagship on the REAL Cell Ontology (6,634 terms) when the
-    # reference OBO is readable — the fixture ontology can't expose
-    # real-alias-dictionary or closure-size assumptions
-    real_obo = os.environ.get(
-        "SPARK_GRAFT_REAL_OBO",
-        "/root/reference/cello/onto_lib_py3/obo/CL.18-11-13.obo",
-    )
-    if not os.path.exists(real_obo):
-        kg_real = {"skipped": f"{real_obo} not found"}
-        print(f"# kg_real_obo skipped: {real_obo} not found", file=sys.stderr)
-    else:
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-        )
-        import bench_real_obo
-
-        kg_real = bench_real_obo.run(
-            n_docs=n_kg_docs, n_labels=500, obo_path=real_obo, spark=spark
-        )
-        total += kg_real["wall_sec"]
-        timings["kg_real_obo"] = kg_real["wall_sec"]
+    # the same pipeline at Cell Ontology scale: a real-size alias
+    # dictionary, closure and canonical map, which the ~60-term fixture
+    # ontology cannot exercise
+    kg_real = bench_kg(spark, _cl_scale_ontology(), n_kg_docs, cache_root)
+    total += kg_real["wall_sec"]
+    timings["kg_real_obo"] = kg_real["wall_sec"]
 
     print(
         json.dumps(

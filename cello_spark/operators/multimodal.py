@@ -405,12 +405,13 @@ def real_decoder(content: bytes, kind: str) -> np.ndarray:
         # mapping mirrors the builtin decoder's shape contract so the
         # PIL-present and PIL-absent environments produce identical
         # (channels, dtype): 1-bit → 1-channel gray (0/255), LA →
-        # 2-channel gray+alpha, 16-bit ints → high-byte gray
+        # 2-channel gray+alpha, 16-bit ints → high-byte gray (32-bit
+        # 'I' values outside 0-65535 saturate instead of wrapping)
         if img.mode == "1":
             img = img.convert("L")
         elif img.mode in ("I;16", "I;16L", "I;16B", "I"):
             arr16 = np.asarray(img.convert("I"), dtype=np.int64)
-            return (arr16 >> 8).astype(np.uint8)[:, :, None]
+            return np.clip(arr16 >> 8, 0, 255).astype(np.uint8)[:, :, None]
         elif img.mode not in ("L", "LA", "RGB", "RGBA"):
             has_alpha = "A" in img.mode or "transparency" in img.info
             img = img.convert("RGBA" if has_alpha else "RGB")

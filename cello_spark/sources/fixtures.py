@@ -384,10 +384,11 @@ def synthetic_obo_text(
     xref_targets: list[str] | None = None,
     overrides: list[dict] | None = None,
 ) -> str:
-    """Deterministic synthetic OBO file in a fresh id space — the
-    third ontology project of the multi-OBO flagship (the reference
-    checkout only bundles CL + UO; its config-17-style loads merge
-    four projects, reference onto_lib_py3/load_ontology.py). The
+    """Deterministic synthetic OBO file in a fresh id space — an extra
+    ontology project for multi-OBO merges (the reference's
+    config-17-style loads merge four projects, reference
+    onto_lib_py3/load_ontology.py), e.g. the ZZ space beside the
+    CL-scale OBO in tests/test_pipeline.py. The
     generated DAG is a seeded tree with synonyms on every third term
     and an obsolete term every 17th.
 

@@ -52,6 +52,30 @@ def test_real_decoder_unknown_payload_and_av_kinds_gated():
         M.real_decoder(b"xx", "video")  # needs ffmpeg
 
 
+def test_real_decoder_pil_mode_i_saturates(monkeypatch):
+    """A 32-bit PIL 'I' image keeps the high byte of a 16-bit value;
+    a value above 65535 saturates at 255 instead of wrapping."""
+    import numpy as np
+
+    class _Image:
+        mode = "I"
+        info: dict = {}
+
+        def convert(self, mode):
+            assert mode == "I"
+            return np.array([[70000, 300]], dtype=np.int32)
+
+    class _PIL:
+        @staticmethod
+        def open(fp):
+            return _Image()
+
+    monkeypatch.setattr(M, "_PIL_IMAGE", _PIL)
+    out = M.real_decoder(b"any", "image")
+    assert out.dtype == np.uint8 and out.shape == (1, 2, 1)
+    assert out[:, :, 0].tolist() == [[255, 1]]
+
+
 def _png_bytes(pixels, filters=None):
     """Standard-conformant PNG encoder (stdlib only) used as the
     decoder's test fixture; per-row filter types are applied exactly

@@ -16,16 +16,20 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS = sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))) + [
     os.path.join(REPO, "bench.py")
 ]
-# files that name tools/<script> paths. BENCH/BASELINE.md is left out:
-# it is a history and cites retired scripts on purpose.
-REFERRERS = (
+# program files that must not read the reference checkout: it is not
+# part of the repo, so code that opens it only runs where it happens to
+# be installed (docstrings may still cite it as a source)
+PROGRAM_FILES = (
     sorted(glob.glob(os.path.join(REPO, "cello_spark", "**", "*.py"), recursive=True))
     + SCRIPTS
-    + [
-        os.path.join(REPO, p)
-        for p in ("__spark_entry__.py", "README.md", ".claude/skills/verify/SKILL.md")
-    ]
+    + [os.path.join(REPO, "__spark_entry__.py")]
 )
+REFERENCE_CHECKOUT = "/root/reference"
+# files that name tools/<script> paths. BENCH/BASELINE.md is left out:
+# it is a history and cites retired scripts on purpose.
+REFERRERS = PROGRAM_FILES + [
+    os.path.join(REPO, p) for p in ("README.md", ".claude/skills/verify/SKILL.md")
+]
 
 
 def _rel(path):
@@ -128,3 +132,27 @@ def test_named_tool_scripts_exist():
             if not os.path.isfile(os.path.join(REPO, "tools", name)):
                 stale.append(f"{_rel(path)}: tools/{name}")
     assert not stale, "references to missing scripts:\n" + "\n".join(stale)
+
+
+def _docstrings(tree):
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            first = node.body[0] if node.body else None
+            if isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant):
+                yield first.value
+
+
+def test_no_code_reads_the_reference_checkout():
+    found = []
+    for path in PROGRAM_FILES:
+        tree = ast.parse(open(path).read(), path)
+        docs = {id(c) for c in _docstrings(tree)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and REFERENCE_CHECKOUT in node.value
+                and id(node) not in docs
+            ):
+                found.append(f"{_rel(path)}:{node.lineno}")
+    assert not found, f"string constants naming {REFERENCE_CHECKOUT}:\n" + "\n".join(found)

@@ -29,35 +29,11 @@ from pyspark.sql import SparkSession
 from cello_spark import oracle
 from cello_spark.plans.kg import build_kg_pipeline
 from cello_spark.sources.fixtures import (
-    QUALIFIER_SUFFIXES,
     make_documents,
     make_model_weights,
     make_thresholds,
     make_ontology,
-    term_id,
 )
-
-
-def golden_triples(onto, feats, weights, thresholds, label_edges):
-    """Frozen-oracle golden triples (mirrors tests/test_pipeline.py)."""
-    import pandas as pd
-
-    probs = oracle.score_probs(feats, weights)
-    rec = oracle.reconcile_all(probs, label_edges)
-    bins = oracle.binarize(rec, thresholds, label_edges)
-    ms, fb = oracle.select_one_most_specific(
-        rec,
-        bins,
-        thresholds,
-        label_edges,
-        qualifier_terms={term_id(s) for s in QUALIFIER_SUFFIXES},
-    )
-    live = onto.terms[~onto.terms.is_obsolete]
-    live_edges = onto.edges[
-        onto.edges.src.isin(live.term_id) & onto.edges.dst.isin(live.term_id)
-    ]
-    patched = pd.concat([live_edges, onto.patch_edges]).drop_duplicates()
-    return oracle.emit_triples(patched, ms, fb)
 
 
 def main() -> int:
@@ -98,7 +74,8 @@ def main() -> int:
         results = pipe.run()
         got = pipe.output("triples").toPandas()
         wall = time.monotonic() - t0
-        want = golden_triples(onto, feats, weights, thresholds, label_edges)
+        world = {"features": feats, "weights": weights, "thresholds": thresholds}
+        want = oracle.golden_fixture_triples(onto, world, label_edges)
         p, r = oracle.precision_recall(got, want)
     finally:
         if cleanup:
