@@ -234,10 +234,13 @@ def main() -> None:
 
     # the same pipeline at Cell Ontology scale: a real-size alias
     # dictionary, closure and canonical map, which the ~60-term fixture
-    # ontology cannot exercise
-    kg_real = bench_kg(spark, _cl_scale_ontology(), n_kg_docs, cache_root)
+    # ontology cannot exercise; timed like `kg`, the warm one of two reps
+    cl_onto = _cl_scale_ontology()
+    kg_real_cold = bench_kg(spark, cl_onto, n_kg_docs, cache_root)
+    kg_real = bench_kg(spark, cl_onto, n_kg_docs, cache_root)
     total += kg_real["wall_sec"]
     timings["kg_real_obo"] = kg_real["wall_sec"]
+    timings_cold["kg_real_obo"] = kg_real_cold["wall_sec"]
 
     print(
         json.dumps(
@@ -255,6 +258,7 @@ def main() -> None:
                 "kg": kg,
                 "kg_cold": kg_cold,
                 "kg_real_obo": kg_real,
+                "kg_real_obo_cold": kg_real_cold,
             }
         )
     )

@@ -35,8 +35,9 @@ def _lazy_zip_invalidation() -> None:
     dir of `pyspark.zip` (1,328 entries) then re-reads the whole zip
     directory: a profiled Python worker spent 31.7 s of 35.4 s in
     `zipimport._read_directory` over 40 trivial tasks. CPython 3.12
-    made the call lazy (gh-103200). Executor workers apply this patch
-    when they import cello_spark to unpickle a pipeline function."""
+    made the call lazy (gh-103200). `cello_spark.worker_daemon` imports
+    the package, so every Python worker it forks has the patch from its
+    first task on."""
     if sys.version_info >= (3, 12):
         return
     import os
@@ -67,4 +68,13 @@ def _lazy_zip_invalidation() -> None:
 
 _lazy_zip_invalidation()
 
-from cello_spark.session import get_spark  # noqa: E402,F401
+
+def __getattr__(name: str):
+    # `get_spark` on first use (PEP 562): importing the package must not
+    # import pyspark, or `python -m cello_spark.worker_daemon` would load
+    # it from Spark's zip before it can put the installed copy first
+    if name == "get_spark":
+        from cello_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -21,9 +21,9 @@ The model bundle directory format is defined in
 genes/edges/meta JSON). `predict` writes the reference's three output
 tables (probability / binary / most_specific —
 cello_predict.py:196-207) as parquet (scale-native) or TSV
-(reference-shaped). Sessions come from `get_spark()` (local master,
-package auto-shipped via addPyFile); for cluster deployment use
-spark-submit with `--py-files` as in tools/submit_kg.py.
+(reference-shaped). Sessions come from `get_spark()` (local master;
+Python workers import the package from its root); for cluster
+deployment use spark-submit with `--py-files` as in tools/submit_kg.py.
 """
 
 from __future__ import annotations

@@ -6,21 +6,31 @@ join, Arrow batching). Parallelism and shuffle partitioning are
 parameterized so the bench can run the identical job at local[8] and
 local[32] to evidence scaling efficiency.
 
-Cold start: most of a session's bring-up is driver-JVM class loading.
-`get_spark` starts the driver JVM from a JDK class-data-sharing
-(AppCDS) archive of the classes a session loads, which cuts `setup_s`
-by about a third on the 4-core box (`BENCH/BASELINE.md`, "Cold
-start"). The archive lives in
-`$XDG_CACHE_HOME/cello_spark/cds/` (else `~/.cache/cello_spark/cds/`),
-one `<key>.jsa` of ~170 MB per JDK + Spark install: the key hashes the
-real path, size and mtime of the `java` binary, the Spark jars dir
-listing (names, sizes, mtimes) and the pyspark version, so an upgrade
-trains a new one. When none exists, the first `get_spark` runs a
-one-time training child (~40 s): a session built by this same code
-with `-XX:ArchiveClassesAtExit`, a Python warm-up and a small shuffle +
-parquet job, then a clean JVM exit; the archive is published by an
-atomic rename only when that JVM exits 0, because a truncated archive
-crashes the JVM that maps it. A failed training leaves `<key>.failed`
+Cold start: a session's bring-up is the driver JVM's start and then
+the first Python job's worker start. Python workers fork from
+`cello_spark.worker_daemon` (`spark.python.daemon.module`, with the
+package root on the workers' PYTHONPATH), which imports pyspark from
+the installed, compiled copy rather than Spark's source-only
+`pyspark.zip` when the versions match, and imports numpy, pandas,
+pyarrow and this package once before it forks; `warm_python_workers`
+then forks one worker per task slot in a single one-stage job. Together
+they cut `kg_dense` `setup_s` by about 30% (`BENCH/BASELINE.md`, "Cold
+start: Python workers"). Nothing is shipped with addPyFile: workers
+import this package from its root.
+
+The driver JVM starts from a JDK class-data-sharing (AppCDS) archive
+of the classes a session loads, which cuts `setup_s` by about a third
+on the 4-core box (`BENCH/BASELINE.md`, "Cold start"). The archive
+lives in `$XDG_CACHE_HOME/cello_spark/cds/` (else
+`~/.cache/cello_spark/cds/`), one `<key>.jsa` of ~170 MB per JDK +
+Spark install: the key hashes the real path, size and mtime of the
+`java` binary, the Spark jars dir listing (names, sizes, mtimes) and
+the pyspark version, so an upgrade trains a new one. When none
+exists, the first `get_spark` runs a one-time training child (~40 s):
+a session built by this same code with `-XX:ArchiveClassesAtExit`, a
+Python warm-up and a small shuffle + parquet job, then a clean JVM
+exit; the archive is published by an atomic rename only when that JVM
+exits 0, because a truncated archive crashes the JVM that maps it. A failed training leaves `<key>.failed`
 and later sessions start without CDS. Delete the dir to retrain.
 
 CDS is used only when the launch reads nothing from Spark's conf dir:
@@ -87,6 +97,9 @@ _BLAS_ENV = {
 # at the JDK's 256 MB default a kg_dense unit ran 4-9 young GCs instead
 # of 1-2 (BENCH/BASELINE.md, "Heap: pre-touch what the run uses").
 INITIAL_HEAP_PER_SLOT_MB = 256
+
+# the directory holding the `cello_spark` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _mem_total_kb() -> int:
@@ -234,9 +247,13 @@ def _start_session(
             "-XX:+UseG1GC -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
-        # worker reuse amortizes the ~1-2s numpy/pandas import per
-        # Python worker across the pipeline's mapInPandas stages
+        # worker reuse keeps each forked Python worker for the session
         .config("spark.python.worker.reuse", "true")
+        # workers fork from a daemon that has pyspark, numpy, pandas,
+        # pyarrow and this package compiled and imported (see
+        # worker_daemon); it imports cello_spark from the package root
+        .config("spark.python.daemon.module", "cello_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # deterministic float semantics for oracle comparison
         .config("spark.sql.legacy.allowUntypedScalaUDF", "false")
     )
@@ -248,7 +265,6 @@ def _start_session(
             builder = builder.config(k, v)
     spark = _launch(builder, cds[1] if cds is not None else None)
     spark.sparkContext.setLogLevel("WARN")
-    ship_package(spark)
     return spark
 
 
@@ -375,7 +391,6 @@ def _cds_train(cache: str, key: str) -> None:
     leave `<key>.failed`. Concurrent trainings each record to their own
     tmp file. The child's output goes to `<key>.log`."""
     tmp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
         "import sys; sys.path.insert(0, sys.argv[1]); "
         "from cello_spark.session import _cds_record; "
@@ -384,7 +399,7 @@ def _cds_train(cache: str, key: str) -> None:
     try:
         with open(os.path.join(cache, f"{key}.log"), "wb") as log:
             child = subprocess.Popen(
-                [sys.executable, "-c", code, root, tmp],
+                [sys.executable, "-c", code, _PACKAGE_ROOT, tmp],
                 stdin=subprocess.DEVNULL,
                 stdout=log,
                 stderr=subprocess.STDOUT,
@@ -443,27 +458,24 @@ def _cds_record(archive: str) -> int:
     return jvm.wait(timeout=_CDS_TRAIN_TIMEOUT_S)
 
 
-def warm_python_workers(spark, waves: int = 2) -> float:
-    """Pre-fork the Python worker pool: run a trivial mapInPandas over
-    `waves x defaultParallelism` partitions so every task slot's worker
-    is forked and has paid its pandas/numpy/Arrow import BEFORE any
-    latency-sensitive stage runs. With spark.python.worker.reuse=true
-    (set in get_spark) the warmed pool persists for the session.
-
-    Measured on this box (local[32]): the first mapInPandas stage of a
-    session pays ~10-15s of concurrent worker spin-up; after this
-    warm-up the same stage runs in ~1-2s. On a long-lived cluster the
-    pool outlives jobs and this is a no-op tax paid once per executor
-    — the standard bring-up pattern for latency-sensitive Python
-    stages. Returns the wall seconds spent."""
+def warm_python_workers(spark) -> float:
+    """Fork the Python worker pool before any timed stage: one job of
+    one stage, `defaultParallelism` single-row tasks through
+    mapInPandas into the noop sink, so every task slot gets its worker
+    at once. Workers fork from `worker_daemon`, which has already
+    imported pyspark, numpy, pandas and pyarrow, and stay up for the
+    session (spark.python.worker.reuse). Returns the wall seconds
+    spent."""
     import time as _time
 
     def _ident(batches):
         yield from batches
 
-    n = waves * spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     t0 = _time.monotonic()
-    spark.range(2 * n).repartition(n).mapInPandas(_ident, "id long").count()
+    spark.range(0, n, 1, n).mapInPandas(_ident, "id long").write.format(
+        "noop"
+    ).mode("overwrite").save()
     return _time.monotonic() - t0
 
 

@@ -227,6 +227,18 @@ def _prototypes(labels: list[str], seed: int) -> dict[str, np.ndarray]:
     }
 
 
+def _label_ancestors(
+    anc: set[tuple[str, str]], labels: set[str]
+) -> dict[str, list[str]]:
+    """Each label's ancestors among `labels`, sorted, from the
+    (descendant, ancestor) closure pairs `anc` in one pass."""
+    out: dict[str, set[str]] = {lab: set() for lab in labels}
+    for d, a in anc:
+        if d in labels and a in labels:
+            out[d].add(a)
+    return {lab: sorted(a) for lab, a in out.items()}
+
+
 def make_documents(
     onto: Ontology,
     n_docs: int = 200,
@@ -250,12 +262,9 @@ def make_documents(
     # leaf labels = labels that are not a parent of another label
     anc = closure_from_edges(pd.concat([onto.edges, onto.patch_edges]))
     label_set = set(onto.labels)
-    internal = {a for (d, a) in anc if d in label_set and a in label_set}
+    ancestors_of = _label_ancestors(anc, label_set)
+    internal = set().union(*ancestors_of.values())
     leaves = sorted(label_set - internal)
-    ancestors_of: dict[str, list[str]] = {
-        lab: sorted({a for (d, a) in anc if d == lab and a in label_set})
-        for lab in sorted(label_set)
-    }
     protos = _prototypes(onto.labels, seed)
 
     doc_rows, feat_rows, truth_rows = [], [], []

@@ -2,6 +2,7 @@
 the reference's inline test ontology)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from cello_spark.sources import ontology as O
@@ -371,3 +372,33 @@ def test_three_way_merge_precedence_and_cross_space_xrefs():
     pairs = [(zz_with_xref[0], "AA:0000002")]
     cc = oracle.connected_components(pairs)
     assert cc[zz_with_xref[0]] == cc["AA:0000002"]
+
+
+def _per_label_ancestors(anc, labels):
+    """The reference rule: one scan of the whole closure per label."""
+    return {
+        lab: sorted({a for (d, a) in anc if d == lab and a in labels})
+        for lab in sorted(labels)
+    }
+
+
+def _cl_onto_100_labels():
+    from perfbench.inputs import cl_obo_text
+
+    text = cl_obo_text(1)
+    labels = sorted(O.ontology_from_obo(text).labels)[:100]
+    return O.ontology_from_obo(text, labels=labels)
+
+
+@pytest.mark.parametrize("which", ["fixture", "cl_scale"])
+def test_make_documents_matches_per_label_ancestor_rule(monkeypatch, onto, which):
+    """Grouping the closure by descendant once yields the same docs,
+    features and truth as scanning it once per label."""
+    from cello_spark.sources import fixtures
+
+    world = onto if which == "fixture" else _cl_onto_100_labels()
+    grouped = fixtures.make_documents(world, n_docs=120)
+    monkeypatch.setattr(fixtures, "_label_ancestors", _per_label_ancestors)
+    per_label = fixtures.make_documents(world, n_docs=120)
+    for got, want in zip(grouped, per_label):
+        pd.testing.assert_frame_equal(got, want)

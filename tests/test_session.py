@@ -1,6 +1,7 @@
-"""Session sizing, the driver JVM's class-data-sharing archive and the
-zip-import patch. Only the last test starts a JVM (in a child
-process)."""
+"""Session sizing, the driver JVM's class-data-sharing archive, the
+zip-import patch and the Python-worker daemon. The CDS launch test
+starts a JVM in a child process; the worker tests at the end use the
+shared session."""
 
 import json
 import os
@@ -13,8 +14,13 @@ from types import SimpleNamespace
 import pytest
 from pyspark import SparkContext
 
-from cello_spark import session
-from cello_spark.session import default_driver_mem, initial_heap, memory_mb
+from cello_spark import session, worker_daemon
+from cello_spark.session import (
+    default_driver_mem,
+    initial_heap,
+    memory_mb,
+    warm_python_workers,
+)
 
 GIB_KB = 1024 * 1024
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -273,3 +279,163 @@ def test_get_spark_driver_starts_from_published_archive(tmp_path):
     assert "-Xlog:disable -Xlog:all=warning:stderr" in got["opts"]
     opts = got["opts"].split()
     assert "-XX:+AlwaysPreTouch" in opts and "-Xms256m" in opts, got["opts"]
+
+
+# ---------------------------------------------------------------------------
+# Python workers: the preloaded daemon and the warm-up
+# ---------------------------------------------------------------------------
+
+
+def test_import_cello_spark_loads_no_pyspark():
+    """The worker daemon is run as `python -m cello_spark.worker_daemon`,
+    which imports the package first: that import must leave pyspark
+    unloaded, while `from cello_spark import get_spark` still works."""
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]); import cello_spark;"
+        "loaded = [m for m in sys.modules if m.split('.')[0] == 'pyspark'];"
+        "assert not loaded, loaded;"
+        "from cello_spark import get_spark;"
+        "from cello_spark.session import get_spark as real;"
+        "assert get_spark is real"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, ROOT], capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+
+
+def _spark_lib(tmp_path, zip_version: str) -> list[str]:
+    """A stand-in `$SPARK_HOME`: pyspark.zip of `zip_version`, the py4j
+    zip and the spark-core jar, as the worker factory lists them."""
+    lib = tmp_path / "spark" / "python" / "lib"
+    lib.mkdir(parents=True)
+    with zipfile.ZipFile(lib / "pyspark.zip", "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", f"__version__: str = '{zip_version}'\n")
+    with zipfile.ZipFile(lib / "py4j-0.10.9.9-src.zip", "w") as z:
+        z.writestr("py4j/__init__.py", "")
+    jar = tmp_path / "spark" / "jars" / "spark-core_2.13-4.1.2.jar"
+    jar.parent.mkdir()
+    jar.write_bytes(b"jar")
+    return [str(lib / "pyspark.zip"), str(lib / "py4j-0.10.9.9-src.zip"), str(jar)]
+
+
+def _site(tmp_path, version: str | None) -> str:
+    site = tmp_path / "site-packages"
+    site.mkdir()
+    if version is not None:
+        (site / "pyspark").mkdir()
+        (site / "pyspark" / "__init__.py").write_text("")
+        (site / "pyspark" / "version.py").write_text(f'__version__: str = "{version}"\n')
+    return str(site)
+
+
+@pytest.mark.parametrize(
+    "installed, zipped, moved",
+    [("4.1.2", "4.1.2", True), ("4.0.1", "4.1.2", False), (None, "4.1.2", False)],
+)
+def test_daemon_puts_spark_archives_behind_an_installed_pyspark(
+    tmp_path, installed, zipped, moved
+):
+    """Equal versions move Spark's archives behind the interpreter's
+    paths; a different or a missing installed pyspark leaves the path
+    as it is."""
+    archives = _spark_lib(tmp_path, zipped)
+    site = _site(tmp_path, installed)
+    stdlib = str(tmp_path / "python311.zip")
+    own = [str(tmp_path / "cwd"), *archives, ROOT, stdlib, site]
+    got = worker_daemon.prefer_installed_pyspark(list(own))
+    if moved:
+        assert got == [str(tmp_path / "cwd"), ROOT, stdlib, site, *archives]
+    else:
+        assert got == own
+
+
+def test_daemon_path_without_spark_zip_is_unchanged(tmp_path):
+    site = _site(tmp_path, "4.1.2")
+    own = [str(tmp_path), ROOT, site]
+    assert worker_daemon.prefer_installed_pyspark(list(own)) == own
+
+
+def test_warmed_workers_serve_tasks_from_the_preloaded_daemon(spark):
+    """After the warm-up, a job of `defaultParallelism` tasks runs on
+    workers the daemon has already forked. Each imports pyspark from
+    the installed copy (Spark's zip when the versions differ), and has
+    pandas and pyarrow loaded before its task starts, imported by the
+    daemon before it forked."""
+    from perfbench.system import _children_map
+    from pyspark.find_spark_home import _find_spark_home
+
+    # nested, so cloudpickle ships it by value: the workers cannot import
+    # this test module by name
+    def _worker_state(batches):
+        preloaded = [m for m in ("pandas", "pyarrow") if m in sys.modules]
+        import pandas as pd
+        import pyspark
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "pid": [os.getpid()],
+                "ppid": [os.getppid()],
+                "pyspark": [pyspark.__file__],
+                "main": [sys.modules["__main__"].__spec__.name],
+                "preloaded": [",".join(preloaded)],
+            }
+        )
+
+    n = spark.sparkContext.defaultParallelism
+    warm_python_workers(spark)
+    kids = _children_map()
+    # one daemon per worker environment: a long session can hold several
+    forked = {
+        p: set(kids.get(p, ()))
+        for p in kids[spark.sparkContext._gateway.proc.pid]
+        if b"cello_spark.worker_daemon" in open(f"/proc/{p}/cmdline", "rb").read()
+    }
+    assert forked
+    got = (
+        spark.range(0, n, 1, n)
+        .mapInPandas(
+            _worker_state,
+            "pid long, ppid long, pyspark string, main string, preloaded string",
+        )
+        .toPandas()
+    )
+    assert len(got) == n
+    served = set(got.ppid)
+    assert len(served) == 1 and served <= forked.keys(), (served, forked)
+    (daemon,) = served
+    assert len(forked[daemon]) >= n
+    assert set(got.pid) <= forked[daemon], (sorted(got.pid), sorted(forked[daemon]))
+    assert set(got.main) == {"cello_spark.worker_daemon"}
+    assert set(got.preloaded) == {"pandas,pyarrow"}
+    # the daemon itself has pandas' and pyarrow's extension modules
+    # mapped: the workers inherit them from the fork, not the first task
+    with open(f"/proc/{daemon}/maps") as f:
+        maps = f.read()
+    assert f"{os.sep}pandas{os.sep}_libs{os.sep}" in maps
+    assert f"{os.sep}pyarrow{os.sep}" in maps
+    lib = os.path.join(_find_spark_home(), "python", "lib")
+    zipped = worker_daemon._zip_version(os.path.join(lib, "pyspark.zip"))
+    import pyspark
+
+    from_zip = zipped is not None and zipped != pyspark.__version__
+    assert {f.startswith(lib + os.sep) for f in got.pyspark} == {from_zip}
+
+
+def test_warm_python_workers_runs_one_single_stage_job(spark):
+    sc = spark.sparkContext
+    group = "warm_python_workers_test"
+    sc.setJobGroup(group, "warm-up only")
+    try:
+        warm_python_workers(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    assert len(jobs) == 1, jobs
+    stages = list(tracker.getJobInfo(jobs[0]).stageIds)
+    assert len(stages) == 1, stages
+    assert tracker.getStageInfo(stages[0]).numTasks == sc.defaultParallelism
