@@ -1302,11 +1302,9 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipeline no longer reproduces the reference semantics."""
     import tempfile
 
-    import pandas as pd
-
     from cello_spark import oracle as _oracle
     from cello_spark.operators.metrics import triple_pr
-    from cello_spark.plans.kg import build_kg_pipeline
+    from cello_spark.plans.kg import build_kg_pipeline, label_edges
     from cello_spark.sources.fixtures import (
         make_documents,
         make_model_weights,
@@ -1329,17 +1327,10 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         thresholds,
     )
     pipe.run()
-    lab = set(onto.labels)
-    all_edges = pd.concat([onto.edges, onto.patch_edges])
-    label_edges = [
-        (c, p)
-        for c, p, r in all_edges[["src", "dst", "rel"]].itertuples(index=False)
-        if r == "is_a" and c in lab and p in lab
-    ]
     golden = _oracle.golden_fixture_triples(
         onto,
         {"features": feats, "weights": weights, "thresholds": thresholds},
-        label_edges,
+        label_edges(onto),
     )
     out = triple_pr(pipe.output("triples"), spark.createDataFrame(golden))
     # triple_pr materializes its counts eagerly (.first()), so the

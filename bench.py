@@ -172,19 +172,18 @@ def bench_kg(spark, onto, n_docs: int, cache_root: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
     import __spark_entry__ as E
     from cello_spark.session import get_spark
 
-    spark = get_spark(app_name="cello_spark_bench", cores=cores)
+    # cores: SPARK_GRAFT_CPUS, else every local core (get_spark)
+    spark = get_spark(app_name="cello_spark_bench")
+    cores = spark.sparkContext.defaultParallelism
     qs = E.queries()
-    # steady-state warmup (same rationale as the KG pipeline warmup in
-    # tools/bench_local_cluster.py):
-    # touch every input table once so the first timed query measures
-    # the query, not JVM tiering + parquet footer reads + page-cache
-    # population — one-time session costs a long-lived cluster
-    # amortizes across jobs.
+    # steady-state warmup: touch every input table once so the first
+    # timed query measures the query, not JVM tiering + parquet footer
+    # reads + page-cache population — one-time session costs a
+    # long-lived cluster amortizes across jobs.
     for t in ("lineitem", "orders", "part", "customer", "supplier",
               "nation", "region", "events", "documents", "embeddings"):
         path = f"{sf_dir}/{t}.parquet"

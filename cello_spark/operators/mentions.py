@@ -47,8 +47,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from cello_spark.functions.text import mention_tokens_sql, sql_string
 
-MAX_ALIAS_TOKENS = 6
-
 # above this many distinct alias first-tokens the CASE/IN gate's
 # driver-built literal expression gets unwieldy (plan size, codegen
 # limits); switch to the explode + broadcast-join gate
@@ -67,9 +65,7 @@ def text_spans(documents: DataFrame) -> DataFrame:
 def detect_mentions(
     documents: DataFrame,
     alias_dict: DataFrame | pd.DataFrame,  # (alias_norm, term_id) — small
-    max_n: int | None = None,
     distinct: bool = True,
-    dict_collect_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Dictionary mention detection. Returns
     (doc_id, span_idx, offset, alias_norm, term_id), distinct per
@@ -91,46 +87,31 @@ def detect_mentions(
              dictionaries (10³-10⁴ first tokens); the join gate
              measured 18-38% slower on the fixture dictionary.
            join — posexplode tokens, broadcast-join a (first_token,
-             lengths) table. No driver-side literal, so it scales to
-             arbitrarily large dictionaries (10⁵+ aliases, e.g.
-             EFO+DOID+CL+UBERON merged); costs one explode.
+             lengths) table. Its plan does not grow with the
+             dictionary, so it takes over past MAX_CASE_GATE_TOKENS
+             (at 10⁵ first tokens the CASE gate plans ~2x and runs ~7x
+             slower; BENCH/BASELINE.md, "Two first-token gates").
       2. candidates at surviving positions, built only for the EXACT
          lengths of aliases starting with that token (not 1..max),
          concat_ws'd into the n-gram and joined on it against the
          alias dictionary (see the module docstring for why the
          n-gram string, not a hash of the window, is the probe key).
 
-    `alias_dict` is a Spark DataFrame or a driver-held pandas one (the
-    KG pipeline's `prepare_ontology()["alias_dict"]`, string term ids).
-    A pandas dictionary up to `dict_collect_threshold` rows runs no
-    Spark job here: its size and first tokens are read on the driver.
-    A Spark dictionary is counted, and collected when it is at most
-    `dict_collect_threshold` rows — dict-sized data, and the CASE/IN
-    gate needs the literals anyway.
-
-    For dictionaries larger than `dict_collect_threshold` rows, no
-    COLLECT touches the driver: max_n and the first-token gate table
-    are computed with small Spark aggregations (always the join gate;
-    CASE/IN would need driver-side literals), and the dictionary-side
-    joins drop the broadcast hint — a broadcast would itself collect
-    the dictionary to the driver and ship it to every executor (driver
-    memory + the 8 GB broadcast limit), so past the threshold the
-    probe joins are left to AQE, which broadcasts iff the built side
-    is actually small and otherwise runs a shuffled hash join.
+    `alias_dict` is dictionary-sized and lives on the driver: the KG
+    pipeline passes prepare_ontology()["alias_dict"] (a pandas frame,
+    string term ids), and building the plan from it runs no Spark job.
+    A Spark DataFrame is collected once here (one job) and then takes
+    the same path.
 
     The plan is built from SQL strings (selectExpr / where), a handful
     of py4j calls per step, instead of one call per Column node.
     """
     spark = documents.sparkSession
-    held = alias_dict if isinstance(alias_dict, pd.DataFrame) else None
-    if held is not None:
-        n_aliases = len(held)
-        if n_aliases:
-            alias_dict = spark.createDataFrame(held[["alias_norm", "term_id"]])
+    if isinstance(alias_dict, pd.DataFrame):
         term_type = "string"
     else:
-        n_aliases = alias_dict.count()
         term_type = alias_dict.schema["term_id"].dataType.simpleString()
+        alias_dict = alias_dict.select("alias_norm", "term_id").toPandas()
     # empty-dictionary returns must carry the SAME schema the populated
     # path produces (doc_id/term_id types come from the inputs), or a
     # caller unioning per-batch results hits an AnalysisException the
@@ -139,60 +120,28 @@ def detect_mentions(
         f"doc_id {documents.schema['doc_id'].dataType.simpleString()}, "
         f"span_idx int, offset int, alias_norm string, term_id {term_type}"
     )
-    if n_aliases == 0:
+    if alias_dict.empty:
         return spark.createDataFrame([], empty_schema)
-    # dictionary-side join strategy: explicit broadcast only while the
-    # dictionary is known driver/executor-memory safe; past the
-    # threshold AQE picks (shuffled hash join unless it measures the
-    # built side small)
-    collect = n_aliases <= dict_collect_threshold
-
-    def _dict_side(d):
-        return F.broadcast(d) if collect else d
-
-    ft_lengths: dict[str, set[int]] = {}
-    gate_df = None  # None → CASE/IN gate over ft_lengths
-    if not collect:
-        parts = alias_dict.select(F.split("alias_norm", " ").alias("p"))
-        if max_n is None:
-            max_n = parts.agg(F.max(F.size("p"))).first()[0]
-        gate_df = (
-            parts.select(F.col("p")[0].alias("tok"), F.size("p").alias("l"))
-            .filter(F.col("l") <= max_n)
-            .groupBy("tok")
-            .agg(F.sort_array(F.collect_set("l")).alias("ns"))
-        )
-    else:
-        if held is not None:
-            aliases = held["alias_norm"].tolist()
-        else:
-            aliases = [r[0] for r in alias_dict.select("alias_norm").collect()]
-        split = [a.split(" ") for a in aliases]
-        if max_n is None:
-            max_n = max(map(len, split))
-        # per-first-token EXACT alias length set: positions only build
-        # candidates whose length some alias starting with that token
-        # actually has. A token that starts only {2,3}-word aliases
-        # never builds the 1-gram — sequence(1, max_len) would.
-        # Candidate construction is the stage's dominant allocator, so
-        # the exact set cuts both CPU and the allocation pressure that
-        # anti-scales on a shared heap (~1.5x fewer candidate lengths
-        # on the fixture dictionary, more on real ontologies whose
-        # long aliases are rare).
-        for parts_ in split:
-            if len(parts_) <= max_n:
-                ft_lengths.setdefault(parts_[0], set()).add(len(parts_))
-        if not ft_lengths:
-            return spark.createDataFrame([], empty_schema)
-        if len(ft_lengths) > MAX_CASE_GATE_TOKENS:
-            gate_df = spark.createDataFrame(
-                sorted((t, sorted(ls)) for t, ls in ft_lengths.items()),
-                "tok string, ns array<int>",
-            )
-
-    toks = text_spans(documents).selectExpr(
-        "doc_id", "span_idx", "offset", f"{mention_tokens_sql()} AS tokens"
+    dict_df = spark.createDataFrame(
+        alias_dict[["alias_norm", "term_id"]],
+        f"alias_norm string, term_id {term_type}",
     )
+    # per-first-token EXACT alias length set: positions only build
+    # candidates whose length some alias starting with that token
+    # actually has. A token that starts only {2,3}-word aliases never
+    # builds the 1-gram — sequence(1, max_len) would. Candidate
+    # construction is the stage's dominant allocator, so the exact set
+    # cuts both CPU and the allocation pressure that anti-scales on a
+    # shared heap (~1.5x fewer candidate lengths on the fixture
+    # dictionary, more on real ontologies whose long aliases are rare).
+    ft_lengths: dict[str, set[int]] = {}
+    max_n = 1
+    for a in alias_dict["alias_norm"].tolist():
+        parts = a.split(" ")
+        ft_lengths.setdefault(parts[0], set()).add(len(parts))
+        max_n = max(max_n, len(parts))
+    case_gate = len(ft_lengths) <= MAX_CASE_GATE_TOKENS
+
     # Candidate construction is shared by both gates and deliberately
     # lambda-free: posexplode positions, gate them, explode the exact
     # length set, then concat at the TOP level of the projection.
@@ -216,13 +165,7 @@ def detect_mentions(
     zip_expr = "arrays_zip(tokens" + "".join(
         f", slice(tokens, {k + 1}, size(tokens))" for k in range(1, max_n)
     ) + ")"
-    tokpos = toks.selectExpr(
-        "doc_id",
-        "span_idx",
-        "offset",
-        "size(tokens) AS n_toks",
-        f"posexplode({zip_expr}) AS (pos, w)",
-    ).selectExpr(
+    window = [
         "doc_id",
         "span_idx",
         "offset",
@@ -230,14 +173,8 @@ def detect_mentions(
         "pos",
         "w.tokens AS tok",
         *[f"w.`{k}` AS t{k}" for k in range(1, max_n)],
-    )
-    window_cols = ["tok"] + [f"t{k}" for k in range(1, max_n)]
-    ngram_case = "CASE n " + " ".join(
-        f"WHEN {k} THEN "
-        + ("tok" if k == 1 else f"concat_ws(' ', {', '.join(window_cols[:k])})")
-        for k in range(1, max_n + 1)
-    ) + " END"
-    if gate_df is None:
+    ]
+    if case_gate:
         # group first tokens by identical length set: a handful of
         # distinct sets (e.g. {1}, {2,3}, {3,4}) → a short CASE whose
         # IN lists Catalyst compiles to hash-set InSet probes. A token
@@ -246,19 +183,49 @@ def detect_mentions(
         by_set: dict[tuple[int, ...], list[str]] = {}
         for t, ls in ft_lengths.items():
             by_set.setdefault(tuple(sorted(ls)), []).append(t)
-        n_cand = "CASE " + " ".join(
-            f"WHEN tok IN ({', '.join(map(sql_string, sorted(ts)))}) "
-            f"THEN array({', '.join(map(str, ls))})"
-            for ls, ts in sorted(by_set.items())
-        ) + " ELSE NULL END"
-        gated = tokpos.selectExpr("*", f"{n_cand} AS ns").where("ns IS NOT NULL")
+        window.append(
+            "CASE "
+            + " ".join(
+                f"WHEN w.tokens IN ({', '.join(map(sql_string, sorted(ts)))}) "
+                f"THEN array({', '.join(map(str, ls))})"
+                for ls, ts in sorted(by_set.items())
+            )
+            + " ELSE NULL END AS ns"
+        )
+    tokpos = (
+        text_spans(documents)
+        .selectExpr("doc_id", "span_idx", "offset", f"{mention_tokens_sql()} AS tokens")
+        .selectExpr(
+            "doc_id",
+            "span_idx",
+            "offset",
+            "size(tokens) AS n_toks",
+            f"posexplode({zip_expr}) AS (pos, w)",
+        )
+        .selectExpr(*window)
+    )
+    if case_gate:
+        gated = tokpos.where("ns IS NOT NULL")
     else:
-        # inner broadcast join IS the gate: non-starting positions drop
-        gated = tokpos.join(_dict_side(gate_df), "tok")
+        # inner broadcast join IS the gate: non-starting positions drop.
+        # The rows are built right here, so skip pyspark's per-row type
+        # check (~40% of this call at 10⁶ first tokens).
+        gate_df = spark.createDataFrame(
+            sorted((t, sorted(ls)) for t, ls in ft_lengths.items()),
+            "tok string, ns array<int>",
+            verifySchema=False,
+        )
+        gated = tokpos.join(F.broadcast(gate_df), "tok")
     # explode the small exact-length array, then a TOP-LEVEL bound
     # check — no higher-order function, stays in whole-stage codegen.
     # The bound check also guarantees every token the selected CASE
     # branch reads is non-null (nulls only pad past the span's end).
+    window_cols = ["tok"] + [f"t{k}" for k in range(1, max_n)]
+    ngram_case = "CASE n " + " ".join(
+        f"WHEN {k} THEN "
+        + ("tok" if k == 1 else f"concat_ws(' ', {', '.join(window_cols[:k])})")
+        for k in range(1, max_n + 1)
+    ) + " END"
     strung = gated.selectExpr(
         "doc_id",
         "span_idx",
@@ -271,7 +238,7 @@ def detect_mentions(
         "doc_id", "span_idx", "offset", f"{ngram_case} AS ngram"
     )
     out = strung.join(
-        _dict_side(alias_dict), F.expr("ngram = alias_norm")
+        F.broadcast(dict_df), F.expr("ngram = alias_norm")
     ).selectExpr("doc_id", "span_idx", "offset", "alias_norm", "term_id")
     if not distinct:
         # streaming callers and the KG pipeline skip the dedup — a

@@ -46,6 +46,7 @@ from cello_spark import oracle
 from cello_spark.functions.text import _MENTION_FOLD
 from cello_spark.operators.linking import LinkingModel, link_documents, typing_triples
 from cello_spark.operators.mentions import detect_mentions
+from cello_spark.partitioning import ensure_min_partitions
 from cello_spark.plans.pipeline import Pipeline
 from cello_spark.sources.fixtures import Ontology, term_id, QUALIFIER_SUFFIXES
 from cello_spark.sources.ontology import INVERTIBLE_RELS
@@ -200,15 +201,17 @@ def prepare_ontology(
     }
 
 
-def _ensure_parallelism(df: DataFrame, spark: SparkSession, key: str = "doc_id") -> DataFrame:
-    """Small/under-split sources (a handful of tiny parquet files get
-    coalesced into ~1 scan partition by maxPartitionBytes) would make
-    the whole document side serial — spread them keyed by doc_id, which
-    also co-partitions the later features ⋈ mentions semi-join. No-op
-    on a real 100 TB table (file splits already provide parallelism)."""
-    from cello_spark.partitioning import ensure_min_partitions
-
-    return ensure_min_partitions(df, key=key)
+def label_edges(onto: Ontology) -> list[tuple[str, str]]:
+    """The label DAG: (child, parent) is_a edges, patches included,
+    between model labels."""
+    label_set = set(onto.labels)
+    return [
+        (c, p)
+        for c, p, r in pd.concat([onto.edges, onto.patch_edges])[
+            ["src", "dst", "rel"]
+        ].itertuples(index=False)
+        if r == "is_a" and c in label_set and p in label_set
+    ]
 
 
 def make_linking_model(
@@ -216,21 +219,13 @@ def make_linking_model(
     weights_pdf: pd.DataFrame,
     thresholds_pdf: pd.DataFrame,
 ) -> LinkingModel:
-    """LinkingModel wired exactly as the KG pipeline wires it: label
-    DAG restricted to is_a edges between model labels, qualifier set
-    from the fixture suffixes. Shared by the batch pipeline and the
-    streaming incremental path so both link with the same model."""
-    label_set = set(onto.labels)
-    label_edges = [
-        (c, p)
-        for c, p, r in pd.concat([onto.edges, onto.patch_edges])[
-            ["src", "dst", "rel"]
-        ].itertuples(index=False)
-        if r == "is_a" and c in label_set and p in label_set
-    ]
+    """LinkingModel wired exactly as the KG pipeline wires it: the
+    label DAG (label_edges), qualifier set from the fixture suffixes.
+    Shared by the batch pipeline and the streaming incremental path so
+    both link with the same model."""
     qualifiers = {term_id(s) for s in QUALIFIER_SUFFIXES}
     return LinkingModel.from_tables(
-        weights_pdf, thresholds_pdf, label_edges, qualifier_labels=qualifiers
+        weights_pdf, thresholds_pdf, label_edges(onto), qualifier_labels=qualifiers
     )
 
 
@@ -280,8 +275,14 @@ def build_kg_pipeline(
     (detect_mentions), `linked` (link_mentioned: mention gate, then
     scorer) and `triples` (document_triples). Building the pipeline
     runs no Spark job; every job belongs to Pipeline.run."""
-    documents = _ensure_parallelism(documents, spark)
-    features = _ensure_parallelism(features, spark)
+    # small/under-split sources (a handful of tiny parquet files get
+    # coalesced into ~1 scan partition by maxPartitionBytes) would make
+    # the whole document side serial — spread them keyed by doc_id,
+    # which also co-partitions the later features ⋈ mentions semi-join.
+    # No-op on a real 100 TB table (file splits already provide
+    # parallelism).
+    documents = ensure_min_partitions(documents, key="doc_id")
+    features = ensure_min_partitions(features, key="doc_id")
     prep = prepare_ontology(onto, term_prefix=term_prefix)
     model = make_linking_model(onto, weights_pdf, thresholds_pdf)
 
@@ -506,24 +507,18 @@ def canonical_rewrite_triples(
     broadcast joins over the restricted slice, the right plan at that
     size.
 
-    A driver-held pandas `canonical_map` (prepare_ontology's) gives its
-    slice without a Spark job; a Spark one collects the slice's head."""
-    prefixes = _prefix_tuple(term_prefix)
-    if isinstance(canonical_map, pd.DataFrame):
-        held = canonical_map[
-            (canonical_map.node != canonical_map.canonical)
-            & canonical_map.node.str.startswith(prefixes)
-        ][["node", "canonical"]]
-        head = list(held.itertuples(index=False, name=None))
-        if len(head) > MAX_LITERAL_MAP:
-            nonid = raw.sparkSession.createDataFrame(held)
-    else:
-        nonid = canonical_map.filter(
-            (F.col("node") != F.col("canonical")) & _starts_with_any("node", prefixes)
-        )
-        head = [
-            (r.node, r.canonical) for r in nonid.limit(MAX_LITERAL_MAP + 1).collect()
-        ]
+    `canonical_map` is dictionary-sized and lives on the driver: the KG
+    pipeline passes prepare_ontology()["canonical_map"] (a pandas
+    frame), and building the plan from it runs no Spark job. A Spark
+    DataFrame is collected once here (one job) and then takes the same
+    path."""
+    if not isinstance(canonical_map, pd.DataFrame):
+        canonical_map = canonical_map.select("node", "canonical").toPandas()
+    held = canonical_map[
+        (canonical_map.node != canonical_map.canonical)
+        & canonical_map.node.str.startswith(_prefix_tuple(term_prefix))
+    ][["node", "canonical"]]
+    head = list(held.itertuples(index=False, name=None))
     if not head:
         return raw  # identity map: nothing rewrites, nothing merges
 
@@ -539,6 +534,7 @@ def canonical_rewrite_triples(
                     F.try_element_at(lit, F.col("obj")), F.col("obj")
                 ).alias("obj"),
             )
+        nonid = df.sparkSession.createDataFrame(held)
         subj_map = F.broadcast(
             nonid.select(
                 F.col("node").alias("subj"), F.col("canonical").alias("subj_c")

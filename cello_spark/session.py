@@ -500,24 +500,3 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
                 zf.write(full, rel)
     return zpath
 
-
-def ship_package(spark: SparkSession) -> None:
-    """Make `cello_spark` importable inside executor Python workers —
-    the spark-submit --py-files pattern, done programmatically so any
-    driver script (even one launched outside the repo) works. Zips the
-    package once per session and addPyFile()s it; harmless no-op when
-    already shipped."""
-    sc = spark.sparkContext
-    if sc._jsc is None:  # stopped session
-        return
-    marker = "_cello_spark_shipped"
-    if getattr(sc, marker, False):
-        return
-    sc.addPyFile(build_pyfiles_zip())
-    setattr(sc, marker, True)
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -160,10 +160,6 @@ ONTOLOGY_CONFIGS: dict[str, OntologyConfig] = {
 }
 
 
-def register_ontology_config(cfg: OntologyConfig) -> None:
-    ONTOLOGY_CONFIGS[cfg.config_id] = cfg
-
-
 def get_ontology_config(config_id: str) -> OntologyConfig:
     return ONTOLOGY_CONFIGS[config_id]
 

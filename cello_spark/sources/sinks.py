@@ -76,10 +76,6 @@ def write_bucketed(
     )
 
 
-def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def table_file_stats(path: str) -> dict:
     """Small-file detector: file count / byte totals for a parquet
     directory tree (driver-side listing, metadata only — no Spark

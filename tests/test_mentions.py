@@ -213,25 +213,9 @@ def test_punctuated_alias_matches_via_prepare_ontology(spark, onto):
     assert ("dx", tid, "t-cell alpha") in got
 
 
-def test_large_dict_no_driver_collect_parity(spark, onto, small_world):
-    """Forcing the over-threshold path (dict_collect_threshold=0) must
-    yield mentions identical to the collect path on the same
-    dictionary."""
-    docs = spark.createDataFrame(small_world["documents"])
-    terms = spark.createDataFrame(onto.terms)
-    adict = alias_dictionary(terms)
-    want = {tuple(r) for r in detect_mentions(docs, adict).collect()}
-    assert want
-    got = {
-        tuple(r)
-        for r in detect_mentions(docs, adict, dict_collect_threshold=0).collect()
-    }
-    assert got == want
-
-
 def test_million_alias_dictionary_smoke(spark):
-    """10⁶-row dictionary through the aggregation-only metadata path:
-    no driver collect of the dictionary, planted aliases found."""
+    """10⁶-row Spark dictionary: collected once, 10⁶ first tokens take
+    the join gate, planted aliases found."""
     from pyspark.sql import functions as F
 
     adict = spark.range(1_000_000).select(
@@ -254,7 +238,7 @@ def test_million_alias_dictionary_smoke(spark):
         ),
     ]
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    m = detect_mentions(docs, adict, dict_collect_threshold=500_000)
+    m = detect_mentions(docs, adict)
     got = {r.term_id for r in m.collect()}
     assert got == {"T:31337", "T:999999"}
 
@@ -262,24 +246,31 @@ def test_million_alias_dictionary_smoke(spark):
 def test_pandas_dictionary_matches_spark_dictionary(spark, onto, small_world, monkeypatch):
     """The driver-held pandas dictionary (prepare_ontology's) gives the
     rows of the same dictionary as a Spark DataFrame, through the CASE/IN
-    gate and through the join gate, and planning with it runs no job."""
+    gate and through the join gate. Planning with the Spark dictionary
+    runs exactly one job (its collect), with the pandas one none."""
     from cello_spark.plans.kg import prepare_ontology
 
     docs = spark.createDataFrame(small_world["documents"])
     pdf = prepare_ontology(onto)["alias_dict"]
     sdf = spark.createDataFrame(pdf)
     sc = spark.sparkContext
-    for max_case in (mentions.MAX_CASE_GATE_TOKENS, 0):
-        monkeypatch.setattr(mentions, "MAX_CASE_GATE_TOKENS", max_case)
-        want = sorted(map(tuple, detect_mentions(docs, sdf).collect()))
-        group = f"pandas_dictionary_plan_{max_case}"
+
+    def plan_jobs(d, group):
         sc.setJobGroup(group, "plan only")
         try:
-            got = detect_mentions(docs, pdf)
+            m = detect_mentions(docs, d)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], max_case
+        return m, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for max_case in (mentions.MAX_CASE_GATE_TOKENS, 0):
+        monkeypatch.setattr(mentions, "MAX_CASE_GATE_TOKENS", max_case)
+        want, n_jobs = plan_jobs(sdf, f"spark_dictionary_plan_{max_case}")
+        assert n_jobs == 1, max_case
+        want = sorted(map(tuple, want.collect()))
+        got, n_jobs = plan_jobs(pdf, f"pandas_dictionary_plan_{max_case}")
+        assert n_jobs == 0, max_case
         plan = got._jdf.queryExecution().optimizedPlan().toString()
         assert ("INSET" in plan or " IN (" in plan) == (max_case > 0), max_case
         assert want and sorted(map(tuple, got.collect())) == want, max_case

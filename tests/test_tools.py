@@ -1,7 +1,8 @@
 """The command-line scripts in `tools/` and `bench.py` are not imported
 by the suite, so nothing else notices when one stops compiling, imports
-a module that is gone, or when a doc still names a deleted script.
-These checks are static (no Spark, no subprocess)."""
+a module that is gone, or when a doc still names a deleted script; and
+nothing notices a library function that no caller is left for. These
+checks are static (no Spark, no subprocess)."""
 
 import ast
 import glob
@@ -29,6 +30,20 @@ REFERENCE_CHECKOUT = "/root/reference"
 # it is a history and cites retired scripts on purpose.
 REFERRERS = PROGRAM_FILES + [
     os.path.join(REPO, p) for p in ("README.md", ".claude/skills/verify/SKILL.md")
+]
+# markdown that documents the program as it is. The change logs, the
+# roadmap, the reviews and the bench history are left out: they name
+# deleted code on purpose.
+DOCS = [
+    os.path.join(REPO, p)
+    for p in (
+        "README.md",
+        "SURVEY.md",
+        "FIXTURES.md",
+        "TESTDATA.md",
+        "perfbench/README.md",
+        ".claude/skills/verify/SKILL.md",
+    )
 ]
 
 
@@ -156,3 +171,50 @@ def test_no_code_reads_the_reference_checkout():
             ):
                 found.append(f"{_rel(path)}:{node.lineno}")
     assert not found, f"string constants naming {REFERENCE_CHECKOUT}:\n" + "\n".join(found)
+
+
+def _repo_python():
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "__pycache__"]
+        yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def test_every_top_level_name_is_used():
+    """Every top-level function and UPPER_CASE constant of cello_spark/
+    and tools/ is named somewhere outside its own definition: in the
+    repo's Python (tests, perfbench/ and its own module included) or in
+    DOCS. A name nothing mentions has no caller left and is deleted, not
+    kept. Dunder names are exempt; module entries (tools' and
+    worker_daemon's `main`) count through their own `__main__` guard."""
+    where: dict[str, list[tuple[str, int]]] = {}
+    for path in list(_repo_python()) + DOCS:
+        for i, line in enumerate(open(path, encoding="utf-8"), 1):
+            for word in set(re.findall(r"\w+", line)):
+                where.setdefault(word, []).append((path, i))
+    library = sorted(
+        glob.glob(os.path.join(REPO, "cello_spark", "**", "*.py"), recursive=True)
+    ) + sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    unused = []
+    for path in library:
+        for node in ast.parse(open(path).read(), path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [
+                    n.id
+                    for t in targets
+                    for n in ast.walk(t)
+                    if isinstance(n, ast.Name) and re.fullmatch(r"_?[A-Z][A-Z0-9_]*", n.id)
+                ]
+            else:
+                continue
+            for name in names:
+                if name.startswith("__") and name.endswith("__"):
+                    continue
+                if not any(
+                    f != path or not node.lineno <= i <= node.end_lineno
+                    for f, i in where.get(name, [])
+                ):
+                    unused.append(f"{_rel(path)}:{node.lineno} {name}")
+    assert not unused, "top-level names nothing else mentions:\n" + "\n".join(unused)

@@ -180,10 +180,8 @@ def main() -> None:
     scale = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     from cello_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="bench_dedup_scale",
-        cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-    )
+    # cores: SPARK_GRAFT_CPUS, else every local core (get_spark)
+    spark = get_spark(app_name="bench_dedup_scale")
     base_pdf = spark.read.parquet(
         os.path.join(SF_DIR, "documents.parquet")
     ).toPandas()

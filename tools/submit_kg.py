@@ -27,7 +27,7 @@ import time
 from pyspark.sql import SparkSession
 
 from cello_spark import oracle
-from cello_spark.plans.kg import build_kg_pipeline
+from cello_spark.plans.kg import build_kg_pipeline, label_edges
 from cello_spark.sources.fixtures import (
     make_documents,
     make_model_weights,
@@ -37,8 +37,6 @@ from cello_spark.sources.fixtures import (
 
 
 def main() -> int:
-    import pandas as pd
-
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
     workdir = sys.argv[2] if len(sys.argv) > 2 else None
     cleanup = workdir is None
@@ -52,13 +50,6 @@ def main() -> int:
     docs, feats, _truth = make_documents(onto, n_docs=n_docs)
     weights = make_model_weights(onto)
     thresholds = make_thresholds(onto)
-    lab = set(onto.labels)
-    all_edges = pd.concat([onto.edges, onto.patch_edges])
-    label_edges = [
-        (c, p)
-        for c, p, r in all_edges[["src", "dst", "rel"]].itertuples(index=False)
-        if r == "is_a" and c in lab and p in lab
-    ]
 
     try:
         pipe = build_kg_pipeline(
@@ -75,7 +66,7 @@ def main() -> int:
         got = pipe.output("triples").toPandas()
         wall = time.monotonic() - t0
         world = {"features": feats, "weights": weights, "thresholds": thresholds}
-        want = oracle.golden_fixture_triples(onto, world, label_edges)
+        want = oracle.golden_fixture_triples(onto, world, label_edges(onto))
         p, r = oracle.precision_recall(got, want)
     finally:
         if cleanup:
